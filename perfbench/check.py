@@ -1,14 +1,16 @@
 """Output checks against the cleanroom replay (a second implementation of
-the reference diff semantics that shares no code with the engine).
+the reference diff semantics and feature batteries that shares no code
+with the engine).
 
 The engine's materialized tables are read back with pyarrow, so checking
 costs no Spark job.  Two checks:
 
-* ``triples_digest`` - count and order-independent digest of the change
-  triples (``pipeline.triples`` semantics) of a written ``value_change``
-  table; every run's digest must equal the cleanroom replay's.
-* ``sample_mismatches`` - for a seeded sample of pages, every change table's
-  rows and the entity stats, compared field by field with the cleanroom's.
+* ``run_mismatches`` - every call: count and order-independent digest of
+  the change triples (``pipeline.triples`` semantics) of ``value_change``,
+  and the row count of every other table written.
+* ``sample_mismatches`` - once per process: ``value_change`` and
+  ``entity_stats`` rows of a seeded sample of pages, and every row of the
+  feature tables written, compared field by field with the cleanroom's.
 """
 
 from __future__ import annotations
@@ -22,10 +24,12 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
+from cleanroom import features as CF
 from cleanroom import replay_corpus
+from widiff_spark.canonical import WD_ENTITY_TYPES, WD_STRING_TYPES
+from widiff_spark.features import (GLOBE_FEATURE_COLS, QUANTITY_FEATURE_COLS,
+                                   TEXT_FEATURE_COLS, TIME_FEATURE_COLS)
 
-CHANGE_TABLES = ("revision", "value_change", "qualifier_change",
-                 "reference_change", "datatype_metadata_change")
 STAT_FIELDS = (
     "entity_id", "num_revisions", "num_value_changes",
     "num_value_change_creates", "num_value_change_deletes",
@@ -34,6 +38,20 @@ STAT_FIELDS = (
     "first_revision_timestamp", "last_revision_timestamp", "num_bot_edits",
     "num_anonymous_edits", "num_human_edits", "num_reverted_edits",
     "num_reversions")
+# feature table -> (datatypes routed to it, cleanroom battery, its columns)
+FEATURE_TABLES = {
+    "features_text": (tuple(WD_STRING_TYPES),
+                      lambda o, n: CF.text_features("text", o, n),
+                      TEXT_FEATURE_COLS),
+    "features_time": (("time",), CF.time_features, TIME_FEATURE_COLS),
+    "features_quantity": (("quantity",), CF.quantity_features,
+                          QUANTITY_FEATURE_COLS),
+    "features_globecoordinate": (("globecoordinate",), CF.globe_features,
+                                 GLOBE_FEATURE_COLS),
+    "features_entity": (tuple(WD_ENTITY_TYPES), None, []),
+}
+FEATURE_KEY = ("revision_id", "property_id", "value_id", "old_value",
+               "new_value")
 
 
 def _norm(v):
@@ -70,6 +88,13 @@ class Reference:
             for r in vc if r["change_target"] == ""])
         self.n_revisions = len(self.replay["revision"])
         self.n_pages = len(self.replay["entity_stats"])
+        # the feature-row predicate (features._update_rows), per table
+        upd = [r for r in vc if r["change_target"] == ""
+               and r["action"] == "UPDATE"
+               and r["new_datatype"] == r["old_datatype"]]
+        self.feature_rows = {
+            table: [r for r in upd if r["new_datatype"] in types]
+            for table, (types, _fn, _cols) in FEATURE_TABLES.items()}
 
 
 def read_table(out_dir: str, table: str, columns=None):
@@ -89,20 +114,20 @@ def triples_digest(out_dir: str) -> tuple[int, str]:
 
 def run_mismatches(out_dir: str, ref: Reference,
                    tables: list[str]) -> list[str]:
-    """Per-run check: triples, and the revision and page counts of the
-    tables written."""
+    """Per-call check: the triples, and the row count of every other
+    table written (``value_change`` is always written)."""
     errors = []
     got = triples_digest(out_dir)
     if got != ref.triples:
         errors.append(f"triples {got} != cleanroom {ref.triples}")
-    if "revision" in tables:
-        n = read_table(out_dir, "revision", ["revision_id"]).num_rows
-        if n != ref.n_revisions:
-            errors.append(f"revisions {n} != cleanroom {ref.n_revisions}")
-    if "entity_stats" in tables:
-        n = read_table(out_dir, "entity_stats", ["entity_id"]).num_rows
-        if n != ref.n_pages:
-            errors.append(f"pages {n} != cleanroom {ref.n_pages}")
+    want = {"entity_stats": ref.n_pages,
+            **{t: len(rows) for t, rows in ref.feature_rows.items()}}
+    for table in tables:
+        if table in want:
+            key = "revision_id" if table in FEATURE_TABLES else "entity_id"
+            n = read_table(out_dir, table, [key]).num_rows
+            if n != want[table]:
+                errors.append(f"{table}: {n} rows != cleanroom {want[table]}")
     return errors
 
 
@@ -114,29 +139,43 @@ def _canon(rows, fields) -> list[tuple]:
 def sample_mismatches(out_dir: str, ref: Reference, tables: list[str],
                       seed: int, n_pages: int,
                       always: tuple[int, ...] = ()) -> list[str]:
-    """Compare the written change tables and the entity stats for a seeded
-    sample of pages (plus the ``always`` entity ids) with the cleanroom
-    replay."""
+    """Compare ``value_change`` and (if written) ``entity_stats`` for a
+    seeded sample of pages plus the ``always`` entity ids, and every row of
+    the feature tables written, with the cleanroom replay."""
     pages = sorted({s["entity_id"] for s in ref.replay["entity_stats"]})
     rng = random.Random(seed)
     sample = set(rng.sample(pages, min(n_pages, len(pages)))) | set(always)
     errors = []
-    for table in (t for t in CHANGE_TABLES if t in tables):
-        got_t = read_table(out_dir, table)
-        got_t = got_t.filter(pc.is_in(
-            got_t["entity_id"], value_set=pa.array(sorted(sample), "int64")))
-        got = got_t.to_pylist()
-        want = [r for r in ref.replay[table] if r["entity_id"] in sample]
-        fields = sorted(set(got_t.column_names)
-                        & set().union(*(r.keys() for r in want)))
+
+    vc = read_table(out_dir, "value_change")
+    vc = vc.filter(pc.is_in(vc["entity_id"],
+                            value_set=pa.array(sorted(sample), "int64")))
+    got = vc.to_pylist()
+    want = [r for r in ref.replay["value_change"] if r["entity_id"] in sample]
+    fields = sorted(set(vc.column_names)
+                    & set().union(*(r.keys() for r in want)))
+    if _canon(got, fields) != _canon(want, fields):
+        errors.append(f"value_change: {len(got)} engine rows vs {len(want)} "
+                      f"cleanroom rows differ on sampled pages")
+
+    if "entity_stats" in tables:
+        stats = read_table(out_dir, "entity_stats",
+                           list(STAT_FIELDS)).to_pylist()
+        got = [s for s in stats if s["entity_id"] in sample]
+        want = [s for s in ref.replay["entity_stats"]
+                if s["entity_id"] in sample]
+        if _canon(got, STAT_FIELDS) != _canon(want, STAT_FIELDS):
+            errors.append("entity_stats differ on sampled pages")
+
+    for table, (_types, battery, cols) in FEATURE_TABLES.items():
+        if table not in tables:
+            continue
+        fields = FEATURE_KEY + tuple(cols)
+        got = read_table(out_dir, table, list(fields)).to_pylist()
+        want = [{**r, **dict(zip(cols, battery(r["old_value"],
+                                               r["new_value"])))}
+                if battery else r for r in ref.feature_rows[table]]
         if _canon(got, fields) != _canon(want, fields):
             errors.append(f"{table}: {len(got)} engine rows vs {len(want)} "
-                          f"cleanroom rows differ on sampled pages")
-    if "entity_stats" not in tables:
-        return errors
-    stats = read_table(out_dir, "entity_stats", list(STAT_FIELDS)).to_pylist()
-    got = [s for s in stats if s["entity_id"] in sample]
-    want = [s for s in ref.replay["entity_stats"] if s["entity_id"] in sample]
-    if _canon(got, STAT_FIELDS) != _canon(want, STAT_FIELDS):
-        errors.append("entity_stats differ on sampled pages")
+                          f"cleanroom rows differ")
     return errors

@@ -84,9 +84,9 @@ def _force(df, tracker: list):
 def traced_call(spark, docs, output_path: str, tables: list[str],
                 tracer: Tracer) -> dict:
     """``run_incremental`` (with ``run_pipeline`` inlined) under spans,
-    writing ``tables`` (enriched tables: entity_stats or change tables).
-    The per-entity diff timing sums are read between spans, so their job
-    counts toward ``run`` self time, not toward a layer.
+    writing ``tables`` (enriched tables and feature tables).
+    The per-entity diff timing sums and the feature pair counts are read
+    after the last span, outside every job group.
     Returns the row counts observed at the layer boundaries."""
     config = pipeline.DEFAULT_CONFIG
     held: list = []
@@ -159,23 +159,22 @@ def traced_call(spark, docs, output_path: str, tables: list[str],
                 out[name] = t
             n = 0
             for name in tables:
-                out[name], c = _force(out[name], held)
-                n += c
+                if name in out:
+                    out[name], c = _force(out[name], held)
+                    n += c
         counts["enrich_rows_out"] = n
-        # the diff's own timing fields, summed over the per-entity stats
-        row = out["entity_stats"].agg(
-            F.sum("total_revision_diff_time_sec").alias("d"),
-            F.sum("total_process_time_sec").alias("p")).collect()[0]
-        counts["interior_diff_s"] = float(row["d"] or 0.0)
-        counts["interior_process_s"] = float(row["p"] or 0.0)
 
-        # lazy plans only: run_incremental never evaluates the tables it
-        # does not write, so neither does the traced call
+        # tables that are not written stay lazy plans: run_incremental
+        # never evaluates them, so neither does the traced call
         with tracer.span("parse.quarantine", "parse"):
             out["quarantine"] = parse.quarantine(parsed)
         if config.extract_features:
             with tracer.span("features.feature_tables", "features"):
-                out.update(features.feature_tables(out["value_change"]))
+                feats = features.feature_tables(out["value_change"])
+                for name in feats:
+                    if name in tables:
+                        feats[name], _ = _force(feats[name], held)
+            out.update(feats)
 
         with tracer.span("materialize.write_table", "materialize"):
             for name in tables:
@@ -186,9 +185,31 @@ def traced_call(spark, docs, output_path: str, tables: list[str],
             lineage = checkpoint.lineage_from_unified(unified)
             checkpoint.record(spark, output_path, docs, lineage, "traced",
                               buckets=todo)
-        for df in held:
-            df.unpersist()
+
+    # measurements outside every span and job group
+    row = out["entity_stats"].agg(
+        F.sum("total_revision_diff_time_sec").alias("d"),
+        F.sum("total_process_time_sec").alias("p")).collect()[0]
+    counts["interior_diff_s"] = float(row["d"] or 0.0)
+    counts["interior_process_s"] = float(row["p"] or 0.0)
+    counts.update(feature_pairs(out["value_change"]))
+    for df in held:
+        df.unpersist()
     return counts
+
+
+def feature_pairs(value_change) -> dict:
+    """UPDATE rows the feature batteries score (``features._update_rows``
+    routed to the text, time, quantity and globecoordinate families) and
+    the distinct (family, old, new) pairs the batteries actually run on."""
+    family = F.when(F.col("new_datatype").isin(features.WD_STRING_TYPES),
+                    "text").otherwise(F.col("new_datatype"))
+    rows = features._update_rows(value_change).select(
+        family.alias("family"), "old_value", "new_value") \
+        .filter(F.col("family").isin("text", "time", "quantity",
+                                     "globecoordinate"))
+    return {"feature_update_rows": rows.count(),
+            "feature_distinct_pairs": rows.distinct().count()}
 
 
 # --------------------------------------------------------------------------- #
@@ -201,24 +222,26 @@ def _get(sc, path: str):
         return json.load(r)
 
 
-def group_metrics(sc, prefix: str, n_jobs_expected: int | None = None
-                  ) -> dict[str, dict]:
+# the stage metrics of a job group that ran no job
+EMPTY_GROUP = {"jobs": 0, "stages": 0, "run_s": 0.0, "cpu_s": 0.0,
+               "gc_s": 0.0, "shuffle_write_mb": 0.0, "spill_mb": 0.0,
+               "input_records": 0, "task_s": ()}
+
+
+def group_metrics(sc, prefix: str) -> dict[str, dict]:
     """Stage metrics summed per job group whose name starts with ``prefix``
     (the part after the prefix names the group in the result)."""
     for _ in range(40):   # the listener bus updates the store asynchronously
         jobs = [j for j in _get(sc, "jobs")
                 if (j.get("jobGroup") or "").startswith(prefix)]
-        if all(j["status"] != "RUNNING" for j in jobs) and \
-                (n_jobs_expected is None or len(jobs) >= n_jobs_expected):
+        if all(j["status"] != "RUNNING" for j in jobs):
             break
         time.sleep(0.25)
     stages = {(s["stageId"], s["attemptId"]): s for s in _get(sc, "stages")}
     out: dict[str, dict] = {}
     for j in jobs:
-        g = out.setdefault(j["jobGroup"][len(prefix):], {
-            "jobs": 0, "stages": 0, "run_s": 0.0, "cpu_s": 0.0,
-            "gc_s": 0.0, "shuffle_write_mb": 0.0, "spill_mb": 0.0,
-            "input_records": 0, "task_s": []})
+        g = out.setdefault(j["jobGroup"][len(prefix):],
+                           {**EMPTY_GROUP, "task_s": []})
         g["jobs"] += 1
         for (sid, att), s in stages.items():
             if sid not in j["stageIds"] or s["status"] != "COMPLETE":

@@ -5,11 +5,17 @@ JVM it launches and the JVM's Python workers.  A background thread samples
 the summed RSS every ``interval`` seconds and keeps the peak since the last
 ``reset_peak``.  CPU time is read on demand: the live tree's utime+stime
 plus what its already-reaped children accumulated.
+
+``become_subreaper``, ``die_with_parent`` and ``kill_and_reap`` let the
+supervising process end every process a run started, however it ends.
 """
 
 from __future__ import annotations
 
+import ctypes
 import os
+import signal
+import subprocess
 import threading
 import time
 
@@ -53,6 +59,42 @@ def wait_gone(pids: list[int], timeout: float) -> list[int]:
         alive = [p for p in alive if os.path.exists(f"/proc/{p}")
                  and (_stat_fields(p) or ["Z"])[0] != "Z"]
     return alive
+
+
+def become_subreaper() -> None:
+    """Have orphaned descendants re-parented to this process, not to init,
+    so that they stay in ``tree(os.getpid())`` and are reaped here."""
+    libc = ctypes.CDLL(None, use_errno=True)
+    pr_set_child_subreaper = 36
+    if libc.prctl(pr_set_child_subreaper, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER)")
+
+
+def die_with_parent() -> None:
+    """In a child before exec: SIGKILL it when its parent dies."""
+    libc = ctypes.CDLL(None, use_errno=True)
+    pr_set_pdeathsig = 1
+    libc.prctl(pr_set_pdeathsig, signal.SIGKILL, 0, 0, 0)
+
+
+def kill_and_reap(child: subprocess.Popen) -> None:
+    """SIGKILL ``child`` and every live descendant of this process, and
+    wait until all of them have ended and been reaped."""
+    def kill_descendants():
+        for pid in tree(os.getpid())[1:]:
+            try:
+                os.kill(pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+
+    kill_descendants()
+    child.wait()
+    while True:     # orphans are re-parented here as their parents die
+        kill_descendants()
+        try:
+            os.waitpid(-1, 0)
+        except ChildProcessError:
+            return
 
 
 def tree_rss_bytes(root: int) -> int:

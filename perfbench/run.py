@@ -2,7 +2,7 @@
 
 Usage (from the root of a checkout):
 
-    python3 perfbench/run.py --workload bulk_build --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload bulk_build --seed 1 --seconds 10 --trace 0
 
 Workloads:
 
@@ -12,21 +12,29 @@ Workloads:
   revisions than the skew threshold, so ``choose_mode`` picks the salted
   diff.
 
-Both call ``pipeline.run_incremental(mode="auto")`` and write ``TABLES``.
-One process: start a pinned local Spark session, generate the inputs three
-times, replay the input through the cleanroom implementation as the
-reference, run a discarded warm-up (``run_pipeline`` over a tiny input,
-forced through the diff), then time ``run_incremental`` calls while the
-next one is expected to end within ``--seconds`` (at least one).
-``setup_s`` is session start + median input generation + warm-up.
-Before every call the cache is cleared (blocking), the output directory
-deleted and garbage collected; after it the written tables are checked
-against the cleanroom replay.
+Both call ``pipeline.run_incremental(mode="auto")`` and write the
+workload's ``TABLES``.  One process: start a pinned local Spark session,
+generate the input, run a discarded warm-up (``run_pipeline`` in grouped
+mode over a small input, evaluating the written tables), then replay the
+input through the cleanroom implementation as the reference and time
+``run_incremental`` calls while the next one is expected to end within
+``--seconds`` (at least one).  ``setup_s`` is session start + input
+generation + warm-up.  Before every call, outside its timed window, the
+cache is cleared (blocking), the output directory deleted and garbage
+collected; after it the written tables are checked against the cleanroom
+replay.
 
 ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` makes an
-untraced, a traced (``layers.traced_call``) and another untraced call and
-prints the per-layer metrics.  The last stdout line is one JSON object:
+untraced and then a traced (``layers.traced_call``) call and prints the
+per-layer metrics.  The last stdout line is one JSON object:
 ``{"correct", "attempted", "failed", "metrics": {name: {"value", "unit"}}}``.
+
+The command runs the benchmark in a child process and waits at most
+``DEADLINE_S`` for it.  Whichever way the child ends (normal exit,
+failure, deadline, or a signal to this process), every process it started
+is killed and reaped before this process exits: this process is a child
+subreaper, so the JVM and its Python workers stay its descendants even if
+the child dies first.  The child is killed if this process dies.
 """
 
 from __future__ import annotations
@@ -37,7 +45,9 @@ import json
 import os
 import shlex
 import shutil
+import signal
 import statistics
+import subprocess
 import sys
 import time
 import traceback
@@ -45,17 +55,30 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-# Every call writes the change-triple table (with its revert flags).  Each
-# further table adds ~2.5 s of per-call fixed cost (PK dedup plus a
-# 64-bucket partitioned write) that the run budget has no room for.
-TABLES = ["value_change"]
+# A run must end within 180 s.  Past this many seconds the child and all
+# its descendants are killed, so no JVM or Python worker outlives a run.
+DEADLINE_S = 165
+# set in the child's environment: the work directory the supervisor owns
+WORK_ENV = "PERFBENCH_WORK"
+
+# Tables each call writes.  bulk_build writes the change-triple table, the
+# per-entity stats (with cohorts) and the two largest feature tables (text
+# and quantity), so enrich and features do executor work; hot_page writes
+# the triples only, so the salted diff sets its time.  Every further table
+# adds ~1-2 s of fixed cost to each call and to the warm-up (PK dedup plus
+# a 64-bucket partitioned write) that the run budget has no room for.
+TABLES = {
+    "bulk_build": ["value_change", "entity_stats", "features_text",
+                   "features_quantity"],
+    "hot_page": ["value_change"],
+}
 
 # docs: background documents; hot: revisions on the hot page; warm_docs:
 # the discarded warm-up input; threshold: WIDIFF_SKEW_THRESHOLD
 SIZES = {
     "full": {
         "bulk_build": dict(docs=500, hot=0, warm_docs=20),
-        "hot_page": dict(docs=30, hot=300, warm_docs=20),
+        "hot_page": dict(docs=10, hot=210, warm_docs=20),
         "threshold": 200, "sample_pages": 25,
     },
     "tiny": {
@@ -64,7 +87,6 @@ SIZES = {
         "threshold": 40, "sample_pages": 5,
     },
 }
-SETUP_REPEATS = 3
 
 
 def _settings(size: str) -> dict:
@@ -103,12 +125,12 @@ def _prepare_env(work: str, settings: dict) -> None:
     sys.path.insert(0, ROOT)
 
 
-def _inputs(spec: dict, seed: int):
+def _inputs(seed: int, docs: int, hot: int):
     import pandas as pd
     import gen
-    frames = [gen.bulk_rows(seed, spec["docs"])]
-    if spec["hot"]:
-        frames.append(gen.hot_rows(seed, spec["hot"]))
+    frames = [gen.bulk_rows(seed, docs)]
+    if hot:
+        frames.append(gen.hot_rows(seed, hot))
     return pd.concat(frames, ignore_index=True)
 
 
@@ -118,6 +140,7 @@ class Bench:
         self.work = work
         self.settings = settings
         self.spec = SIZES[args.size][args.workload]
+        self.tables = TABLES[args.workload]
         self.spark = None
         self.errors: list[str] = []
         self.attempted = 0
@@ -134,38 +157,35 @@ class Bench:
             shuffle_partitions=self.settings["shuffle_partitions"],
             driver_memory=self.settings["driver_memory"])
         self.spark.sparkContext.setLogLevel("ERROR")
-        session_s = time.perf_counter() - t0
+        t1 = time.perf_counter()
 
-        gen_s = []
-        for k in range(SETUP_REPEATS):
-            t0 = time.perf_counter()
-            rows = _inputs(self.spec, self.args.seed)
-            gen.write_parquet(rows, os.path.join(self.work, f"input-{k}"),
-                              self.settings["cores"] * 2)
-            gen_s.append(time.perf_counter() - t0)
-        for k in range(1, SETUP_REPEATS):
-            shutil.rmtree(os.path.join(self.work, f"input-{k}"))
-        self.rows = rows
-        self.docs = self.spark.read.parquet(os.path.join(self.work, "input-0"))
+        spec, n_files = self.spec, self.settings["cores"] * 2
+        self.rows = _inputs(self.args.seed, spec["docs"], spec["hot"])
+        gen.write_parquet(self.rows, os.path.join(self.work, "input"), n_files)
+        self.docs = self.spark.read.parquet(os.path.join(self.work, "input"))
+        t2 = time.perf_counter()
 
-        # warm-up: run_pipeline over a tiny balanced input (another seed),
-        # forced through the diff.  It starts the Python workers and
-        # compiles the shared paths; a full run_incremental warm-up would
-        # not fit the run budget, since most of a call's cost is fixed cost
-        # that recurs on every call.
-        t0 = time.perf_counter()
-        warm = gen.bulk_rows(self.args.seed + 7919, self.spec["warm_docs"])
-        gen.write_parquet(warm, os.path.join(self.work, "warm"),
-                          self.settings["cores"] * 2)
+        # warm-up: run_pipeline over a small balanced input (another seed),
+        # evaluating the tables the calls write; it starts the Python
+        # workers and compiles the shared paths.  It runs grouped on both
+        # workloads, so hot_page's timed call keeps the salted path's first
+        # use.  A salted warm-up added ~20 s to every run and, on four
+        # seeds, spread hot_page's wall time wider (25-33 s, against
+        # 31-36 s); a full run_incremental warm-up added ~10 s.
+        warm = _inputs(self.args.seed + 7919, spec["warm_docs"], 0)
+        gen.write_parquet(warm, os.path.join(self.work, "warm"), n_files)
         from widiff_spark import pipeline
         res = pipeline.run_pipeline(
             self.spark,
             self.spark.read.parquet(os.path.join(self.work, "warm")),
-            mode="auto")
-        res.unified.count()
+            mode="grouped")
+        for name in self.tables:
+            res.tables[name].count()
         res.unpersist()
-        warm_s = time.perf_counter() - t0
-        return session_s + statistics.median(gen_s) + warm_s
+        t3 = time.perf_counter()
+        print(f"setup: session_s={t1 - t0:.2f} input_s={t2 - t1:.2f} "
+              f"warmup_s={t3 - t2:.2f}")
+        return t3 - t0
 
     # -- one run_incremental call ---------------------------------------
     def clean_slate(self) -> None:
@@ -186,35 +206,36 @@ class Bench:
     def out(self) -> str:
         return os.path.join(self.work, "out")
 
-    def call(self, docs, group: str | None = None) -> dict:
+    def call(self, group: str | None = None) -> dict:
         from widiff_spark import pipeline
-        self.clean_slate()
         sc = self.spark.sparkContext
         if group:
             sc.setJobGroup(group, "run_incremental")
         try:
             return pipeline.run_incremental(
-                self.spark, docs, self.out,
-                tables=TABLES, mode="auto")
+                self.spark, self.docs, self.out,
+                tables=self.tables, mode="auto")
         finally:
             if group:
                 sc._jsc.clearJobGroup()
 
     def checked(self, fn) -> float | None:
-        """Run one timed call; a raise or a failed output check counts as
-        failed.  Returns the call's wall seconds, or None if it failed."""
+        """Clear the slate, then run one timed call; a raise or a failed
+        output check counts as failed.  Returns the call's wall seconds,
+        or None if it failed."""
         import check
         import gen
         self.attempted += 1
         try:
+            self.clean_slate()
             t0 = time.perf_counter()
             fn()
             wall = time.perf_counter() - t0
-            errs = check.run_mismatches(self.out, self.ref, TABLES)
+            errs = check.run_mismatches(self.out, self.ref, self.tables)
             if self.attempted == 1:
                 hot = (gen.HOT_DOC_ID + 10000,) if self.spec["hot"] else ()
                 errs += check.sample_mismatches(
-                    self.out, self.ref, TABLES, self.args.seed,
+                    self.out, self.ref, self.tables, self.args.seed,
                     SIZES[self.args.size]["sample_pages"], always=hot)
         except Exception:
             wall, errs = None, [traceback.format_exc(limit=3)]
@@ -231,7 +252,7 @@ class Bench:
         t_start = time.perf_counter()
         while True:
             t0 = time.perf_counter()
-            wall = self.checked(lambda: self.call(self.docs))
+            wall = self.checked(self.call)
             if wall is not None:
                 walls.append(wall)
             # start another call only if it should end inside the window
@@ -252,7 +273,6 @@ class Bench:
         }
 
     def traced(self) -> dict:
-        import check
         import layers
         import procmon
         spark, sc = self.spark, self.spark.sparkContext
@@ -261,32 +281,17 @@ class Bench:
 
         gc0, cpu0 = layers.jvm_gc_seconds(spark), procmon.tree_cpu_seconds(
             os.getpid())
-        untraced = self.checked(lambda: self.call(self.docs, untraced_group))
+        untraced = self.checked(lambda: self.call(untraced_group))
         gc_s = layers.jvm_gc_seconds(spark) - gc0
         cpu_s = procmon.tree_cpu_seconds(os.getpid()) - cpu0
         cached_after = layers.cached_mb(sc)
 
-        holder = {}
-
-        def traced_call():
-            self.clean_slate()
-            holder.update(layers.traced_call(
-                spark, self.docs, self.out, TABLES, tracer))
-        traced = self.checked(traced_call)
+        counts = {}
+        traced = self.checked(lambda: counts.update(layers.traced_call(
+            spark, self.docs, self.out, self.tables, tracer)))
         if untraced is None or traced is None:
             return {}
-        counts = holder
-        # read the traced call's output before the next call replaces it
-        vc = check.read_table(self.out, "value_change", [
-            "change_target", "action", "old_datatype", "new_datatype",
-            "old_value", "new_value"]).to_pandas()
         files, nbytes, parts = _walk_output(self.out)
-        # bracket the traced call with a second untraced one: each call
-        # runs warmer than the one before, so one neighbour alone biases
-        # the overhead
-        untraced_after = self.checked(lambda: self.call(self.docs))
-        if untraced_after is None:
-            return {}
 
         spans_path = os.path.join(
             ROOT, ".perfbench_out",
@@ -303,13 +308,10 @@ class Bench:
         for s in tracer.spans:
             span_s[s["name"]] = span_s.get(s["name"], 0.0) + \
                 s["end"] - s["start"]
-        empty = {"jobs": 0, "stages": 0, "run_s": 0.0, "cpu_s": 0.0,
-                 "gc_s": 0.0, "shuffle_write_mb": 0.0, "spill_mb": 0.0,
-                 "input_records": 0, "task_s": []}
-        gl = {layer: g.get(layer, empty) for layer in layers.LAYERS}
-        upd = _feature_update_rows(vc)
-        pairs = len(upd.drop_duplicates(
-            ["family", "old_value", "new_value"]))
+        gl = {layer: g.get(layer, layers.EMPTY_GROUP)
+              for layer in layers.LAYERS}
+        upd, pairs = (counts["feature_update_rows"],
+                      counts["feature_distinct_pairs"])
         m = {
             "checkpoint.pending_s": span_s["checkpoint.pending_buckets"],
             "checkpoint.record_s": span_s["checkpoint.record"],
@@ -349,9 +351,9 @@ class Bench:
             "enrich.rows_out": counts["enrich_rows_out"],
             "features.wall_s": selft["features"],
             "features.executor_cpu_s": gl["features"]["cpu_s"],
-            "features.update_rows": len(upd),
+            "features.update_rows": upd,
             "features.distinct_pairs": pairs,
-            "features.pair_reuse": len(upd) / max(1, pairs),
+            "features.pair_reuse": upd / max(1, pairs),
             "materialize.wall_s": selft["materialize"],
             "materialize.bytes_written_mb": nbytes / 2**20,
             "materialize.files_written": files,
@@ -360,26 +362,15 @@ class Bench:
             "run.tree_cpu_s": cpu_s,
             "run.cached_mb_after": cached_after,
             "run.unattributed_s": selft["run"],
-            "run.tracing_overhead_frac":
-                traced / ((untraced + untraced_after) / 2) - 1.0,
+            # the traced call runs second, so it is warmer than the
+            # untraced one it is compared with: this reads low by the
+            # warming between two calls (~5-15 % of a call)
+            "run.tracing_overhead_frac": traced / untraced - 1.0,
         })
         return m
 
     def n_input_revisions(self) -> int:
         return int(self.rows["path"].str.match(r"^Q\d+$").sum())
-
-
-def _feature_update_rows(vc):
-    """The UPDATE rows the feature batteries see (features._update_rows),
-    tagged with their battery family."""
-    from widiff_spark.features import WD_STRING_TYPES
-    upd = vc[(vc["change_target"] == "") & (vc["action"] == "UPDATE")
-             & (vc["new_datatype"] == vc["old_datatype"])].copy()
-    fam = upd["new_datatype"].where(
-        ~upd["new_datatype"].isin(list(WD_STRING_TYPES)), "text")
-    upd["family"] = fam
-    return upd[upd["family"].isin(
-        ["text", "time", "quantity", "globecoordinate"])]
 
 
 def _walk_output(out: str) -> tuple[int, int, int]:
@@ -399,6 +390,7 @@ def _walk_output(out: str) -> tuple[int, int, int]:
 
 
 def main(argv=None) -> int:
+    argv = sys.argv[1:] if argv is None else argv
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True,
                     choices=["bulk_build", "hot_page"])
@@ -408,7 +400,48 @@ def main(argv=None) -> int:
     ap.add_argument("--size", choices=sorted(SIZES), default="full",
                     help="input scale; 'tiny' is for the self-test")
     args = ap.parse_args(argv)
+    if WORK_ENV in os.environ:
+        return bench_main(args, os.environ[WORK_ENV])
+    return supervise(argv, args.workload)
 
+
+def supervise(argv: list[str], workload: str) -> int:
+    """Run the benchmark in a child process for at most ``DEADLINE_S``;
+    however it ends, kill and reap every process it left and delete its
+    work directory.  Returns the child's exit code."""
+    sys.path.insert(0, HERE)
+    import procmon
+    procmon.become_subreaper()
+    work = os.path.join(ROOT, ".perfbench_work",
+                        f"{workload}-{os.getpid()}")
+    stop_signals = (signal.SIGTERM, signal.SIGINT, signal.SIGHUP)
+
+    def on_signal(signum, _frame):
+        raise SystemExit(128 + signum)
+
+    for sig in stop_signals:
+        signal.signal(sig, on_signal)
+    child = None
+    try:
+        child = subprocess.Popen(
+            [sys.executable, os.path.abspath(__file__), *argv],
+            env={**os.environ, WORK_ENV: work},
+            preexec_fn=procmon.die_with_parent)
+        rc = child.wait(timeout=DEADLINE_S)
+        return rc if rc >= 0 else 128 - rc
+    except subprocess.TimeoutExpired:
+        print(f"perfbench: run exceeded {DEADLINE_S} s and was killed",
+              file=sys.stderr)
+        return 1
+    finally:
+        signal.pthread_sigmask(signal.SIG_BLOCK, stop_signals)
+        if child is not None:
+            procmon.kill_and_reap(child)
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def bench_main(args, work: str) -> int:
+    """The benchmark proper, in the supervised child."""
     for pkg in ("widiff_spark", "cleanroom"):
         if not os.path.isfile(os.path.join(ROOT, pkg, "__init__.py")):
             print(f"perfbench: {pkg}/ not found next to perfbench/ in "
@@ -417,8 +450,6 @@ def main(argv=None) -> int:
             return 2
 
     settings = _settings(args.size)
-    work = os.path.join(ROOT, ".perfbench_work",
-                        f"{args.workload}-{os.getpid()}")
     _prepare_env(work, settings)
     sys.path.insert(0, HERE)
     import check
@@ -464,9 +495,9 @@ def _stop_spark(spark) -> None:
     if gateway is not None:
         gateway.shutdown()
         gateway.proc.stdin.close()
-        gateway.proc.wait(timeout=60)
+        gateway.proc.wait(timeout=30)
         SparkContext._gateway = SparkContext._jvm = None
-    alive = procmon.wait_gone(started, timeout=60)
+    alive = procmon.wait_gone(started, timeout=30)
     if alive:
         raise RuntimeError(f"processes still running after stop: {alive}")
 

@@ -1,4 +1,4 @@
-"""Self-test of the benchmark at tiny input sizes (about five minutes).
+"""Self-test of the benchmark at tiny input sizes (about ten minutes).
 
     python3 perfbench/selftest.py
 
@@ -6,9 +6,10 @@ For each workload it runs ``run.py --size tiny`` untraced and traced and
 asserts that the last stdout line is the result object, that the outputs
 checked correct, that every metric BENCHMARK.json declares is printed with
 its declared unit, that ``pipeline.mode_salted`` is 1 on hot_page and 0 on
-bulk_build, and that the spans file parses.  It also runs the benchmark in
-a directory holding only BENCHMARK.json and perfbench/, where it must fail
-without printing a result.
+bulk_build, that the spans file parses, and that no process the run started
+is left once it has exited.  It also runs the benchmark in a directory
+holding only BENCHMARK.json and perfbench/, where it must fail without
+printing a result.
 """
 
 from __future__ import annotations
@@ -19,16 +20,22 @@ import shutil
 import subprocess
 import sys
 
+import procmon
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
 
 def _run(cwd: str, workload: str, trace: int) -> subprocess.CompletedProcess:
-    return subprocess.run(
+    proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", "3", "--seconds", "1", "--trace", str(trace),
          "--size", "tiny"],
         cwd=cwd, capture_output=True, text=True, timeout=600)
+    # this process is a subreaper, so anything the run left is below it
+    left = procmon.tree(os.getpid())[1:]
+    assert not left, f"processes left after the run: {left}"
+    return proc
 
 
 def check_workload(workload: str, declared: dict) -> None:
@@ -76,6 +83,7 @@ def check_bare_directory() -> None:
 
 
 def main() -> int:
+    procmon.become_subreaper()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         declared = json.load(f)
     check_bare_directory()
