@@ -124,17 +124,6 @@ def split_type(change_type):
     return a, t
 
 
-def week_bucket(ts: str, option: str) -> str:
-    """Calendar-year + ISO-week buckets (utils.py:442-459 strftime)."""
-    s = _TZ_TAIL.sub("", str(ts).replace("T", " ").replace("Z", "")).strip()
-    dt = datetime.strptime(s, "%Y-%m-%d %H:%M:%S")
-    if option == "year":
-        return str(dt.year)
-    if option == "year_month":
-        return dt.strftime("%Y-%m")
-    return dt.strftime("%Y-W%V")
-
-
 def homogenize(snak):
     """In-place snak normalization before hashing (page_parser.py:1000-1030)."""
     if not isinstance(snak, dict) or "datavalue" not in snak:

@@ -58,6 +58,18 @@ class TestCheckpoint:
         for b in r3["processed_buckets"]:
             assert ckpt3.loc[b, "run_id"] == "r3"
 
+    def test_salted_run_releases_its_caches(self, spark, tmp_path):
+        """A salted run_incremental leaves no cached RDD behind: the
+        pair-diff and revert-tag intermediates go with the result."""
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()
+        docs = fixtures.edge_case_corpus(spark, include_hot_page=True,
+                                         hot_revisions=20)
+        r = run_incremental(spark, docs, str(tmp_path / "warehouse"),
+                            run_id="salted", mode="salted")
+        assert r["processed_buckets"]
+        assert jsc.getPersistentRDDs().size() == before
+
     def test_dedup_by_pk_is_deterministic(self, spark):
         df = spark.createDataFrame(
             [(1, "a", "x"), (1, "a", "y"), (2, "b", "z")],

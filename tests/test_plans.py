@@ -22,6 +22,31 @@ def plan(df, mode: str = "formatted") -> str:
     return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
 
+def plan_tree(p: str) -> list[dict]:
+    """Operator tree of a formatted plan: one {name, id, parent} dict per
+    line of its tree section (a cached plan repeats under each scan)."""
+    nodes: list[dict] = []
+    stack: list[tuple[int, dict]] = []
+    for line in p.split("\n\n", 1)[0].splitlines()[1:]:
+        col = len(line) - len(line.lstrip(" :+-"))
+        m = re.match(r"(.*?) \((\d+)\)$", line[col:])
+        while stack and stack[-1][0] >= col:
+            stack.pop()
+        node = {"name": m.group(1).split(" ")[0], "id": int(m.group(2)),
+                "parent": stack[-1][1] if stack else None}
+        nodes.append(node)
+        stack.append((col, node))
+    return nodes
+
+
+def ancestors(node: dict) -> list[dict]:
+    out = []
+    while node["parent"] is not None:
+        node = node["parent"]
+        out.append(node)
+    return out
+
+
 def node_id(p: str, name: str) -> int:
     """Operator id in a formatted plan — ids DECREASE toward the leaves, so
     a smaller id executes earlier."""
@@ -186,6 +211,31 @@ class TestDiffShuffle:
         # wide content column was dropped before it (parse output schema)
         assert len(re.findall(r"\(\d+\) Exchange", p)) == 1
         assert node_id(p, "Scan parquet") < node_id(p, "Exchange")
+
+    def test_salted_stats_payload_built_in_jvm(self, spark):
+        """The salted stream's entity_stats payload is a JVM to_json over
+        pages joined with at most three per-page aggregates, and no Python
+        stage runs after the revert-tag and P31 grouped UDFs."""
+        from widiff_spark import parse, salted
+        unified = salted.extract_changes_salted(parse.parse_documents(
+            fixtures.edge_case_corpus(spark, include_hot_page=False)))
+        p = plan(unified)
+        nodes = plan_tree(p)
+        payload = re.search(
+            r"^\((\d+)\) Project\n.*(?:to_json|StructsToJson).* AS payload#",
+            p, re.M)
+        assert payload, "entity_stats payload is not a JVM projection"
+        stats = next(n for n in nodes if n["id"] == int(payload.group(1)))
+        joins = [n for n in nodes if "Join" in n["name"]
+                 and any(a is stats for a in ancestors(n))]
+        assert 1 <= len(joins) <= 3, [n["name"] for n in joins]
+        python = re.compile(r"Pandas|Python|Arrow")
+        grouped = [n for n in nodes if n["name"] == "FlatMapGroupsInPandas"]
+        assert len({n["id"] for n in grouped}) == 2  # revert tag + P31
+        for n in grouped:
+            above = [a["name"] for a in ancestors(n)
+                     if python.search(a["name"])]
+            assert not above, above
 
 
 class TestRound3Plans:

@@ -71,18 +71,6 @@ def cohort_rollup(entity_stats: DataFrame) -> DataFrame:
     return agg.selectExpr("cohort", stack_expr).orderBy("cohort", "metric")
 
 
-def revision_histogram(entity_stats: DataFrame, bucket_width: int = 10,
-                       exclude_sandbox: bool = True) -> DataFrame:
-    """Distribution of revisions per entity (general_analysis.py:268-335)."""
-    df = entity_stats
-    if exclude_sandbox:
-        df = df.filter(~F.col("entity_id").isin(SANDBOX_ENTITIES))
-    return (df.select((F.floor(F.col("num_revisions") / bucket_width)
-                       * bucket_width).cast("long").alias("bucket"))
-            .groupBy("bucket").agg(F.count("*").alias("num_entities"))
-            .orderBy("bucket"))
-
-
 def top_entities(entity_stats: DataFrame, k: int = 10) -> DataFrame:
     """Top-k most-edited entities (general_analysis.py:98-121 nlargest)."""
     return (entity_stats

@@ -721,6 +721,46 @@ class PageDiffer:
     # page replay (page_parser.py:1956-2326)
     # ------------------------------------------------------------------ #
 
+    def begin_revision(self, rev: dict) -> None:
+        """Per-revision meta every save_* emitter stamps on its rows; the
+        user type is P6 (page_parser.py:2020-2026)."""
+        user_type = ("bot" if "bot" in rev["username"].lower()
+                     else "anonymous" if rev["username"] == ""
+                     else "human")
+        self.meta = {
+            "revision_id": rev["revision_id"],
+            "timestamp": rev["timestamp"],
+            "comment": rev["comment"],
+            "username": rev["username"],
+            "user_id": rev["user_id"],
+            "user_type": user_type,
+        }
+
+    def store_revision(self, rev: dict, prev_revision_id: int) -> None:
+        """Revision row for a revision that produced changes, plus its
+        user-type count."""
+        user_type = self.meta["user_type"]
+        self.revision_rows.append({
+            "prev_revision_id": prev_revision_id,
+            "revision_id": rev["revision_id"],
+            "entity_id": self.entity_id,
+            "timestamp": rev["timestamp"],
+            "user_id": rev["user_id"],
+            "username": rev["username"],
+            "user_type": user_type,
+            "comment": rev["comment"],
+            "redirect": self.current_revision_redirect,
+            "q_id_redirect": (rev["digest"] or {}).get("redirect_qid")
+                             if self.current_revision_redirect else None,
+        })
+        if user_type == "bot":
+            self.stats["num_bot_edits"] += 1
+        elif user_type == "anonymous":
+            self.stats["num_anonymous_edits"] += 1
+        else:
+            self.stats["num_human_edits"] += 1
+        self.current_revision_redirect = False
+
     def process_page(self, revisions: list[dict]) -> dict:
         """``revisions``: page rows sorted by commit, as plain dicts with the
         PARSED_SCHEMA fields (snapshot already json-decoded into 'digest')."""
@@ -733,19 +773,7 @@ class PageDiffer:
                 # deleted revision: invisible except for parent repair
                 # (page_parser.py:1993-2011, 2125-2126)
                 continue
-
-            user_type = ("bot" if "bot" in rev["username"].lower()
-                         else "anonymous" if rev["username"] == ""
-                         else "human")  # P6, page_parser.py:2020-2026
-            self.meta = {
-                "revision_id": rev["revision_id"],
-                "timestamp": rev["timestamp"],
-                "comment": rev["comment"],
-                "username": rev["username"],
-                "user_id": rev["user_id"],
-                "user_type": user_type,
-            }
-
+            self.begin_revision(rev)
             digest = rev["digest"]
             if digest is None:
                 change = False  # quarantined revision (page_parser.py:2045-2047)
@@ -764,26 +792,7 @@ class PageDiffer:
             if change:
                 # stored prev pointer = last *stored* revision (W2;
                 # page_parser.py:2066-2073 + 2117 make the XML parentid moot)
-                self.revision_rows.append({
-                    "prev_revision_id": last_stored_revision_id,
-                    "revision_id": rev["revision_id"],
-                    "entity_id": self.entity_id,
-                    "timestamp": rev["timestamp"],
-                    "user_id": rev["user_id"],
-                    "username": rev["username"],
-                    "user_type": user_type,
-                    "comment": rev["comment"],
-                    "redirect": self.current_revision_redirect,
-                    "q_id_redirect": (digest or {}).get("redirect_qid")
-                                     if self.current_revision_redirect else None,
-                })
-                if user_type == "bot":
-                    self.stats["num_bot_edits"] += 1
-                elif user_type == "anonymous":
-                    self.stats["num_anonymous_edits"] += 1
-                else:
-                    self.stats["num_human_edits"] += 1
-                self.current_revision_redirect = False
+                self.store_revision(rev, last_stored_revision_id)
                 last_stored_revision_id = rev["revision_id"]
                 if digest is not None:
                     previous = digest
@@ -816,15 +825,17 @@ class PageDiffer:
         self.stats["total_process_time_sec"] = time.time() - t0
         self.stats["total_rev_edit_time_sec"] = time.time() - t1
 
-        entity_label = self.stats["entity_label"]
+        return {**self.table_rows(), "entity_stats": self.stats,
+                "entity_label": self.stats["entity_label"]}
+
+    def table_rows(self) -> dict[str, list[dict]]:
+        """Collected rows per change table, in emission order."""
         return {
             "revision": self.revision_rows,
             "value_change": self.value_rows,
             "qualifier_change": self.qualifier_rows,
             "reference_change": self.reference_rows,
             "datatype_metadata_change": self.metadata_rows,
-            "entity_stats": self.stats,
-            "entity_label": entity_label,
         }
 
 
@@ -837,48 +848,55 @@ def _hashable(value):
 # Spark wiring
 # ---------------------------------------------------------------------------
 
-_DEFAULT_ROW = {c: None for c in _UNIFIED_COLUMNS}
-_ROW_TABLES = ["revision", "value_change", "qualifier_change",
-               "reference_change", "datatype_metadata_change"]
-
-
-def _emit_page(out_cols: dict, repo: str, result: dict) -> None:
-    """Append one page's rows into the bucket's columnar accumulators.
+def _emit_rows(out_cols: dict, rows: list[dict], const: dict) -> None:
+    """Append one table's rows into columnar accumulators.
 
     Columnar: every row of one table shares the same key set (the save_*
-    emitters build them from fixed literals), so each (table, column) pair
-    extends its accumulator with ONE list comprehension instead of a
-    per-row dict copy + full-width column loop (the old per-row ``emit``
-    was ~15% of the whole diff stage in profiling; output rows outnumber
-    revisions ~8x).  Emission order per page — revision, value_change,
-    qualifier, reference, metadata, stats — is unchanged."""
-    entity_label = result["entity_label"]
-
-    for table in _ROW_TABLES:
-        rows = result[table]
-        if not rows:
-            continue
-        n = len(rows)
-        keys = rows[0].keys()
-        for c, acc in out_cols.items():
-            if c == "table":
-                acc.extend([table] * n)
-            elif c == "repo":
-                acc.extend([repo] * n)
-            elif c == "entity_label":
-                acc.extend([entity_label] * n)
-            elif c in keys:
-                acc.extend([r[c] for r in rows])
-            else:
-                acc.extend([None] * n)
-
-    stats = dict(result["entity_stats"])
-    u = dict(_DEFAULT_ROW)
-    u.update(table="entity_stats", repo=repo, entity_label=entity_label,
-             entity_id=stats["entity_id"],
-             payload=json.dumps(stats, ensure_ascii=False))
+    emitters build them from fixed literals), so each column extends its
+    accumulator with ONE list comprehension instead of a per-row dict copy
+    + full-width column loop (the old per-row ``emit`` was ~15% of the
+    whole diff stage in profiling; output rows outnumber revisions ~8x).
+    ``const`` holds the columns that are the same on every row (table,
+    repo, ...); it wins over row keys, and absent columns are None."""
+    n = len(rows)
+    keys = rows[0].keys()
     for c, acc in out_cols.items():
-        acc.append(u[c])
+        if c in const:
+            acc.extend([const[c]] * n)
+        elif c in keys:
+            acc.extend([r[c] for r in rows])
+        else:
+            acc.extend([None] * n)
+
+
+def _emit_page(out_cols: dict, repo: str, differ: PageDiffer) -> None:
+    """Append one replayed page's rows; emission order per page — revision,
+    value_change, qualifier, reference, metadata, stats — is fixed."""
+    stats = differ.stats
+    const = {"repo": repo, "entity_label": stats["entity_label"]}
+    for table, rows in differ.table_rows().items():
+        if rows:
+            _emit_rows(out_cols, rows, {**const, "table": table})
+    _emit_rows(out_cols, [{"entity_id": stats["entity_id"],
+                           "payload": json.dumps(stats, ensure_ascii=False)}],
+               {**const, "table": "entity_stats"})
+
+
+def _columnar_frame(out_cols: dict) -> pd.DataFrame:
+    """Accumulators -> pandas frame.  Pre-built object ndarrays skip
+    pandas' per-column type inference (maybe_convert_platform) and the
+    object-block consolidation vstack — ~2x cheaper frame construction,
+    measured on real bucket output.  Arrow conversion back in Spark coerces
+    to the declared schema's types from object exactly as it did for
+    inferred object columns."""
+    import numpy as np
+
+    data = {}
+    for c, values in out_cols.items():
+        arr = np.empty(len(values), dtype=object)
+        arr[:] = values
+        data[c] = arr
+    return pd.DataFrame(data, columns=list(out_cols), copy=False)
 
 
 def _prep_revisions(records: list[dict]) -> list[dict]:
@@ -892,15 +910,6 @@ def _prep_revisions(records: list[dict]) -> list[dict]:
     return records
 
 
-def diff_page_frame(pdf: pd.DataFrame, repo: str, entity_id: int,
-                    config: PipelineConfig) -> dict:
-    """One page's revisions (already filtered) -> PageDiffer result."""
-    pdf = pdf.sort_values("commit", kind="mergesort")
-    revisions = _prep_revisions(pdf.to_dict("records"))
-    differ = PageDiffer(repo, entity_id, config)
-    return differ.process_page(revisions)
-
-
 def make_bucket_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):
     """Grouped-map UDF over page *buckets*, not single pages.
 
@@ -912,8 +921,6 @@ def make_bucket_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):
     DataFrame materialized per bucket."""
     from itertools import groupby as _groupby
 
-    import numpy as np
-
     def bucket_diff(pdf: pd.DataFrame) -> pd.DataFrame:
         out_cols: dict = {c: [] for c in _UNIFIED_COLUMNS}
         pdf = pdf.sort_values(["repo", "path", "commit"], kind="mergesort")
@@ -922,19 +929,9 @@ def make_bucket_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):
                 records, key=lambda r: (r["repo"], r["path"])):
             revisions = list(revs)
             differ = PageDiffer(repo, int(revisions[0]["entity_id"]), config)
-            _emit_page(out_cols, repo, differ.process_page(revisions))
-        # pre-built object ndarrays skip pandas' per-column type inference
-        # (maybe_convert_platform) and the object-block consolidation vstack
-        # — ~2x cheaper frame construction, measured on real bucket output.
-        # Arrow conversion back in Spark coerces to UNIFIED_SCHEMA's types
-        # from object exactly as it did for the inferred object columns.
-        n = len(out_cols["table"])
-        data = {}
-        for c in _UNIFIED_COLUMNS:
-            arr = np.empty(n, dtype=object)
-            arr[:] = out_cols[c]
-            data[c] = arr
-        return pd.DataFrame(data, columns=_UNIFIED_COLUMNS, copy=False)
+            differ.process_page(revisions)
+            _emit_page(out_cols, repo, differ)
+        return _columnar_frame(out_cols)
     return bucket_diff
 
 

@@ -106,10 +106,3 @@ def compute_cohorts(entity_stats: DataFrame, astronomical: DataFrame,
                         .when(F.col("has_less_revisions"), "less")
                         .otherwise("rest"))
             .drop("_nvc"))
-
-
-def add_cohort(df: DataFrame, cohorts: DataFrame) -> DataFrame:
-    """Attach the routing column to a fact table (join on page identity)."""
-    dim = cohorts.select("repo", "entity_id", "cohort")
-    return df.join(dim, ["repo", "entity_id"], "left") \
-             .fillna({"cohort": "rest"})

@@ -221,10 +221,6 @@ def _resolve_backend() -> str:
     return "st" if _HAS_ST else "stub"
 
 
-def _use_st() -> bool:
-    return _resolve_backend() == "st"
-
-
 _NPZ_MODELS: dict[str, object] = {}
 
 

@@ -157,9 +157,3 @@ def read_table(spark: SparkSession, path: str, table: str) -> DataFrame:
     if catalog is not None:
         return spark.read.table(iceberg_identifier(catalog, table))
     return spark.read.parquet(f"{path}/{table}")
-
-
-def materialize_all(tables: dict[str, DataFrame], path: str) -> dict[str, str]:
-    """Write every pipeline table; returns {table: actual location}."""
-    return {name: write_table(df, path, name)
-            for name, df in tables.items()}

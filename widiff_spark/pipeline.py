@@ -69,7 +69,9 @@ def build_session(app_name: str = "widiff", master: str | None = None,
 @dataclass
 class PipelineResult:
     """Lazy handles to every output table; `unified` is persisted so each
-    split reads the diff output once instead of re-running the UDF."""
+    split reads the diff output once instead of re-running the UDF.
+    ``unpersist`` also releases the diff's own cached intermediates (the
+    salted mode hands them over as ``unified.widiff_caches``)."""
     unified: DataFrame
     tables: dict[str, DataFrame] = field(default_factory=dict)
     mode: str = "grouped"          # execution mode actually chosen
@@ -77,6 +79,8 @@ class PipelineResult:
 
     def unpersist(self):
         self.unified.unpersist()
+        for df in getattr(self.unified, "widiff_caches", []):
+            df.unpersist()
 
 
 # mode='auto' flips to the salted (pair-parallel) diff when any single page

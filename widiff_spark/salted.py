@@ -23,8 +23,13 @@ replay decomposes into
      independent rows spread over the cluster.
   4. REVERT TAGGING (applyInPandas over (page, property, value) — far finer
      than pages): the unmodified revert.tag_reverted_edits per group.
-  5. ENTITY STATS (per-page aggregation + a tiny P31-replay UDF over only
-     the P31 statement rows).
+  5. ENTITY STATS: one conditional aggregation over the pair-diff output
+     (counts + first/last revision timestamps), one over the annotated
+     parse stream (the page list, timed revisions, W4 label/alias), the
+     revert-stat sums and a tiny P31-replay UDF over only the P31 statement
+     rows; three left joins onto the page list, and the payload JSON is
+     built in the JVM (to_json in ENTITY_STATS_SCHEMA order, the grouped
+     payload's key order).
 
 Output is row-identical to the grouped mode (tests/test_salted_parity.py
 proves equality on the edge-case corpus incl. the hot page and on the
@@ -35,8 +40,12 @@ Cost trade (measured, local[16], 8000-revision/61-statement hot page):
 grouped replays the page in ONE task (13.7 s end-to-end); salted runs the
 same replay as ~8000 independent pair rows across all cores (pair-diff
 stage 7.6 s) at the price of two snapshot shuffles + the label-stamp join
-(18.9 s end-to-end locally).  The remaining sequential floor in BOTH modes
-is the revert scan of one (property, value) history — bounded by the 4-week
+(18.9 s end-to-end locally).  The stats side adds little on top: a warm
+count over the 60-revision edge corpus at local[4] runs 7 Spark jobs and 34
+tasks (28 jobs and 109 tasks while it was six joins fed by three count
+aggregations, plus a pandas payload writer).  The remaining sequential
+floor in BOTH modes is the revert scan of one (property, value) history —
+bounded by the 4-week
 window since revert.py's early exit.  On one shared box the shuffle tax
 outweighs the spread; on a real cluster the grouped mode's hot-page task
 bounds the whole stage (minutes of idle executors at 10^12 scale) while
@@ -53,17 +62,14 @@ import json
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
+from . import canonical as C
 from .config import DEFAULT_CONFIG, PipelineConfig
-from .diff import PageDiffer, _UNIFIED_COLUMNS, _hashable
+from .diff import (PageDiffer, _UNIFIED_COLUMNS, _columnar_frame, _emit_rows,
+                   _hashable, _prep_revisions)
 from .revert import tag_reverted_edits
 from .schema import ENTITY_STATS_SCHEMA, UNIFIED_SCHEMA
-
-_STATS_KEYS = [f.name for f in ENTITY_STATS_SCHEMA.fields]
-
-# internal pair-diff output = unified columns + replay-ordering carriers
-_PAIR_EXTRA = ["commit", "emit_idx"]
 
 
 def state_key(digest: dict | None) -> str | None:
@@ -167,113 +173,60 @@ def kept_pairs(annotated: DataFrame) -> DataFrame:
             .drop("__prev_key", "__first", "__rn"))
 
 
-class _PairEmitter(PageDiffer):
-    """PageDiffer driven one (prev, curr) pair at a time."""
-
-    def diff_pair(self, rec: dict, config_prev: dict | None) -> None:
-        user_type = ("bot" if "bot" in (rec["username"] or "").lower()
-                     else "anonymous" if (rec["username"] or "") == ""
-                     else "human")
-        self.meta = {
-            "revision_id": rec["revision_id"],
-            "timestamp": rec["timestamp"],
-            "comment": rec["comment"] or "",
-            "username": rec["username"] or "",
-            "user_id": rec["user_id"] or "",
-            "user_type": user_type,
-        }
-        digest = json.loads(rec["snapshot"])
-        self.last_digest = digest
-        prev = None if rec["is_first"] else config_prev
-        self.get_changes_from_revisions(digest, prev)
-        self.revision_rows.append({
-            "prev_revision_id": rec["prev_revision_id"],
-            "revision_id": rec["revision_id"],
-            "entity_id": self.entity_id,
-            "timestamp": rec["timestamp"],
-            "user_id": rec["user_id"] or "",
-            "username": rec["username"] or "",
-            "user_type": user_type,
-            "comment": rec["comment"] or "",
-            "redirect": self.current_revision_redirect,
-            "q_id_redirect": digest.get("redirect_qid")
-                             if self.current_revision_redirect else None,
-        })
-
-
 def make_pair_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):
     """Row-parallel pair diff: one output block per (prev, curr) pair.
 
     Output = UNIFIED columns (entity_label left empty — stamped later from
     the page dim) + commit + emit_idx carriers for the downstream replay
-    ordering; value rows additionally carry comment/timestamp for the
-    revert-tagging stage.
-    """
-    default_row = {c: None for c in _UNIFIED_COLUMNS}
-    out_columns = _UNIFIED_COLUMNS + _PAIR_EXTRA
+    ordering (emit_idx = the row's position within its table's rows of the
+    pair); value rows additionally carry comment for the revert-tagging
+    stage.  Meta, user type and the revision row come from the PageDiffer
+    code the grouped replay runs, the output columns from its emitter."""
+    out_columns = _UNIFIED_COLUMNS + ["commit"]
 
     def pair_diff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # rows arrive page-partitioned and commit-ordered (the pair window's
         # own shuffle), so the previous row's decoded curr IS this row's
-        # prev: one json.loads per revision, like the grouped replay (a
+        # prev: one decode per revision, like the grouped replay (a
         # string-equality check guards page boundaries / reordered input)
-        last_raw: str | None = None
-        last_digest: dict | None = None
+        last: dict | None = None
         for pdf in batches:
             out: dict = {c: [] for c in out_columns}
-            for rec in pdf.to_dict("records"):
-                differ = _PairEmitter(rec["repo"], int(rec["entity_id"]),
-                                      config)
-                raw_prev = rec["prev_snapshot"]
-                if raw_prev is None:
+            emit_idx: list[int] = []
+            for rec in _prep_revisions(pdf.to_dict("records")):
+                if rec["is_first"]:
                     prev = None
-                elif raw_prev == last_raw:
-                    prev = last_digest
+                elif last is not None and rec["prev_snapshot"] == last["snapshot"]:
+                    prev = last["digest"]
                 else:
-                    prev = json.loads(raw_prev)
-                differ.diff_pair(rec, prev)
-                last_raw = rec["snapshot"]
-                last_digest = differ.last_digest
-                emit_idx = 0
-
-                def emit(table: str, row: dict, with_comment: bool = False):
-                    nonlocal emit_idx
-                    u = dict(default_row)
-                    u["table"] = table
-                    u["repo"] = rec["repo"]
-                    for k, v in row.items():
-                        if k != "_key" and k in u:
-                            u[k] = v
-                    if with_comment:
-                        u["comment"] = rec["comment"] or ""
-                    for c in _UNIFIED_COLUMNS:
-                        out[c].append(u[c])
-                    out["commit"].append(rec["commit"])
-                    out["emit_idx"].append(emit_idx)
-                    emit_idx += 1
-
-                for row in differ.revision_rows:
-                    emit("revision", row)
-                for row in differ.value_rows:
-                    emit("value_change", row, with_comment=True)
-                for row in differ.qualifier_rows:
-                    emit("qualifier_change", row)
-                for row in differ.reference_rows:
-                    emit("reference_change", row)
-                for row in differ.metadata_rows:
-                    emit("datatype_metadata_change", row)
-            yield pd.DataFrame(out, columns=out_columns)
+                    prev = C.fast_json_loads(rec["prev_snapshot"])
+                last = rec
+                differ = PageDiffer(rec["repo"], int(rec["entity_id"]), config)
+                differ.begin_revision(rec)
+                differ.get_changes_from_revisions(rec["digest"], prev)
+                differ.store_revision(rec, rec["prev_revision_id"])
+                for table, rows in differ.table_rows().items():
+                    if not rows:
+                        continue
+                    const = {"table": table, "repo": rec["repo"],
+                             "commit": rec["commit"]}
+                    if table == "value_change":
+                        const["comment"] = rec["comment"]
+                    _emit_rows(out, rows, const)
+                    emit_idx.extend(range(len(rows)))
+            frame = _columnar_frame(out)
+            frame["emit_idx"] = emit_idx
+            yield frame
     return pair_diff
 
 
+# internal pair-diff output = unified columns + replay-ordering carriers.
 # StructType.add mutates in place — build a fresh struct, never touch the
 # shared UNIFIED_SCHEMA
-from pyspark.sql import types as _T  # noqa: E402
-
-_PAIR_OUT_SCHEMA = _T.StructType(
+_PAIR_OUT_SCHEMA = T.StructType(
     list(UNIFIED_SCHEMA.fields)
-    + [_T.StructField("commit", _T.StringType()),
-       _T.StructField("emit_idx", _T.IntegerType())])
+    + [T.StructField("commit", T.StringType()),
+       T.StructField("emit_idx", T.IntegerType())])
 
 
 def _tag_udf(config: PipelineConfig):
@@ -282,7 +235,7 @@ def _tag_udf(config: PipelineConfig):
     flag_cols = ["is_reverted", "reversion", "reversion_timestamp",
                  "revision_id_reversion"]
 
-    def tag(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def tag(key, pdf):
         changes_by_pv = {}
         value_rows = []
         pdf = pdf.sort_values(["commit", "emit_idx"], kind="mergesort")
@@ -344,7 +297,7 @@ def _p31_replay_udf():
     every _types_add/_types_remove in the reference coincides with an
     emitted P31 row (diff.py call sites), so the row stream is a complete
     event log of the type set."""
-    def replay(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def replay(key, pdf):
         pdf = pdf.sort_values(["commit", "emit_idx"], kind="mergesort")
         types: dict = {}
         for rec in pdf.to_dict("records"):
@@ -389,8 +342,8 @@ def extract_changes_salted(parsed: DataFrame,
                   int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
     diffed = pairs.select(
         "repo", "path", "commit", "entity_id", "revision_id", "timestamp",
-        "username", "user_id", "comment", "snapshot", "prev_snapshot",
-        "prev_revision_id", "is_first"
+        "username", "user_id", "comment", "parse_ok", "snapshot",
+        "prev_snapshot", "prev_revision_id", "is_first"
     ).repartitionByRange(n_parts, "repo", "path", "commit") \
      .mapInPandas(make_pair_diff_udf(config), schema=_PAIR_OUT_SCHEMA)
     diffed = diffed.persist()
@@ -443,150 +396,96 @@ def extract_changes_salted(parsed: DataFrame,
                     .drop("__ir", "__rv", "__rts", "__rid")
                     .withColumn("comment", F.lit(None).cast("string")))
 
-    # ---- per-page aggregates for entity_stats ----------------------------
+    # ---- entity_stats: one aggregation per source, payload in the JVM ----
     page = ["repo", "entity_id"]
-    rev = diffed.filter(F.col("table") == "revision")
-    rev_agg = rev.groupBy(*page).agg(
-        F.count("*").cast("int").alias("num_revisions"),
-        F.min_by("timestamp", "commit").alias("first_revision_timestamp"),
-        F.max_by("timestamp", "commit").alias("last_revision_timestamp"),
-        F.sum(F.when(F.col("user_type") == "bot", 1).otherwise(0))
-        .cast("int").alias("num_bot_edits"),
-        F.sum(F.when(F.col("user_type") == "anonymous", 1).otherwise(0))
-        .cast("int").alias("num_anonymous_edits"),
-        F.sum(F.when(F.col("user_type") == "human", 1).otherwise(0))
-        .cast("int").alias("num_human_edits"))
 
     def cnt(cond):
         return F.sum(F.when(cond, 1).otherwise(0)).cast("int")
 
-    vc = value_rows
-    vc_agg = vc.groupBy(*page).agg(
-        cnt(F.col("change_target") == "").alias("num_value_changes"),
-        cnt((F.col("change_target") == "") & (F.col("action") == "CREATE"))
-        .alias("num_value_change_creates"),
-        cnt((F.col("change_target") == "") & (F.col("action") == "DELETE"))
-        .alias("num_value_change_deletes"),
-        cnt((F.col("change_target") == "") & (F.col("action") == "UPDATE"))
-        .alias("num_value_change_updates"),
-        cnt(F.col("change_target") == "rank").alias("num_rank_changes"),
-        cnt((F.col("change_target") == "rank") & (F.col("action") == "CREATE"))
-        .alias("num_rank_creates"),
-        cnt((F.col("change_target") == "rank") & (F.col("action") == "DELETE"))
-        .alias("num_rank_deletes"),
-        cnt((F.col("change_target") == "rank") & (F.col("action") == "UPDATE"))
-        .alias("num_rank_updates"))
+    table, action = F.col("table"), F.col("action")
+    is_rev = table == "revision"
+    rev_commit = F.when(is_rev, F.col("commit"))
+    counts = [cnt(is_rev).alias("num_revisions"),
+              F.min_by("timestamp", rev_commit)
+              .alias("first_revision_timestamp"),
+              F.max_by("timestamp", rev_commit)
+              .alias("last_revision_timestamp")]
+    counts += [cnt(is_rev & (F.col("user_type") == u)).alias(f"num_{u}_edits")
+               for u in ("bot", "anonymous", "human")]
 
-    other_agg = diffed.groupBy(*page).agg(
-        cnt(F.col("table") == "qualifier_change")
-        .alias("num_qualifier_changes"),
-        cnt(F.col("table") == "reference_change")
-        .alias("num_reference_changes"),
-        cnt(F.col("table") == "datatype_metadata_change")
-        .alias("num_datatype_metadata_changes"),
-        cnt((F.col("table") == "datatype_metadata_change")
-            & (F.col("action") == "CREATE"))
-        .alias("num_datatype_metadata_creates"),
-        cnt((F.col("table") == "datatype_metadata_change")
-            & (F.col("action") == "DELETE"))
-        .alias("num_datatype_metadata_deletes"),
-        cnt((F.col("table") == "datatype_metadata_change")
-            & (F.col("action") == "UPDATE"))
-        .alias("num_datatype_metadata_updates"))
+    def by_action(rows, total: str, each: str) -> list:
+        return [cnt(rows).alias(total)] + [
+            cnt(rows & (action == a)).alias(each.format(a.lower()))
+            for a in ("CREATE", "DELETE", "UPDATE")]
 
-    # W4 + timed-revision count straight from the annotated parse stream
-    annotated_ok = annotated.filter(F.col("parse_ok") & (~F.col("is_deleted")))
-    w4 = annotated_ok.groupBy("repo", "entity_id").agg(
-        F.count("*").cast("int").alias("num_revisions_timed"),
-        F.max(F.when(F.col("w4_label") != "",
-                     F.struct("commit", "w4_label"))).alias("__l"),
-        F.max(F.when(F.col("w4_alias") != "",
-                     F.struct("commit", "w4_alias"))).alias("__a"))
-    w4 = w4.select("repo", "entity_id", "num_revisions_timed",
-                   F.coalesce(F.col("__l.w4_label"), F.lit(""))
-                   .alias("__label"),
-                   F.coalesce(F.col("__a.w4_alias"), F.lit(""))
-                   .alias("__alias"))
+    # value and rank rows count pre-dedup: the reference counts at
+    # save_change time
+    is_value = table == "value_change"
+    counts += by_action(is_value & (F.col("change_target") == ""),
+                        "num_value_changes", "num_value_change_{}s")
+    counts += by_action(is_value & (F.col("change_target") == "rank"),
+                        "num_rank_changes", "num_rank_{}s")
+    counts += [cnt(table == "qualifier_change").alias("num_qualifier_changes"),
+               cnt(table == "reference_change").alias("num_reference_changes")]
+    counts += by_action(table == "datatype_metadata_change",
+                        "num_datatype_metadata_changes",
+                        "num_datatype_metadata_{}s")
+    diff_agg = diffed.groupBy(*page).agg(*counts)
 
-    p31 = (vc.filter((F.col("property_id") == 31)
-                     & (F.col("change_target") == ""))
+    p31 = (value_rows.filter((F.col("property_id") == 31)
+                             & (F.col("change_target") == ""))
            .select("repo", "entity_id", "value_id", "action", "old_value",
                    "new_value", "commit", "emit_idx")
-           .groupBy("repo", "entity_id")
+           .groupBy(*page)
            .applyInPandas(_p31_replay_udf(),
                           schema="repo string, entity_id long, "
                                  "entity_types_31 string"))
 
     # every page gets a stats row, even with zero kept revisions (grouped
-    # mode instantiates a PageDiffer per page unconditionally)
-    pages = annotated.select("repo", "entity_id").distinct()
-    stats = (pages
-             .join(rev_agg, page, "left")
-             .join(vc_agg, page, "left")
-             .join(other_agg, page, "left")
+    # mode instantiates a PageDiffer per page unconditionally); W4 label/
+    # alias = the last non-empty one over the page's timed revisions
+    ok = F.col("parse_ok") & ~F.col("is_deleted")
+
+    def last_nonempty(c):
+        return F.max_by(c, F.when(ok & (F.col(c) != ""), F.col("commit")))
+
+    pages = annotated.groupBy(*page).agg(
+        cnt(ok).alias("num_revisions_timed"),
+        F.coalesce(last_nonempty("w4_label"), last_nonempty("w4_alias"),
+                   F.lit("")).alias("entity_label"))
+    stats = (pages.join(diff_agg, page, "left")
              .join(revert_stats, page, "left")
-             .join(w4, page, "left")
              .join(p31, page, "left")
-             .fillna(0)
-             .fillna({"entity_types_31": "", "__label": "", "__alias": "",
-                      "first_revision_timestamp": "",
-                      "last_revision_timestamp": ""}))
-
-    def build_payload(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for rec in pdf.to_dict("records"):
-                s = {k: 0 for k in _STATS_KEYS}
-                for k in _STATS_KEYS:
-                    v = rec.get(k)
-                    if v is None or (not isinstance(v, str) and pd.isna(v)):
-                        continue
-                    if hasattr(v, "item"):  # numpy scalar -> python scalar
-                        v = v.item()
-                    s[k] = v
-                s["entity_id"] = int(rec["entity_id"])
-                s["entity_label"] = rec["__label"] or rec["__alias"]
-                s["file_path"] = rec["repo"]
-                s["first_revision_timestamp"] = \
-                    rec["first_revision_timestamp"] or None
-                s["last_revision_timestamp"] = \
-                    rec["last_revision_timestamp"] or None
-                for k in ("total_xml_parse_time_sec", "total_process_time_sec",
-                          "total_revision_diff_time_sec",
-                          "total_rev_edit_time_sec",
-                          "total_feature_creation_sec"):
-                    s[k] = 0.0
-                out.append({"repo": rec["repo"],
-                            "entity_id": int(rec["entity_id"]),
-                            "entity_label": s["entity_label"],
-                            "payload": json.dumps(s, ensure_ascii=False)})
-            yield pd.DataFrame(out, columns=["repo", "entity_id",
-                                             "entity_label", "payload"])
-
-    stats_rows = stats.mapInPandas(
-        build_payload,
-        schema="repo string, entity_id long, entity_label string, "
-               "payload string")
+             .fillna(0).fillna({"entity_types_31": ""}))
+    # struct fields in ENTITY_STATS_SCHEMA order = the grouped payload's key
+    # order; the total_* fields time a per-page loop this mode does not have
+    fields = {"file_path": F.col("repo"),
+              "num_feature_creations_timed": F.lit(0)}
+    for f in ENTITY_STATS_SCHEMA.fields:
+        if f.name.startswith("total_"):
+            fields[f.name] = F.lit(0.0)
+    payload = F.to_json(
+        F.struct(*[fields.get(f.name, F.col(f.name)).cast(f.dataType)
+                   .alias(f.name) for f in ENTITY_STATS_SCHEMA.fields]),
+        {"ignoreNullFields": "false"})
+    stats_rows = stats.select(*page, "entity_label",
+                              payload.alias("payload"),
+                              F.lit("entity_stats").alias("table"))
 
     # ---- assemble the unified stream + stamp page entity_label -----------
-    label_dim = stats_rows.select("repo", "entity_id",
-                                  F.col("entity_label").alias("__el"))
-
     def to_unified(df: DataFrame) -> DataFrame:
-        missing = [c for c in _UNIFIED_COLUMNS if c not in df.columns]
-        for c in missing:
-            df = df.withColumn(
-                c, F.lit(None).cast(dict(
-                    (f.name, f.dataType) for f in UNIFIED_SCHEMA.fields)[c]))
-        return df.select(*_UNIFIED_COLUMNS)
+        return df.select(*[
+            F.col(f.name) if f.name in df.columns
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in UNIFIED_SCHEMA.fields])
 
     body = diffed.filter(F.col("table") != "value_change") \
                  .drop("commit", "emit_idx") \
-                 .unionByName(to_unified(value_tagged.drop("commit",
-                                                           "emit_idx")))
+                 .unionByName(to_unified(value_tagged))
+    label_dim = pages.select(*page, F.col("entity_label").alias("__el"))
     body = (body.join(label_dim, page, "left")
             .withColumn("entity_label", F.col("__el")).drop("__el"))
-
-    stats_unified = to_unified(
-        stats_rows.withColumn("table", F.lit("entity_stats")))
-    return body.unionByName(stats_unified)
+    out = body.unionByName(to_unified(stats_rows))
+    # cached intermediates, for the caller to release (PipelineResult)
+    out.widiff_caches = [diffed, tagged]
+    return out

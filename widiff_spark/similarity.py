@@ -35,25 +35,6 @@ def cosine_expr(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def pairwise_cosine(embeddings: DataFrame, min_cosine: float) -> DataFrame:
-    """Embedding near-dup pairs: all (a < b) with cosine >= threshold.
-
-    Norms are projected once per side BELOW the join (the knn_bruteforce
-    pattern): the per-pair kernel is one dot — the same doubles in the
-    same order as cosine_expr, minus two per-pair HOF norm walks."""
-    sides = embeddings.select("vec_id", "embedding",
-                              _norm(F.col("embedding")).alias("_n"))
-    a = sides.alias("a")
-    b = sides.alias("b")
-    return (a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-            .select(F.col("a.vec_id").alias("vec_a"),
-                    F.col("b.vec_id").alias("vec_b"),
-                    F.round(_dot(F.col("a.embedding"), F.col("b.embedding"))
-                            / (F.col("a._n") * F.col("b._n")), 4)
-                    .alias("cosine"))
-            .filter(F.col("cosine") >= min_cosine))
-
-
 def bucketed_pairwise_cosine(embeddings: DataFrame, min_cosine: float,
                              dim: int, n_planes: int = 8) -> DataFrame:
     """Scale path for embedding near-dup: candidates are pairs whose

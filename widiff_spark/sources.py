@@ -142,31 +142,11 @@ def _render_repo_dump(repo_rows: pd.DataFrame) -> bytes:
     return "".join(parts).encode("utf-8")
 
 
-def write_corpus_as_dumps(corpus: pd.DataFrame, out_dir: str,
-                          compress: bool = True) -> list[str]:
-    """Driver-side shard writer (small fixtures / unit tests).  For anything
-    bigger use :func:`write_corpus_as_dumps_distributed` — it never moves
-    the corpus through the driver."""
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for repo, g in corpus.groupby("repo", sort=True):
-        blob = _render_repo_dump(g)
-        path = os.path.join(out_dir,
-                            f"{repo}.xml.bz2" if compress else f"{repo}.xml")
-        with open(path, "wb") as f:
-            f.write(bz2.compress(blob) if compress else blob)
-        paths.append(path)
-    return paths
-
-
 def write_corpus_as_dumps_distributed(docs, out_dir: str,
                                       compress: bool = True) -> list[str]:
     """Executor-side shard writer: group the corpus DataFrame by ``repo``
     and render+write one ``.xml.bz2`` per shard inside the grouped task —
-    the corpus never passes through the driver (at sf>=0.1 the driver-side
-    path pulls the whole corpus into driver memory).  ``out_dir`` must be
+    the corpus never passes through the driver.  ``out_dir`` must be
     storage every executor can reach (shared FS / object store; local FS in
     local mode)."""
     import os
