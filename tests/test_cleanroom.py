@@ -19,8 +19,9 @@ import pytest
 from cleanroom import replay_corpus
 from widiff_spark import diff, fixtures, parse
 from widiff_spark.config import DEFAULT_CONFIG
+from widiff_spark.schema import TABLE_COLUMNS
 
-from test_salted_parity import _adversarial_corpus_rows
+from test_salted_parity import _adversarial_corpus_rows, _null_revision_id_rows
 
 TABLES = ("revision", "value_change", "qualifier_change", "reference_change",
           "datatype_metadata_change")
@@ -60,10 +61,11 @@ def _engine_tables(rows: list[dict]) -> dict:
         result = differ.process_page(records)
         for table in TABLES:
             for row in result[table]:
-                out = {k: v for k, v in row.items() if k != "_key"}
-                out["repo"] = repo
-                out["entity_label"] = result["entity_label"]
-                acc[table].append(out)
+                # the table's columns: row dicts also carry the revert
+                # scan's private fields and, on value rows, the comment
+                out = {**row, "repo": repo,
+                       "entity_label": result["entity_label"]}
+                acc[table].append({c: out[c] for c in TABLE_COLUMNS[table]})
         st = dict(result["entity_stats"])
         st["repo"] = repo
         stats_rows.append(st)
@@ -206,6 +208,12 @@ def _page_history(draw):
 @given(_page_history())
 def test_hypothesis_differential(rows):
     _assert_match(rows)
+
+
+def test_null_revision_id_pages():
+    """Pages whose content lacks meta.revision_id: the engine's PK dedup
+    treats those null ids as equal within a page, like the cleanroom."""
+    _assert_match(_null_revision_id_rows())
 
 
 def test_quarantine_meta_recovery():

@@ -237,6 +237,27 @@ class TestDiffShuffle:
                      if python.search(a["name"])]
             assert not above, above
 
+    def test_salted_revert_tag_emits_deduplicated_rows(self, spark):
+        """The salted revert-tag stage emits the PK-deduplicated, flagged
+        value rows and the revert stats as columns: no window partitioned
+        by the value_change PK, no join on it, no JSON parse-back."""
+        from widiff_spark import parse, salted
+        p = plan(salted.extract_changes_salted(parse.parse_documents(
+            fixtures.edge_case_corpus(spark, include_hot_page=False))))
+        pk = re.compile(r"\[revision_id#\d+L?, property_id#\d+, "
+                        r"value_id#\d+, change_target#\d+\]")
+        blocks = re.findall(r"^\(\d+\) (\w+)\n(.*?)(?:\n\n|\Z)", p,
+                            re.M | re.S)
+        windows = [b for name, b in blocks if name.startswith("Window")]
+        assert windows  # the keep-decision and pairing windows
+        for name, body in blocks:
+            keys = [ln for ln in body.splitlines()
+                    if ln.startswith(("Arguments", "Left keys",
+                                      "Right keys"))]
+            if name.startswith("Window") or "Join" in name:
+                assert not any(pk.search(ln) for ln in keys), (name, keys)
+        assert "from_json" not in p and "JsonToStructs" not in p
+
 
 class TestRound3Plans:
     """Closure round join + multi-table LSH stay equi-joins (no pair

@@ -48,15 +48,9 @@ class TestCheckRevert:
 
 
 class TestTagging:
-    def _run(self, changes, keys=None):
-        by_pv = {}
-        rows = []
-        for c in changes:
-            key = (100, "s1", c["change_target"])
-            by_pv.setdefault(key, []).append(dict(c))
-            rows.append({"_key": (c["revision_id"], 100, "s1",
-                                  c["change_target"]), **c})
-        return tag_reverted_edits(by_pv, rows)
+    def _run(self, changes):
+        return tag_reverted_edits([{"property_id": 100, "value_id": "s1", **c}
+                                   for c in changes])
 
     def test_direct_pair_flags(self):
         tagged, stats = self._run([

@@ -187,6 +187,67 @@ def test_adversarial_random_corpus_parity(spark):
     _assert_identical(spark, docs)
 
 
+def _null_revision_id_rows() -> list[dict]:
+    """Pages whose content has no meta.revision_id.  Q991: the first of
+    three revisions lacks it (P31 Q5 -> Q6 -> Q7), so revision 7001 is an
+    UPDATE with a null prev_revision_id.  Q992/Q993: single-revision pages
+    whose label CREATE rows share the PK (null, -1, 'label', '') — the PK
+    dedup is per page.  Q994: three null-id revisions (label x -> y -> x,
+    the last a restore) share one PK within the page."""
+    def body(rid, label, p31=None, comment=""):
+        claims = {"P31": [fixtures.statement(
+            "q991$S1", fixtures.entity_snak("P31", p31))]} if p31 else None
+        return fixtures.content(rid, fixtures._ts(rid % 100), label=label,
+                                claims=claims, comment=comment)
+
+    def no_rid(path, rid, *args, **kw):
+        doc = json.loads(body(rid, *args, **kw))
+        del doc["meta"]["revision_id"]
+        return fixtures.row(path, rid, json.dumps(doc))
+
+    return [no_rid("Q991", 7000, "x", "Q5"),
+            fixtures.row("Q991", 7001, body(7001, "x", "Q6")),
+            fixtures.row("Q991", 7002, body(7002, "x", "Q7")),
+            no_rid("Q992", 7100, "a"), no_rid("Q993", 7200, "b"),
+            no_rid("Q994", 7300, "x"), no_rid("Q994", 7301, "y"),
+            no_rid("Q994", 7302, "x", comment="restore")]
+
+
+def test_null_revision_id_parity(spark):
+    """A kept revision without a revision_id neither makes the next one a
+    created entity nor shares its PK dedup with other pages."""
+    docs = spark.createDataFrame(pd.DataFrame(_null_revision_id_rows()),
+                                 schema=fixtures.DOCUMENTS_SCHEMA)
+    _assert_identical(spark, docs)
+
+
+def test_salted_run_parses_each_row_once(spark, monkeypatch):
+    """The pair diff and the page aggregation read one materialization of
+    the parsed stream: a salted run parses each input row once."""
+    from widiff_spark import pipeline
+
+    docs = fixtures.edge_case_corpus(spark, include_hot_page=True,
+                                     hot_revisions=60).persist()
+    n_rows = parse.parse_documents(docs).count()
+    parsed_rows = spark.sparkContext.accumulator(0)
+    parse_batches = parse._parse_batches
+
+    def counting(batches):
+        for pdf in parse_batches(batches):
+            parsed_rows.add(len(pdf))
+            yield pdf
+
+    monkeypatch.setattr(parse, "_parse_batches", counting)
+    res = pipeline.run_pipeline(spark, docs, mode="salted")
+    try:
+        res.tables["value_change"].count()
+        res.tables["entity_stats"].count()
+    finally:
+        res.unpersist()
+        docs.unpersist()
+    assert parsed_rows.value == n_rows
+
+
 def test_keep_decision_matches_changed_flag(spark):
     """The projection-equality keep rule equals the reference's ``changed``:
     pages whose consecutive snapshots are byte-identical produce exactly one

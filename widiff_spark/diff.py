@@ -14,8 +14,8 @@ Sequential-by-construction rules that force the per-page grouping:
     (page_parser.py:2066-2123) — W1's "kept revisions only" lag;
   * parent-pointer repair across deleted/skipped revisions (W2,
     page_parser.py:2002-2011, 2066-2073);
-  * the running P31/P279 type set replay (W3);
-  * last-non-empty label/alias/description backfill (W4);
+  * the running P31 type set replay (W3);
+  * last-non-empty label/alias backfill (W4);
   * revert tagging over the page's accumulated histories (J6, revert.py).
 
 Scale note: groups receive only compact digests, so the grouped stage is
@@ -59,12 +59,10 @@ class PageDiffer:
         self.qualifier_rows: list[dict] = []
         self.reference_rows: list[dict] = []
         self.metadata_rows: list[dict] = []
-        self.changes_by_pv: dict = {}
 
         self.current_revision_redirect = False
         self.meta: dict = {}
-        self.entity_data = {"label": "", "alias": "", "description": "",
-                            "p31_types": {}, "p279_types": {}}
+        self.entity_data = {"label": "", "alias": "", "p31_types": {}}
         self.stats = {k: 0 for k in _STATS_KEYS}
         self.stats.update({
             "entity_id": entity_id, "entity_label": "", "entity_types_31": "",
@@ -129,21 +127,8 @@ class PageDiffer:
 
         self._update_entity_stats(change_target, action)
 
-        self.changes_by_pv.setdefault(
-            (property_id, value_id, change_target), []).append({
-                "timestamp": timestamp,
-                "old_hash": old_hash or "",
-                "new_hash": new_hash or "",
-                "old_value": old_ser,
-                "new_value": new_ser,
-                "comment": self.meta["comment"],
-                "change_target": change_target,
-                "revision_id": revision_id,
-                "action": action,
-            })
-
+        # comment feeds revert tagging only (the restore/rollback gates)
         self.value_rows.append({
-            "_key": (revision_id, property_id, value_id, change_target),
             "revision_id": revision_id,
             "property_id": property_id,
             "value_id": value_id,
@@ -159,6 +144,7 @@ class PageDiffer:
             "timestamp": timestamp,
             "label": label,
             "entity_id": self.entity_id,
+            "comment": self.meta["comment"],
         })
 
     def save_metadata_change(self, property_id, value_id, old_value, new_value,
@@ -415,14 +401,10 @@ class PageDiffer:
     def _types_add(self, pid: str, sid, value) -> None:
         if pid == "P31":
             self.entity_data["p31_types"][(sid, _hashable(value))] = value
-        if pid == "P279":
-            self.entity_data["p279_types"][(sid, _hashable(value))] = value
 
     def _types_remove(self, pid: str, sid, value) -> None:
         if pid == "P31":
             self.entity_data["p31_types"].pop((sid, _hashable(value)), None)
-        if pid == "P279":
-            self.entity_data["p279_types"].pop((sid, _hashable(value)), None)
 
     # ------------------------------------------------------------------ #
     # page-level diff branches (page_parser.py:1350-1953)
@@ -778,12 +760,9 @@ class PageDiffer:
             if digest is None:
                 change = False  # quarantined revision (page_parser.py:2045-2047)
             else:
-                # last-non-empty label/alias/description (W4,
-                # page_parser.py:2049-2058)
+                # last-non-empty label/alias (W4, page_parser.py:2049-2058)
                 if digest["label"]:
                     self.entity_data["label"] = digest["label"]
-                if digest["description"]:
-                    self.entity_data["description"] = digest["description"]
                 if digest["alias"]:
                     self.entity_data["alias"] = digest["alias"]
                 change = self.get_changes_from_revisions(digest, previous)
@@ -801,10 +780,8 @@ class PageDiffer:
 
         # revert tagging (J6)
         t1 = time.time()
-        tagged, revert_stats = R.tag_reverted_edits(
-            self.changes_by_pv, self.value_rows,
-            self.config.time_threshold_seconds)
-        self.value_rows = tagged
+        self.value_rows, revert_stats = R.tag_reverted_edits(
+            self.value_rows, self.config.time_threshold_seconds)
         self.stats.update(revert_stats)
 
         # entity stats assembly (page_parser.py:2281-2309)
@@ -869,6 +846,15 @@ def _emit_rows(out_cols: dict, rows: list[dict], const: dict) -> None:
             acc.extend([None] * n)
 
 
+def _table_const(table: str) -> dict:
+    """The constant columns of one table's rows in the unified stream.
+    Value rows carry their revision's comment for revert tagging only; the
+    stream keeps comments on revision rows alone."""
+    if table == "value_change":
+        return {"table": table, "comment": None}
+    return {"table": table}
+
+
 def _emit_page(out_cols: dict, repo: str, differ: PageDiffer) -> None:
     """Append one replayed page's rows; emission order per page — revision,
     value_change, qualifier, reference, metadata, stats — is fixed."""
@@ -876,7 +862,7 @@ def _emit_page(out_cols: dict, repo: str, differ: PageDiffer) -> None:
     const = {"repo": repo, "entity_label": stats["entity_label"]}
     for table, rows in differ.table_rows().items():
         if rows:
-            _emit_rows(out_cols, rows, {**const, "table": table})
+            _emit_rows(out_cols, rows, {**const, **_table_const(table)})
     _emit_rows(out_cols, [{"entity_id": stats["entity_id"],
                            "payload": json.dumps(stats, ensure_ascii=False)}],
                {**const, "table": "entity_stats"})
@@ -904,6 +890,10 @@ def _prep_revisions(records: list[dict]) -> list[dict]:
     for rec in records:
         rec["digest"] = (loads(rec["snapshot"])
                          if rec["parse_ok"] and rec["snapshot"] else None)
+        if rec["revision_id"] != rec["revision_id"]:
+            # a null long arrives as NaN, which never equals itself: the
+            # revert scan's PK dedup needs None
+            rec["revision_id"] = None
         rec["username"] = rec["username"] or ""
         rec["comment"] = rec["comment"] or ""
         rec["user_id"] = rec["user_id"] or ""

@@ -6,10 +6,17 @@ flags by a forward pairwise scan within a time window — reference
 scripts/feature_creation.py:877-934 (``check_revert``) and 936-1132
 (``tag_reverted_edits``).
 
+Input is the page's emitted value_change row dicts, in emission order —
+the one shape both execution modes produce.  ``tag_reverted_edits`` groups
+them into (property_id, value_id, change_target) histories itself and reads
+each row's PK (revision_id, property_id, value_id, change_target) from the
+row.  The grouped mode passes a whole page's rows; the salted mode passes
+one (page, property, value) group's rows, which holds every row sharing a
+PK, so the dedup below sees the same rows in both modes.
+
 The scan is order-dependent (flag precedence, early break, intermediate
-marking on restores) so it stays sequential *per group*; groups are
-(property_id, value_id, change_target) within a page — far finer than pages,
-so the hot-page skew the reference suffers from is already diluted.
+marking on restores) so it stays sequential *per history* — far finer than
+pages, so the hot-page skew the reference suffers from is already diluted.
 
 Faithfully replicated quirks:
   * pairing compares the *serialized values* (old_value/new_value), not the
@@ -39,6 +46,11 @@ from . import canonical as C
 
 DEFAULT_TIME_THRESHOLD_SECONDS = 2419200  # 4 weeks (reference setup.yml:28-29)
 
+# the entity_stats counts tag_reverted_edits returns
+REVERT_STATS = ("num_reverted_edits", "num_reversions",
+                "num_reverted_edits_create", "num_reverted_edits_delete",
+                "num_reverted_edits_update")
+
 _itemgetter_ts = itemgetter("timestamp")
 
 
@@ -65,16 +77,6 @@ def _ts_to_epoch(ts: str) -> float:
     return ep
 
 
-def _epoch(change: dict) -> float:
-    """Memoized timestamp parse — the pairwise scan would otherwise strptime
-    the same value once per comparison (the #1 hot spot in profiling)."""
-    ts = change.get("_ts_epoch")
-    if ts is None:
-        ts = _ts_to_epoch(change["timestamp"])
-        change["_ts_epoch"] = ts
-    return ts
-
-
 def _precompute_pair_fields(change: dict) -> None:
     """Attach the per-change fields the pairwise scan reads per comparison
     (pair strings, lowered comment, epoch) — computed once per change
@@ -83,15 +85,14 @@ def _precompute_pair_fields(change: dict) -> None:
     change["_po"] = _pair_hash(change, "old_value")
     change["_pn"] = _pair_hash(change, "new_value")
     change["_cl"] = str(change.get("comment", "")).lower()
-    if change.get("_ts_epoch") is None:
-        change["_ts_epoch"] = _ts_to_epoch(change["timestamp"])
+    change["_ts_epoch"] = _ts_to_epoch(change["timestamp"])
 
 
 def check_revert(current: dict, future: dict,
                  time_threshold: int = DEFAULT_TIME_THRESHOLD_SECONDS) -> int:
     """1 if ``future`` reverts ``current`` (feature_creation.py:877-934)."""
     try:
-        # fast path: fields precomputed by tag_reverted_edits' group prologue
+        # fields precomputed by tag_reverted_edits' history prologue
         curr_old = current["_po"]
         curr_new = current["_pn"]
         next_old = future["_po"]
@@ -99,13 +100,12 @@ def check_revert(current: dict, future: dict,
         next_comment = future["_cl"]
         diff_ts = future["_ts_epoch"] - current["_ts_epoch"]
     except KeyError:
-        # direct callers (tests/API) pass bare dicts — compute in place
-        curr_old = _pair_hash(current, "old_value")
-        curr_new = _pair_hash(current, "new_value")
-        next_old = _pair_hash(future, "old_value")
-        next_new = _pair_hash(future, "new_value")
-        next_comment = str(future.get("comment", "")).lower()
-        diff_ts = _epoch(future) - _epoch(current)
+        # direct callers pass bare change dicts: precompute on copies, so
+        # the caller's dicts stay as they were
+        current, future = dict(current), dict(future)
+        _precompute_pair_fields(current)
+        _precompute_pair_fields(future)
+        return check_revert(current, future, time_threshold)
 
     direct = (curr_old == next_new and curr_new == next_old
               and curr_old != "" and next_new != ""
@@ -123,20 +123,22 @@ def check_revert(current: dict, future: dict,
     return 1 if (direct or trailing or create_case) else 0
 
 
-def tag_reverted_edits(changes_by_pv: dict, value_changes: list,
+def tag_reverted_edits(value_rows: list,
                        time_threshold: int = DEFAULT_TIME_THRESHOLD_SECONDS):
-    """Tag a page's value/rank changes; return (tagged_rows, revert_stats).
+    """Tag a page's value/rank rows; return (tagged_rows, revert_stats).
 
-    ``changes_by_pv``: {(property_id, value_id, change_target): [change dict]}
-    where each change dict carries timestamp/old_value/new_value/comment/
-    change_target/revision_id/action (page_parser.py:412-422).
-    ``value_changes``: the page's emitted value_change row dicts, each with a
-    ``_key`` tuple (revision_id, property_id, value_id, change_target).
+    ``value_rows``: the emitted value_change row dicts in emission order,
+    each with revision_id/property_id/value_id/change_target/action/
+    timestamp/old_value/new_value/comment (page_parser.py:412-422).  The
+    scan's private fields land on the row dicts; ``tagged_rows`` are the
+    PK-deduplicated rows with their four flag fields set.
     """
+    histories: dict = {}
+    for row in value_rows:
+        histories.setdefault((row["property_id"], row["value_id"],
+                              row["change_target"]), []).append(row)
     revert_flags: dict = {}
-    stats = {"num_reverted_edits": 0, "num_reversions": 0,
-             "num_reverted_edits_create": 0, "num_reverted_edits_delete": 0,
-             "num_reverted_edits_update": 0}
+    stats = dict.fromkeys(REVERT_STATS, 0)
 
     def bump(change):
         stats["num_reverted_edits"] += 1
@@ -148,7 +150,7 @@ def tag_reverted_edits(changes_by_pv: dict, value_changes: list,
         elif action == "UPDATE":
             stats["num_reverted_edits_update"] += 1
 
-    for (property_id, value_id, change_target), pv_changes in changes_by_pv.items():
+    for (property_id, value_id, change_target), pv_changes in histories.items():
         if len(pv_changes) < 2:
             # a single change can never pair with anything — the scan below
             # is a no-op, so skip it AND its per-change precompute (single-
@@ -158,7 +160,7 @@ def tag_reverted_edits(changes_by_pv: dict, value_changes: list,
         reversion_keys: set = set()
         reverted_keys: set = set()
 
-        # group prologue: compute each change's pair strings / lowered
+        # history prologue: compute each change's pair strings / lowered
         # comment / epoch / flag key ONCE — the pairwise scan below reads
         # them once per comparison
         for c in pv_changes:
@@ -265,8 +267,9 @@ def tag_reverted_edits(changes_by_pv: dict, value_changes: list,
 
     # output: PK-dedup (last wins) + rank rows inherit value-row flags
     dict_lookup = {}
-    for row in value_changes:
-        dict_lookup[row["_key"]] = row
+    for row in value_rows:
+        dict_lookup[(row["revision_id"], row["property_id"], row["value_id"],
+                     row["change_target"])] = row
 
     tagged = []
     for key, row in dict_lookup.items():

@@ -22,14 +22,18 @@ replay decomposes into
      PageDiffer branch dispatch per pair; a 60k-revision page becomes 60k
      independent rows spread over the cluster.
   4. REVERT TAGGING (applyInPandas over (page, property, value) — far finer
-     than pages): the unmodified revert.tag_reverted_edits per group.
+     than pages): the grouped mode's revert.tag_reverted_edits over the
+     group's emitted value rows.  Every row of one value_change PK falls in
+     one group, so the stage emits the PK-deduplicated, flagged rows itself;
+     the group's five revert-stat counts ride on its first row as int
+     columns.
   5. ENTITY STATS: one conditional aggregation over the pair-diff output
      (counts + first/last revision timestamps), one over the annotated
      parse stream (the page list, timed revisions, W4 label/alias), the
-     revert-stat sums and a tiny P31-replay UDF over only the P31 statement
-     rows; three left joins onto the page list, and the payload JSON is
-     built in the JVM (to_json in ENTITY_STATS_SCHEMA order, the grouped
-     payload's key order).
+     revert-stat column sums and a tiny P31-replay UDF over only the P31
+     statement rows; three left joins onto the page list, and the payload
+     JSON is built in the JVM (to_json in ENTITY_STATS_SCHEMA order, the
+     grouped payload's key order).
 
 Output is row-identical to the grouped mode (tests/test_salted_parity.py
 proves equality on the edge-case corpus incl. the hot page and on the
@@ -40,19 +44,21 @@ Cost trade (measured, local[16], 8000-revision/61-statement hot page):
 grouped replays the page in ONE task (13.7 s end-to-end); salted runs the
 same replay as ~8000 independent pair rows across all cores (pair-diff
 stage 7.6 s) at the price of two snapshot shuffles + the label-stamp join
-(18.9 s end-to-end locally).  The stats side adds little on top: a warm
-count over the 60-revision edge corpus at local[4] runs 7 Spark jobs and 34
-tasks (28 jobs and 109 tasks while it was six joins fed by three count
-aggregations, plus a pandas payload writer).  The remaining sequential
-floor in BOTH modes is the revert scan of one (property, value) history —
-bounded by the 4-week
-window since revert.py's early exit.  On one shared box the shuffle tax
-outweighs the spread; on a real cluster the grouped mode's hot-page task
-bounds the whole stage (minutes of idle executors at 10^12 scale) while
-salted's critical path is the window-bounded tag scan only.  Round 4:
-``run_pipeline(mode='auto')`` (the default) probes max-revisions-per-page
-and flips to this mode above WIDIFF_SKEW_THRESHOLD (default 40k — the
-measured local[32] crossover; BENCH/BASELINE.md round-4 section).
+(18.9 s end-to-end locally).  The annotated parse stream is cached, so
+both the pair diff and the page aggregation read one parse of each input
+row.  The stats and tagging side adds little on top: a warm count over
+the 60-revision edge corpus at local[4] runs 13 Spark jobs and 61 tasks
+(15 and 74 while a PK window and a flags join deduplicated and re-tagged
+the value rows after the tag stage).  The remaining sequential floor in
+BOTH modes is the revert scan of one (property, value) history — bounded
+by the 4-week window since revert.py's early exit.  On one shared box the
+shuffle tax outweighs the spread; on a real cluster the grouped mode's
+hot-page task bounds the whole stage (minutes of idle executors at 10^12
+scale) while salted's critical path is the window-bounded tag scan only.
+Round 4: ``run_pipeline(mode='auto')`` (the default) probes
+max-revisions-per-page and flips to this mode above WIDIFF_SKEW_THRESHOLD
+(default 40k — the measured local[32] crossover; BENCH/BASELINE.md round-4
+section).
 """
 
 from __future__ import annotations
@@ -67,8 +73,8 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T
 from . import canonical as C
 from .config import DEFAULT_CONFIG, PipelineConfig
 from .diff import (PageDiffer, _UNIFIED_COLUMNS, _columnar_frame, _emit_rows,
-                   _hashable, _prep_revisions)
-from .revert import tag_reverted_edits
+                   _hashable, _prep_revisions, _table_const)
+from .revert import REVERT_STATS, tag_reverted_edits
 from .schema import ENTITY_STATS_SCHEMA, UNIFIED_SCHEMA
 
 
@@ -121,7 +127,7 @@ def annotate_parsed(parsed: DataFrame) -> DataFrame:
         for pdf in batches:
             keys, red, clean, alias_only, labels, aliases = [], [], [], [], [], []
             for snap, ok in zip(pdf["snapshot"], pdf["parse_ok"]):
-                digest = json.loads(snap) if ok and snap else None
+                digest = C.fast_json_loads(snap) if ok and snap else None
                 keys.append(state_key(digest))
                 r, c, a = _digest_flags(digest)
                 red.append(r)
@@ -152,25 +158,23 @@ def kept_pairs(annotated: DataFrame) -> DataFrame:
     the predecessor even if alias/sitelink-only; only NON-first alias-only
     revisions are skipped (and they never advance the predecessor, so they
     leave the comparison chain entirely)."""
-    page = ["repo", "path"]
-    cand0 = annotated.filter(F.col("parse_ok") & (~F.col("is_deleted")))
-    w0 = Window.partitionBy(*page).orderBy("commit")
-    cand0 = cand0.withColumn("__rn", F.row_number().over(w0))
-    chain = cand0.filter((F.col("__rn") == 1) | (~F.col("is_alias_only")))
-    w_cand = Window.partitionBy(*page).orderBy("commit")
-    chain = chain.withColumn("__prev_key", F.lag("state_key").over(w_cand)) \
-                 .withColumn("__first", F.row_number().over(w_cand) == 1)
-    kept = chain.filter(F.col("__first") | F.col("is_redirect")
-                        | F.col("is_cleaned")
-                        | (F.col("state_key") != F.col("__prev_key")))
-    w_kept = Window.partitionBy(*page).orderBy("commit")
+    w = Window.partitionBy("repo", "path").orderBy("commit")
+    cand = (annotated.filter(F.col("parse_ok") & (~F.col("is_deleted")))
+            .withColumn("__rn", F.row_number().over(w)))
+    # the first candidate heads the chain and is always kept, so row
+    # position, not a null lagged revision_id, marks the created-entity path
+    first = F.col("__rn") == 1
+    chain = cand.filter(first | (~F.col("is_alias_only")))
+    kept = (chain.withColumn("__prev_key", F.lag("state_key").over(w))
+            .filter(first | F.col("is_redirect") | F.col("is_cleaned")
+                    | (F.col("state_key") != F.col("__prev_key"))))
     return (kept
-            .withColumn("prev_snapshot", F.lag("snapshot").over(w_kept))
+            .withColumn("prev_snapshot", F.lag("snapshot").over(w))
             .withColumn("prev_revision_id",
-                        F.coalesce(F.lag("revision_id").over(w_kept),
-                                   F.lit(-1)))
-            .withColumn("is_first", F.lag("revision_id").over(w_kept).isNull())
-            .drop("__prev_key", "__first", "__rn"))
+                        F.when(first, F.lit(-1))
+                        .otherwise(F.lag("revision_id").over(w)))
+            .withColumn("is_first", first)
+            .drop("__prev_key", "__rn"))
 
 
 def make_pair_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):
@@ -179,7 +183,7 @@ def make_pair_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):
     Output = UNIFIED columns (entity_label left empty — stamped later from
     the page dim) + commit + emit_idx carriers for the downstream replay
     ordering (emit_idx = the row's position within its table's rows of the
-    pair); value rows additionally carry comment for the revert-tagging
+    pair); value rows carry their revision's comment for the revert-tagging
     stage.  Meta, user type and the revision row come from the PageDiffer
     code the grouped replay runs, the output columns from its emitter."""
     out_columns = _UNIFIED_COLUMNS + ["commit"]
@@ -208,11 +212,8 @@ def make_pair_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):
                 for table, rows in differ.table_rows().items():
                     if not rows:
                         continue
-                    const = {"table": table, "repo": rec["repo"],
-                             "commit": rec["commit"]}
-                    if table == "value_change":
-                        const["comment"] = rec["comment"]
-                    _emit_rows(out, rows, const)
+                    _emit_rows(out, rows, {"table": table, "repo": rec["repo"],
+                                           "commit": rec["commit"]})
                     emit_idx.extend(range(len(rows)))
             frame = _columnar_frame(out)
             frame["emit_idx"] = emit_idx
@@ -229,66 +230,34 @@ _PAIR_OUT_SCHEMA = T.StructType(
        T.StructField("emit_idx", T.IntegerType())])
 
 
+# tag-stage output = unified columns + the group's revert-stat counts, which
+# only its first row carries
+_TAG_OUT_SCHEMA = T.StructType(
+    list(UNIFIED_SCHEMA.fields)
+    + [T.StructField(c, T.IntegerType()) for c in REVERT_STATS])
+
+
 def _tag_udf(config: PipelineConfig):
     """Revert tagging per (repo, entity_id, property_id, value_id) group —
-    the unmodified sequential scan, on a key far finer than pages."""
-    flag_cols = ["is_reverted", "reversion", "reversion_timestamp",
-                 "revision_id_reversion"]
+    the grouped mode's tag_reverted_edits on a key far finer than pages.
+    Every row of one value_change PK falls in one group, so the PK dedup
+    happens here too: the group emits its tagged, deduplicated rows."""
+    out_columns = _UNIFIED_COLUMNS + list(REVERT_STATS)
 
-    def tag(key, pdf):
-        changes_by_pv = {}
-        value_rows = []
+    def tag(pdf):
         pdf = pdf.sort_values(["commit", "emit_idx"], kind="mergesort")
-        for rec in pdf.to_dict("records"):
-            pv_key = (rec["property_id"], rec["value_id"],
-                      rec["change_target"])
-            changes_by_pv.setdefault(pv_key, []).append({
-                "timestamp": rec["timestamp"],
-                "old_hash": rec["old_hash"] or "",
-                "new_hash": rec["new_hash"] or "",
-                "old_value": rec["old_value"],
-                "new_value": rec["new_value"],
-                "comment": rec["comment"] or "",
-                "change_target": rec["change_target"],
-                "revision_id": rec["revision_id"],
-                "action": rec["action"],
-            })
-            value_rows.append({
-                "_key": (rec["revision_id"], rec["property_id"],
-                         rec["value_id"], rec["change_target"]),
-                "revision_id": rec["revision_id"],
-                "property_id": rec["property_id"],
-                "value_id": rec["value_id"],
-                "change_target": rec["change_target"],
-            })
-        tagged, stats = tag_reverted_edits(changes_by_pv, value_rows,
+        rows = pdf.to_dict("records")
+        for r in rows:  # NaN -> None, as _prep_revisions does
+            if r["revision_id"] != r["revision_id"]:
+                r["revision_id"] = None
+        tagged, stats = tag_reverted_edits(rows,
                                            config.time_threshold_seconds)
-        rows = [{"revision_id": r["revision_id"],
-                 "property_id": r["property_id"],
-                 "value_id": r["value_id"],
-                 "change_target": r["change_target"],
-                 "is_reverted": r["is_reverted"],
-                 "reversion": r["reversion"],
-                 "reversion_timestamp": r["reversion_timestamp"],
-                 "revision_id_reversion": r["revision_id_reversion"],
-                 "repo": None, "entity_id": None, "stats_json": None}
-                for r in tagged]
-        # one marker row carries the group's revert-stat contributions
-        rows.append({"revision_id": None, "property_id": None,
-                     "value_id": None, "change_target": None,
-                     "is_reverted": None, "reversion": None,
-                     "reversion_timestamp": None,
-                     "revision_id_reversion": None,
-                     "repo": key[0], "entity_id": key[1],
-                     "stats_json": json.dumps(stats)})
-        return pd.DataFrame(rows)
+        out: dict = {c: [] for c in out_columns}
+        _emit_rows(out, tagged, _table_const("value_change"))
+        for c in REVERT_STATS:
+            out[c][0] = stats[c]
+        return _columnar_frame(out)
     return tag
-
-
-_TAG_SCHEMA = ("revision_id long, property_id int, value_id string, "
-               "change_target string, is_reverted int, reversion int, "
-               "reversion_timestamp string, revision_id_reversion long, "
-               "repo string, entity_id long, stats_json string")
 
 
 def _p31_replay_udf():
@@ -330,7 +299,8 @@ def extract_changes_salted(parsed: DataFrame,
     """Salted (pair-parallel) analog of diff.extract_changes: identical
     unified output stream, no per-page sequential stage on the hot path."""
     spark = parsed.sparkSession
-    annotated = annotate_parsed(parsed)
+    # read by the pair diff and by the page aggregation: parse once
+    annotated = annotate_parsed(parsed).persist()
     pairs = kept_pairs(annotated)
 
     # the pair window co-locates each page in ONE partition — exactly the
@@ -348,57 +318,17 @@ def extract_changes_salted(parsed: DataFrame,
      .mapInPandas(make_pair_diff_udf(config), schema=_PAIR_OUT_SCHEMA)
     diffed = diffed.persist()
 
-    # ---- revert tagging on (page, property, value) groups ----------------
+    # ---- revert tagging + PK dedup on (page, property, value) groups ----
+    page = ["repo", "entity_id"]
     value_rows = diffed.filter(F.col("table") == "value_change")
     tagged = (value_rows
-              .select("repo", "entity_id", "property_id", "value_id",
-                      "change_target", "action", "old_value", "new_value",
-                      "old_hash", "new_hash", "timestamp", "comment",
-                      "revision_id", "commit", "emit_idx")
-              .groupBy("repo", "entity_id", "property_id", "value_id")
-              .applyInPandas(_tag_udf(config), schema=_TAG_SCHEMA))
-    tagged = tagged.persist()
-    flags = tagged.filter(F.col("stats_json").isNull()) \
-        .select("revision_id", "property_id", "value_id", "change_target",
-                F.col("is_reverted").alias("__ir"),
-                F.col("reversion").alias("__rv"),
-                F.col("reversion_timestamp").alias("__rts"),
-                F.col("revision_id_reversion").alias("__rid"))
-    revert_stats = tagged.filter(F.col("stats_json").isNotNull()) \
-        .select("repo", "entity_id",
-                F.from_json("stats_json",
-                            "num_reverted_edits int, num_reversions int, "
-                            "num_reverted_edits_create int, "
-                            "num_reverted_edits_delete int, "
-                            "num_reverted_edits_update int").alias("s")) \
-        .groupBy("repo", "entity_id") \
-        .agg(*[F.sum(f"s.{c}").cast("int").alias(c) for c in
-               ("num_reverted_edits", "num_reversions",
-                "num_reverted_edits_create", "num_reverted_edits_delete",
-                "num_reverted_edits_update")])
-
-    # the grouped replay PK-dedups value rows last-emission-wins
-    # (revert.tag_reverted_edits dict_lookup) — duplicate statement ids make
-    # the created/new-pid/removed-pid paths emit the same PK twice; flags
-    # are keyed by PK so deduping after the join is equivalent.  Entity
-    # stats stay PRE-dedup (the reference counts at save_change time).
-    pk = ["revision_id", "property_id", "value_id", "change_target"]
-    w_pk = Window.partitionBy(*pk).orderBy(F.desc("commit"),
-                                           F.desc("emit_idx"))
-    value_tagged = (value_rows
-                    .withColumn("__pkr", F.row_number().over(w_pk))
-                    .filter(F.col("__pkr") == 1).drop("__pkr")
-                    .join(flags, pk, "left")
-                    .withColumn("is_reverted", F.coalesce("__ir", F.lit(0)))
-                    .withColumn("reversion", F.coalesce("__rv", F.lit(0)))
-                    .withColumn("reversion_timestamp", F.col("__rts"))
-                    .withColumn("revision_id_reversion", F.col("__rid"))
-                    .drop("__ir", "__rv", "__rts", "__rid")
-                    .withColumn("comment", F.lit(None).cast("string")))
+              .groupBy(*page, "property_id", "value_id")
+              .applyInPandas(_tag_udf(config), schema=_TAG_OUT_SCHEMA)
+              .persist())
+    revert_stats = tagged.groupBy(*page).agg(
+        *[F.sum(c).cast("int").alias(c) for c in REVERT_STATS])
 
     # ---- entity_stats: one aggregation per source, payload in the JVM ----
-    page = ["repo", "entity_id"]
-
     def cnt(cond):
         return F.sum(F.when(cond, 1).otherwise(0)).cast("int")
 
@@ -473,19 +403,13 @@ def extract_changes_salted(parsed: DataFrame,
                               F.lit("entity_stats").alias("table"))
 
     # ---- assemble the unified stream + stamp page entity_label -----------
-    def to_unified(df: DataFrame) -> DataFrame:
-        return df.select(*[
-            F.col(f.name) if f.name in df.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in UNIFIED_SCHEMA.fields])
-
     body = diffed.filter(F.col("table") != "value_change") \
                  .drop("commit", "emit_idx") \
-                 .unionByName(to_unified(value_tagged))
+                 .unionByName(tagged.drop(*REVERT_STATS))
     label_dim = pages.select(*page, F.col("entity_label").alias("__el"))
     body = (body.join(label_dim, page, "left")
             .withColumn("entity_label", F.col("__el")).drop("__el"))
-    out = body.unionByName(to_unified(stats_rows))
+    out = body.unionByName(stats_rows, allowMissingColumns=True)
     # cached intermediates, for the caller to release (PipelineResult)
-    out.widiff_caches = [diffed, tagged]
+    out.widiff_caches = [annotated, diffed, tagged]
     return out
