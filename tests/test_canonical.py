@@ -179,42 +179,6 @@ class TestDecode:
             datetime(2024, 3, 1, 12)
 
 
-class TestFastCompactJson:
-    """The value_hash fast-path serializer must be byte-identical to
-    json.dumps(separators=(',',':')) wherever it claims coverage (it may
-    return None — the fallback is the definition)."""
-
-    def test_fuzzed_byte_identity(self):
-        import json
-        import random
-
-        from widiff_spark.canonical import _fast_compact_json
-
-        rng = random.Random(8)
-
-        def rand_val(depth=0):
-            r = rng.random()
-            if depth > 3 or r < 0.3:
-                return rng.choice(
-                    ["plain ascii", "naïve", 'with "quote"', "tab\there",
-                     "", "x" * 40, 123, -5, 0, True, False, None, 1.5, -0.0,
-                     0.1, 1e300, float("inf"), float("nan"), 10 ** 30])
-            if r < 0.6:
-                return {rng.choice(["value", "type", "time", "amount",
-                                    "latitude", "über"]):
-                        rand_val(depth + 1) for _ in range(rng.randint(0, 4))}
-            return [rand_val(depth + 1) for _ in range(rng.randint(0, 4))]
-
-        hits = 0
-        for _ in range(20000):
-            v = rand_val()
-            got = _fast_compact_json(v)
-            if got is not None:
-                hits += 1
-                assert got == json.dumps(v, separators=(",", ":")), v
-        assert hits > 1000  # the fast path actually fires
-
-
 class TestStripTimeLeadingZeros:
     """The pure-string time-zero stripper must match the original regex
     substitution byte-for-byte on every input."""

@@ -58,6 +58,42 @@ class TestCheckpoint:
         for b in r3["processed_buckets"]:
             assert ckpt3.loc[b, "run_id"] == "r3"
 
+    def test_quarantine_written_per_bucket(self, spark, tmp_path):
+        """run_incremental writes the quarantine table by default,
+        partitioned by entity bucket: a delta touching one bucket leaves
+        the other buckets' quarantined rows in place."""
+        from widiff_spark import parse
+
+        def broken(path, rid):
+            return fixtures.row(path, rid, '{"meta": {"revision_id": %d}, '
+                                '"claims": {broken' % rid)
+
+        def n_quarantined(docs):
+            return parse.quarantine(parse.parse_documents(docs)).count()
+
+        out = str(tmp_path / "warehouse")
+        docs = fixtures.edge_case_corpus(spark, include_hot_page=False) \
+            .unionByName(spark.createDataFrame(pd.DataFrame(
+                [broken(f"Q{880 + i}", 8800 + i) for i in range(8)]),
+                schema=fixtures.DOCUMENTS_SCHEMA))
+        run_incremental(spark, docs, out, run_id="r1")
+        q1 = spark.read.parquet(f"{out}/quarantine").collect()
+        assert len(q1) == n_quarantined(docs)
+        assert len({r["entity_bucket"] for r in q1}) >= 2
+
+        docs2 = docs.unionByName(spark.createDataFrame(
+            pd.DataFrame([broken("Q880", 8900)]),
+            schema=fixtures.DOCUMENTS_SCHEMA))
+        r2 = run_incremental(spark, docs2, out, run_id="r2")
+        assert len(r2["processed_buckets"]) == 1
+        q2 = spark.read.parquet(f"{out}/quarantine").collect()
+        assert len(q2) == n_quarantined(docs2) == len(q1) + 1
+
+        def untouched(rows):
+            return sorted(r for r in rows
+                          if r["entity_bucket"] not in r2["processed_buckets"])
+        assert untouched(q1) and untouched(q2) == untouched(q1)
+
     def test_salted_run_releases_its_caches(self, spark, tmp_path):
         """A salted run_incremental leaves no cached RDD behind: the
         pair-diff and revert-tag intermediates go with the result."""

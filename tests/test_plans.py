@@ -237,6 +237,24 @@ class TestDiffShuffle:
                      if python.search(a["name"])]
             assert not above, above
 
+    def test_no_python_stage_between_parse_and_keep_window(self, spark):
+        """The salted keep window reads the parse stream's own keep
+        columns: the only Python stage below it is the parse itself."""
+        from widiff_spark import parse, salted
+        p = plan(salted.extract_changes_salted(parse.parse_documents(
+            fixtures.edge_case_corpus(spark, include_hot_page=False))))
+        args = {int(i): m.group(1) for i, body in re.findall(
+                    r"^\((\d+)\) [^\n]*\n(.*?)(?:\n\n|\Z)", p, re.M | re.S)
+                for m in [re.search(r"^Arguments: (.*)$", body, re.M)] if m}
+        keep = [i for i, a in args.items()
+                if a.startswith("[lag(state_key#")]
+        assert len(keep) == 1, "no keep window over state_key"
+        python = re.compile(r"Pandas|Python|Arrow")
+        below = {n["id"] for n in plan_tree(p) if python.search(n["name"])
+                 and any(a["id"] == keep[0] for a in ancestors(n))}
+        assert len(below) == 1, below
+        assert args[below.pop()].startswith("_parse_batches(")
+
     def test_salted_revert_tag_emits_deduplicated_rows(self, spark):
         """The salted revert-tag stage emits the PK-deduplicated, flagged
         value rows and the revert stats as columns: no window partitioned

@@ -221,9 +221,9 @@ def test_null_revision_id_parity(spark):
     _assert_identical(spark, docs)
 
 
-def test_salted_run_parses_each_row_once(spark, monkeypatch):
-    """The pair diff and the page aggregation read one materialization of
-    the parsed stream: a salted run parses each input row once."""
+def _parsed_rows_per_run(spark, monkeypatch, mode: str) -> tuple[int, int]:
+    """(input rows, rows the parse UDF emitted) over one run_pipeline that
+    reads value_change, entity_stats and quarantine."""
     from widiff_spark import pipeline
 
     docs = fixtures.edge_case_corpus(spark, include_hot_page=True,
@@ -238,14 +238,30 @@ def test_salted_run_parses_each_row_once(spark, monkeypatch):
             yield pdf
 
     monkeypatch.setattr(parse, "_parse_batches", counting)
-    res = pipeline.run_pipeline(spark, docs, mode="salted")
+    res = pipeline.run_pipeline(spark, docs, mode=mode)
     try:
+        assert res.mode == mode
         res.tables["value_change"].count()
         res.tables["entity_stats"].count()
+        assert res.tables["quarantine"].count() > 0
     finally:
         res.unpersist()
         docs.unpersist()
-    assert parsed_rows.value == n_rows
+    return n_rows, parsed_rows.value
+
+
+def test_salted_run_parses_each_row_once(spark, monkeypatch):
+    """The keep window, the page aggregation and the quarantine table read
+    one materialization of the parsed stream: a salted run parses each
+    input row once."""
+    n_rows, parsed = _parsed_rows_per_run(spark, monkeypatch, "salted")
+    assert parsed == n_rows
+
+
+def test_grouped_run_parses_each_row_once(spark, monkeypatch):
+    """The grouped diff and the quarantine table share one parse."""
+    n_rows, parsed = _parsed_rows_per_run(spark, monkeypatch, "grouped")
+    assert parsed == n_rows
 
 
 def test_keep_decision_matches_changed_flag(spark):
@@ -266,7 +282,7 @@ def test_keep_decision_matches_changed_flag(spark):
     docs = spark.createDataFrame(pd.DataFrame(rows),
                                  schema=fixtures.DOCUMENTS_SCHEMA)
     parsed = parse.parse_documents(docs)
-    kept = salted.kept_pairs(salted.annotate_parsed(parsed))
+    kept = salted.kept_pairs(parsed)
     assert kept.count() == 1
     unified = salted.extract_changes_salted(parsed).toPandas()
     assert (unified["table"] == "revision").sum() == 1

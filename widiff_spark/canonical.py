@@ -53,20 +53,24 @@ def fast_json_loads(s):
     return json.loads(s)
 
 
-def fast_json_dumps_compact(obj) -> str:
+def fast_json_dumps_compact(obj, sort_keys: bool = False) -> str:
     """Compact ``json.dumps(ensure_ascii=False, separators=(',', ':'))``
-    with an orjson fast path — for the internal digest transport ONLY
-    (consumers parse it back; nothing hashes or byte-compares it).
+    with an orjson fast path — for internal values ONLY: the digest
+    transport (consumers parse it back) and parse.state_key (whose hashes
+    are only compared with each other, never with the reference's bytes).
 
     Falls back to the stdlib for anything orjson cannot serialize
     (non-string keys, >64-bit ints, inf/nan floats).
     """
     if _orjson is not None:
         try:
-            return _orjson.dumps(obj).decode("utf-8")
+            return _orjson.dumps(
+                obj, option=_orjson.OPT_SORT_KEYS if sort_keys else None
+            ).decode("utf-8")
         except Exception:
             pass
-    return json.dumps(obj, ensure_ascii=False, separators=(",", ":"))
+    return json.dumps(obj, ensure_ascii=False, separators=(",", ":"),
+                      sort_keys=sort_keys)
 
 # --- change-type vocabulary (reference scripts/const.py:51-65) ---------------
 CREATE_PROPERTY_VALUE = "CREATE_PROPERTY_VALUE"
@@ -161,67 +165,19 @@ def homogenize_datavalue(snak: dict) -> dict:
     return snak
 
 
-def _fast_compact_json(o) -> str | None:
-    """Byte-identical fast path for ``json.dumps(o, separators=(',',':'))``
-    (default ensure_ascii) over the common datavalue shapes: exact-type
-    str/int/bool/None/finite-float/dict/list with ASCII escape-free
-    strings.  Returns None for anything uncertain (non-ASCII, escapes,
-    non-finite floats, exotic types) so the caller falls back to the real
-    encoder — the fallback IS the definition; this only skips the encoder
-    walk when the bytes are provably the same."""
-    t = type(o)
-    if t is str:
-        if o.isascii() and not _JSON_STR_ESCAPE.search(o):
-            return '"' + o + '"'
-        return None
-    if t is int:
-        return str(o)
-    if t is bool:
-        return "true" if o else "false"
-    if o is None:
-        return "null"
-    if t is float:
-        # json's floatstr uses repr() for finite floats
-        return repr(o) if o == o and o not in (float("inf"),
-                                               float("-inf")) else None
-    if t is dict:
-        parts = []
-        for k, v in o.items():
-            if type(k) is not str or not k.isascii() \
-                    or _JSON_STR_ESCAPE.search(k):
-                return None
-            vs = _fast_compact_json(v)
-            if vs is None:
-                return None
-            parts.append('"' + k + '":' + vs)
-        return "{" + ",".join(parts) + "}"
-    if t is list:
-        parts = []
-        for v in o:
-            vs = _fast_compact_json(v)
-            if vs is None:
-                return None
-            parts.append(vs)
-        return "[" + ",".join(parts) + "]"
-    return None
-
-
 def value_hash(hom_snak: dict | None) -> str | None:
     """sha1 identity of a homogenized snak's datavalue.
 
     For ``novalue``/``somevalue`` snaks the snak's own ``hash`` field is the
     identity.  The dump preserves *insertion order* of the datavalue keys —
-    the same bytes Python's ``json.dumps`` with compact separators produces
-    (via the fast path above when provably identical).
+    the same bytes Python's ``json.dumps`` with compact separators produces.
     Reference: page_parser.py:1032-1082.
     """
     if not hom_snak:
         return None
     if hom_snak.get("snaktype") in (NO_VALUE, SOME_VALUE):
         return hom_snak.get("hash")
-    payload = _fast_compact_json(hom_snak["datavalue"])
-    if payload is None:
-        payload = json.dumps(hom_snak["datavalue"], separators=(",", ":"))
+    payload = json.dumps(hom_snak["datavalue"], separators=(",", ":"))
     return hashlib.sha1(payload.encode("utf-8")).hexdigest()
 
 

@@ -107,8 +107,7 @@ def input_watermarks(docs: DataFrame,
     return (docs.filter(F.col("path").rlike(r"^Q\d+$"))
             .groupBy("bucket")
             .agg(F.max("commit").alias("input_max_commit"),
-                 F.count("*").alias("n_input_rows"),
-                 F.approx_count_distinct("path").alias("approx_pages")))
+                 F.count("*").alias("n_input_rows")))
 
 
 def pending_buckets(docs: DataFrame, spark: SparkSession, path: str,

@@ -39,9 +39,9 @@ def _last_nonempty(col, commit_col: str = "commit"):
                                  col.alias("v"))))["v"]
 
 
-def entity_labels(parsed: DataFrame) -> DataFrame:
-    """Per-entity (qid, numeric_id, label, alias, description) dim
-    (ExtractLabelsProperties.java:111-146) from the parsed revision table."""
+def _label_dim(parsed: DataFrame, id_name: str) -> DataFrame:
+    """Per-page (repo, <id_name>, numeric_id, label, alias, description):
+    the last non-empty value of each field by commit."""
     # one json_tuple parse for all three top-level fields (the optimizer
     # does NOT merge the three equivalent get_json_object calls — verified
     # on the optimized plan — so this removes two full JSON parses of the
@@ -57,11 +57,17 @@ def entity_labels(parsed: DataFrame) -> DataFrame:
                  _last_nonempty(F.col("_ja")).alias("_a"),
                  _last_nonempty(F.col("_jd")).alias("_d"))
             .select("repo",
-                    F.col("path").alias("qid"),
+                    F.col("path").alias(id_name),
                     F.col("entity_id").alias("numeric_id"),
                     F.coalesce("_l", F.lit("")).alias("label"),
                     F.coalesce("_a", F.lit("")).alias("alias"),
                     F.coalesce("_d", F.lit("")).alias("description")))
+
+
+def entity_labels(parsed: DataFrame) -> DataFrame:
+    """Per-entity (qid, numeric_id, label, alias, description) dim
+    (ExtractLabelsProperties.java:111-146) from the parsed revision table."""
+    return _label_dim(parsed, "qid")
 
 
 def type_pairs(value_change: DataFrame,
@@ -89,21 +95,7 @@ def property_labels(parsed: DataFrame) -> DataFrame:
     pre-extracted CSV side input.  Same last-non-empty-by-commit aggregate
     as entity_labels, over a ``parse_documents(..., namespace='property')``
     stream (paths shaped ``P<digits>``)."""
-    proj = parsed.select(
-        "repo", "path", "entity_id", "commit",
-        F.json_tuple("snapshot", "label", "alias", "description")
-        .alias("_jl", "_ja", "_jd"))  # one parse (see entity_labels)
-    return (proj
-            .groupBy("repo", "path", "entity_id")
-            .agg(_last_nonempty(F.col("_jl")).alias("_l"),
-                 _last_nonempty(F.col("_ja")).alias("_a"),
-                 _last_nonempty(F.col("_jd")).alias("_d"))
-            .select("repo",
-                    F.col("path").alias("pid"),
-                    F.col("entity_id").alias("numeric_id"),
-                    F.coalesce("_l", F.lit("")).alias("label"),
-                    F.coalesce("_a", F.lit("")).alias("alias"),
-                    F.coalesce("_d", F.lit("")).alias("description")))
+    return _label_dim(parsed, "pid")
 
 
 def entity_labels_fast(docs: DataFrame) -> DataFrame:

@@ -11,6 +11,13 @@ general_analysis.py:367-369) to a single worker; here the expensive JSON +
 sha1 work for that page spreads over the whole cluster and only the
 lightweight replay is grouped.
 
+Next to the digest, each row carries salted mode's keep projection
+(salted.kept_pairs), computed from the digest while it is still in memory,
+so no later stage decodes a snapshot to decide what to keep::
+
+    state_key      # sha1 of the comparable projection (see ``state_key``)
+    is_redirect, is_cleaned, is_alias_only   # see ``keep_flags``
+
 Digest format (one JSON string per revision), consumed by diff.py::
 
     {redirect, redirect_qid, has_labels, has_descs, has_claims,
@@ -35,6 +42,7 @@ Digest format (one JSON string per revision), consumed by diff.py::
 
 from __future__ import annotations
 
+import hashlib
 import json
 from typing import Iterator
 
@@ -191,6 +199,55 @@ def digest_revision(content: str, lang: str) -> tuple[dict | None, dict | None, 
     return meta, digest, None
 
 
+def state_key(digest: dict | None) -> str | None:
+    """sha1 of the comparable projection (label, description, claims as
+    {pid: {sid: [value_hash, rank, qualifier-hash-sets,
+    reference-key-sets]}}) — exactly the fields the reference's
+    ``changed`` predicate reads (page_parser.py:1890-1953).
+
+    Excludes aliases/sitelinks (alias-only revisions never set ``changed``),
+    raw_* fields (first-revision-only), and datatype metadata (covered by
+    the statement value_hash — metadata lives inside the hashed datavalue).
+    Duplicate statement ids collapse last-wins exactly like the reference's
+    ``{s['id']: s}`` dicts (page_parser.py:1758-1781).
+    """
+    if digest is None:
+        return None
+    claims_proj = {}
+    for pid, stmts in digest["claims"].items():
+        by_sid = {}
+        for s in stmts:
+            by_sid[str(s["sid"])] = [
+                s["hash"], s["rank"],
+                {qp: sorted(h for h, _v, _d in lst)
+                 for qp, lst in (s["quals"] or {}).items()},
+                sorted([rh, rp, vh] for rh, rp, vh, _v, _d in (s["refs"] or [])),
+            ]
+        claims_proj[pid] = by_sid
+    proj = {"label": digest["label"], "description": digest["description"],
+            "claims": claims_proj}
+    return hashlib.sha1(C.fast_json_dumps_compact(proj, sort_keys=True)
+                        .encode("utf-8")).hexdigest()
+
+
+def keep_flags(digest: dict | None) -> tuple[bool, bool, bool]:
+    """(is_redirect, is_cleaned, is_alias_only) from a digest."""
+    if digest is None:
+        return False, False, False
+    if digest["redirect"]:
+        return True, False, False
+    if not digest["has_claims"] and not digest["has_labels"] \
+            and not digest["has_descs"]:
+        if digest["has_aliases"] or digest["has_sitelinks"]:
+            return False, False, True
+        return False, True, False
+    return False, False, False
+
+
+_BOOL_COLUMNS = ("is_deleted", "parse_ok", "is_redirect", "is_cleaned",
+                 "is_alias_only")
+
+
 def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     cols = [f.name for f in PARSED_SCHEMA.fields]
     for pdf in batches:
@@ -224,16 +281,21 @@ def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             ap["snapshot"](C.fast_json_dumps_compact(digest)
                            if digest is not None else None)
             ap["error"](error)
+            ap["state_key"](state_key(digest))
+            redirect, cleaned, alias_only = keep_flags(digest)
+            ap["is_redirect"](redirect)
+            ap["is_cleaned"](cleaned)
+            ap["is_alias_only"](alias_only)
         # pre-built ndarrays skip pandas' per-column inference and block
         # consolidation (same pattern as diff.bucket_diff); the
         # nullable-Int64 casts behave identically from object columns.
-        # is_deleted/parse_ok stay real bool dtype (they are never null) —
+        # The flag columns stay real bool dtype (they are never null) —
         # pandas consumers rely on boolean `~`, which on object-dtype
         # Python bools is arithmetic invert.
         n = len(out["repo"])
         data = {}
         for c in cols:
-            if c in ("is_deleted", "parse_ok"):
+            if c in _BOOL_COLUMNS:
                 data[c] = np.array(out[c], dtype=bool)
             else:
                 arr = np.empty(n, dtype=object)

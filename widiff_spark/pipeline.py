@@ -70,16 +70,18 @@ def build_session(app_name: str = "widiff", master: str | None = None,
 class PipelineResult:
     """Lazy handles to every output table; `unified` is persisted so each
     split reads the diff output once instead of re-running the UDF.
-    ``unpersist`` also releases the diff's own cached intermediates (the
-    salted mode hands them over as ``unified.widiff_caches``)."""
+    ``caches`` holds the other cached frames — the parse stream, which the
+    diff and the quarantine table both read, and the salted mode's own
+    intermediates (``unified.widiff_caches``); ``unpersist`` releases them
+    all."""
     unified: DataFrame
     tables: dict[str, DataFrame] = field(default_factory=dict)
     mode: str = "grouped"          # execution mode actually chosen
     max_page_revisions: int = 0    # the auto probe's measurement (0 = not probed)
+    caches: list[DataFrame] = field(default_factory=list)
 
     def unpersist(self):
-        self.unified.unpersist()
-        for df in getattr(self.unified, "widiff_caches", []):
+        for df in [self.unified, *self.caches]:
             df.unpersist()
 
 
@@ -143,7 +145,10 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
     scholarly = scholarly if scholarly is not None \
         else fixtures.cohort_types_df(spark, "scholarly")
 
+    # read by the diff and by the quarantine table: parse once
     parsed = parse.parse_documents(docs)
+    if persist:
+        parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
     if mode == "salted":
         from . import salted
         unified = salted.extract_changes_salted(parsed, config)
@@ -188,8 +193,10 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
                 tables["value_change"]).items():
             tables[fname] = fdf
 
-    return PipelineResult(unified=unified, tables=tables, mode=mode,
-                          max_page_revisions=max_page_revisions)
+    return PipelineResult(
+        unified=unified, tables=tables, mode=mode,
+        max_page_revisions=max_page_revisions,
+        caches=[parsed, *getattr(unified, "widiff_caches", [])])
 
 
 def run_incremental(spark: SparkSession, docs: DataFrame, output_path: str,
@@ -202,7 +209,9 @@ def run_incremental(spark: SparkSession, docs: DataFrame, output_path: str,
     Only buckets whose input advanced past the recorded high-water mark are
     re-processed; their table partitions are overwritten in place; the
     checkpoint table gains one lineage row (pages/revisions/triples counts)
-    per bucket.  Re-running on unchanged input is a no-op.
+    per bucket.  Re-running on unchanged input is a no-op.  The default
+    table list includes ``quarantine``, so undecodable revisions land in a
+    table rather than vanishing.
 
     ``mode`` passes through to ``run_pipeline``.  NOTE ``'auto'`` probes
     page skew with a real aggregation job over the bucket-filtered input
@@ -217,11 +226,15 @@ def run_incremental(spark: SparkSession, docs: DataFrame, output_path: str,
 
     subset = checkpoint.filter_to_buckets(docs, todo)
     res = run_pipeline(spark, subset, config, mode=mode)
-    wanted = tables or (CHANGE_TABLES + ["entity_stats"])
+    wanted = tables or (CHANGE_TABLES + ["entity_stats", "quarantine"])
     locations = {}
     for name in wanted:
-        locations[name] = materialize.write_table(
-            res.tables[name], output_path, name)
+        df = res.tables[name]
+        if name == "quarantine":
+            # no entity_id column: the same bucket, derived from the path,
+            # so a redo overwrites exactly the buckets it re-parsed
+            df = df.withColumn("entity_bucket", checkpoint.bucket_col())
+        locations[name] = materialize.write_table(df, output_path, name)
     lineage = checkpoint.lineage_from_unified(res.unified)
     checkpoint.record(spark, output_path, docs, lineage, run_id,
                       buckets=todo)

@@ -6,16 +6,19 @@ reference's own sandbox-entity skew, general_analysis.py:367-369) pins a
 single core for the whole replay.  This module removes that bound: the page
 replay decomposes into
 
-  1. KEEP decision (row-parallel window):  a revision advances the diff
-     predecessor iff it is the page's first parse-ok revision, a redirect, a
-     cleaned (fully emptied) revision, or its *comparable projection* differs
-     from the previous candidate's.  The projection — (label, description,
-     claims as {pid: {sid: [value_hash, rank, qualifier-hash-sets,
-     reference-key-sets]}}) — captures EXACTLY the reference's ``changed``
-     predicate (page_parser.py:1890-1953): every setter of ``changed`` reads
-     only projected fields, and projection equality is transitive, so
-     lag-dedup against the previous *candidate* equals dedup against the
-     previous *kept* revision.
+  1. KEEP decision (a window straight over the parse stream):  a revision
+     advances the diff predecessor iff it is the page's first parse-ok
+     revision, a redirect, a cleaned (fully emptied) revision, or its
+     *comparable projection* differs from the previous candidate's.  The
+     parse computes the projection's key and the three flags from the
+     digest it has just built (parse.state_key / parse.keep_flags), so no
+     stage decodes a snapshot before this window.  The projection —
+     (label, description, claims as {pid: {sid: [value_hash, rank,
+     qualifier-hash-sets, reference-key-sets]}}) — captures EXACTLY the
+     reference's ``changed`` predicate (page_parser.py:1890-1953): every
+     setter of ``changed`` reads only projected fields, and projection
+     equality is transitive, so lag-dedup against the previous *candidate*
+     equals dedup against the previous *kept* revision.
   2. PAIR construction (one window shuffle): lag(snapshot) over kept
      revisions per page — each output row carries (prev, curr).
   3. PAIR DIFF (mapInPandas, row-parallel — the skew killer): the same
@@ -28,8 +31,9 @@ replay decomposes into
      the group's five revert-stat counts ride on its first row as int
      columns.
   5. ENTITY STATS: one conditional aggregation over the pair-diff output
-     (counts + first/last revision timestamps), one over the annotated
-     parse stream (the page list, timed revisions, W4 label/alias), the
+     (counts + first/last revision timestamps), one over the parse stream
+     (the page list, timed revisions, and the W4 label/alias that
+     ``json_tuple`` reads from the snapshot in the JVM), the
      revert-stat column sums and a tiny P31-replay UDF over only the P31
      statement rows; three left joins onto the page list, and the payload
      JSON is built in the JVM (to_json in ENTITY_STATS_SCHEMA order, the
@@ -44,12 +48,17 @@ Cost trade (measured, local[16], 8000-revision/61-statement hot page):
 grouped replays the page in ONE task (13.7 s end-to-end); salted runs the
 same replay as ~8000 independent pair rows across all cores (pair-diff
 stage 7.6 s) at the price of two snapshot shuffles + the label-stamp join
-(18.9 s end-to-end locally).  The annotated parse stream is cached, so
-both the pair diff and the page aggregation read one parse of each input
-row.  The stats and tagging side adds little on top: a warm count over
-the 60-revision edge corpus at local[4] runs 13 Spark jobs and 61 tasks
-(15 and 74 while a PK window and a flags join deduplicated and re-tagged
-the value rows after the tag stage).  The remaining sequential floor in
+(18.9 s end-to-end locally).  The parse stream is cached (run_pipeline
+caches it in both modes; an uncached input is cached here), so the keep
+window, the page aggregation and the quarantine table read one parse of
+each input row, and no Python stage sits between the parse and the keep
+window.  The keep key costs the parse about a fifth more CPU in both
+modes (it hashes the in-memory digest); in exchange salted mode decodes
+a snapshot only in the pair diff.  The stats and tagging side
+adds little on top: a warm count over the 60-revision edge corpus at
+local[4] runs 13 Spark jobs and 61 tasks (15 and 74 while a PK window
+and a flags join deduplicated and re-tagged the value rows after the tag
+stage).  The remaining sequential floor in
 BOTH modes is the revert scan of one (property, value) history — bounded
 by the 4-week window since revert.py's early exit.  On one shared box the
 shuffle tax outweighs the spread; on a real cluster the grouped mode's
@@ -63,7 +72,6 @@ section).
 
 from __future__ import annotations
 
-import hashlib
 import json
 from typing import Iterator
 
@@ -78,80 +86,9 @@ from .revert import REVERT_STATS, tag_reverted_edits
 from .schema import ENTITY_STATS_SCHEMA, UNIFIED_SCHEMA
 
 
-def state_key(digest: dict | None) -> str | None:
-    """sha1 of the comparable projection (see module docstring).
-
-    Excludes aliases/sitelinks (alias-only revisions never set ``changed``),
-    raw_* fields (first-revision-only), and datatype metadata (covered by
-    the statement value_hash — metadata lives inside the hashed datavalue).
-    Duplicate statement ids collapse last-wins exactly like the reference's
-    ``{s['id']: s}`` dicts (page_parser.py:1758-1781).
-    """
-    if digest is None:
-        return None
-    claims_proj = {}
-    for pid, stmts in digest["claims"].items():
-        by_sid = {}
-        for s in stmts:
-            by_sid[str(s["sid"])] = [
-                s["hash"], s["rank"],
-                {qp: sorted(h for h, _v, _d in lst)
-                 for qp, lst in (s["quals"] or {}).items()},
-                sorted([rh, rp, vh] for rh, rp, vh, _v, _d in (s["refs"] or [])),
-            ]
-        claims_proj[pid] = by_sid
-    proj = {"label": digest["label"], "description": digest["description"],
-            "claims": claims_proj}
-    return hashlib.sha1(json.dumps(proj, sort_keys=True)
-                        .encode("utf-8")).hexdigest()
-
-
-def _digest_flags(digest: dict | None) -> tuple[bool, bool, bool]:
-    """(is_redirect, is_cleaned, is_alias_only) from a digest."""
-    if digest is None:
-        return False, False, False
-    if digest["redirect"]:
-        return True, False, False
-    if not digest["has_claims"] and not digest["has_labels"] \
-            and not digest["has_descs"]:
-        if digest["has_aliases"] or digest["has_sitelinks"]:
-            return False, False, True
-        return False, True, False
-    return False, False, False
-
-
-def annotate_parsed(parsed: DataFrame) -> DataFrame:
-    """Add the salted-mode row-parallel columns to the parsed stream:
-    state_key / is_redirect / is_cleaned / is_alias_only / w4 label+alias."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys, red, clean, alias_only, labels, aliases = [], [], [], [], [], []
-            for snap, ok in zip(pdf["snapshot"], pdf["parse_ok"]):
-                digest = C.fast_json_loads(snap) if ok and snap else None
-                keys.append(state_key(digest))
-                r, c, a = _digest_flags(digest)
-                red.append(r)
-                clean.append(c)
-                alias_only.append(a)
-                labels.append((digest or {}).get("label") or "")
-                aliases.append((digest or {}).get("alias") or "")
-            pdf = pdf.copy()
-            pdf["state_key"] = keys
-            pdf["is_redirect"] = red
-            pdf["is_cleaned"] = clean
-            pdf["is_alias_only"] = alias_only
-            pdf["w4_label"] = labels
-            pdf["w4_alias"] = aliases
-            yield pdf
-    schema = (", ".join(f"{f.name} {f.dataType.simpleString()}"
-                        for f in parsed.schema.fields)
-              + ", state_key string, is_redirect boolean, is_cleaned boolean,"
-                " is_alias_only boolean, w4_label string, w4_alias string")
-    return parsed.mapInPandas(run, schema=schema)
-
-
-def kept_pairs(annotated: DataFrame) -> DataFrame:
-    """Candidate filter + keep decision + (prev, curr) pairing windows.
+def kept_pairs(parsed: DataFrame) -> DataFrame:
+    """Candidate filter + keep decision + (prev, curr) pairing windows over
+    the parse stream's keep projection (state_key and the three flags).
 
     The page's FIRST parse-ok revision takes the created-entity path before
     any branch dispatch (page_parser.py:1890-1893) — it is kept and becomes
@@ -159,7 +96,7 @@ def kept_pairs(annotated: DataFrame) -> DataFrame:
     revisions are skipped (and they never advance the predecessor, so they
     leave the comparison chain entirely)."""
     w = Window.partitionBy("repo", "path").orderBy("commit")
-    cand = (annotated.filter(F.col("parse_ok") & (~F.col("is_deleted")))
+    cand = (parsed.filter(F.col("parse_ok") & (~F.col("is_deleted")))
             .withColumn("__rn", F.row_number().over(w)))
     # the first candidate heads the chain and is always kept, so row
     # position, not a null lagged revision_id, marks the created-entity path
@@ -300,8 +237,9 @@ def extract_changes_salted(parsed: DataFrame,
     unified output stream, no per-page sequential stage on the hot path."""
     spark = parsed.sparkSession
     # read by the pair diff and by the page aggregation: parse once
-    annotated = annotate_parsed(parsed).persist()
-    pairs = kept_pairs(annotated)
+    if not parsed.is_cached:
+        parsed = parsed.persist()
+    pairs = kept_pairs(parsed)
 
     # the pair window co-locates each page in ONE partition — exactly the
     # skew this mode exists to break.  Range-repartition on (page, commit):
@@ -379,7 +317,10 @@ def extract_changes_salted(parsed: DataFrame,
     def last_nonempty(c):
         return F.max_by(c, F.when(ok & (F.col(c) != ""), F.col("commit")))
 
-    pages = annotated.groupBy(*page).agg(
+    pages = parsed.select(
+        *page, "commit", "parse_ok", "is_deleted",
+        F.json_tuple("snapshot", "label", "alias")
+        .alias("w4_label", "w4_alias")).groupBy(*page).agg(
         cnt(ok).alias("num_revisions_timed"),
         F.coalesce(last_nonempty("w4_label"), last_nonempty("w4_alias"),
                    F.lit("")).alias("entity_label"))
@@ -411,5 +352,5 @@ def extract_changes_salted(parsed: DataFrame,
             .withColumn("entity_label", F.col("__el")).drop("__el"))
     out = body.unionByName(stats_rows, allowMissingColumns=True)
     # cached intermediates, for the caller to release (PipelineResult)
-    out.widiff_caches = [annotated, diffed, tagged]
+    out.widiff_caches = [parsed, diffed, tagged]
     return out

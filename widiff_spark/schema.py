@@ -25,7 +25,9 @@ DOCUMENTS_SCHEMA = T.StructType([
 # parse.py output: one row per revision, content digested to a canonical
 # snapshot JSON (claims pre-hashed, labels normalized).  Bad rows keep
 # parse_ok = false + error (the quarantine channel replacing the reference's
-# logs/error_revision_text.txt, page_parser.py:168-187).
+# logs/error_revision_text.txt, page_parser.py:168-187).  The last four
+# columns are salted mode's keep projection (parse.state_key /
+# parse.keep_flags): null key and all-false flags on rows without a digest.
 # ---------------------------------------------------------------------------
 PARSED_SCHEMA = T.StructType([
     T.StructField("repo", T.StringType()),
@@ -42,6 +44,10 @@ PARSED_SCHEMA = T.StructType([
     T.StructField("parse_ok", T.BooleanType()),
     T.StructField("snapshot", T.StringType()),
     T.StructField("error", T.StringType()),
+    T.StructField("state_key", T.StringType()),
+    T.StructField("is_redirect", T.BooleanType()),
+    T.StructField("is_cleaned", T.BooleanType()),
+    T.StructField("is_alias_only", T.BooleanType()),
 ])
 
 # ---------------------------------------------------------------------------
