@@ -4,6 +4,7 @@ scale nobody has to know to flip the salted switch by hand."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from widiff_spark import fixtures
@@ -65,3 +66,35 @@ class TestAutoPipeline:
         res = run_pipeline(spark, docs, mode="grouped", persist=False)
         assert res.mode == "grouped" and res.max_page_revisions == 0
         res.unpersist()
+
+
+class TestIncrementalMode:
+    @pytest.mark.parametrize("threshold,mode", [(50, "salted"),
+                                                (1000, "grouped")])
+    def test_one_input_pass_per_call(self, spark, tmp_path, monkeypatch,
+                                     threshold, mode):
+        """run_incremental(mode='auto') picks the mode from the checkpoint's
+        input statistics: no probe job, one input aggregation per call, and
+        no plan for a table it does not write."""
+        from widiff_spark import checkpoint, features, pipeline
+
+        def forbidden(*args, **kwargs):
+            raise AssertionError("called by a value_change-only call")
+
+        calls = []
+        real = checkpoint.input_watermarks
+
+        def counted(*args, **kwargs):
+            calls.append(1)
+            return real(*args, **kwargs)
+
+        monkeypatch.setenv("WIDIFF_SKEW_THRESHOLD", str(threshold))
+        monkeypatch.setattr(pipeline, "probe_max_page_revisions", forbidden)
+        monkeypatch.setattr(features, "feature_tables", forbidden)
+        monkeypatch.setattr(checkpoint, "input_watermarks", counted)
+        docs = fixtures.edge_case_corpus(spark, include_hot_page=True,
+                                         hot_revisions=60)
+        r = pipeline.run_incremental(spark, docs, str(tmp_path / "out"),
+                                     tables=["value_change"], mode="auto")
+        assert r["processed_buckets"] and r["mode"] == mode
+        assert len(calls) == 1

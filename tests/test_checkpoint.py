@@ -3,14 +3,17 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from widiff_spark import checkpoint, fixtures, materialize
-from widiff_spark.pipeline import run_incremental
+from widiff_spark.pipeline import run_incremental, run_pipeline
 
 
 def _table_fingerprint(spark, path, table):
     df = spark.read.parquet(f"{path}/{table}")
+    # the diff's own timing diagnostics differ between any two runs
+    df = df.drop(*[c for c in df.columns if c.endswith("_sec")])
     pdf = df.toPandas().astype(str)
     pdf = pdf[sorted(pdf.columns)]
     return sorted(map(tuple, pdf.values.tolist()))
@@ -105,6 +108,118 @@ class TestCheckpoint:
                             run_id="salted", mode="salted")
         assert r["processed_buckets"]
         assert jsc.getPersistentRDDs().size() == before
+
+    def test_empty_quarantine_table_is_readable(self, spark, tmp_path):
+        """An input with no undecodable revision writes an empty quarantine
+        table that still reads back, with the table's columns."""
+        from widiff_spark import parse
+
+        out = str(tmp_path / "warehouse")
+        docs = fixtures.edge_case_corpus(spark, include_hot_page=False) \
+            .filter(F.col("path") != "Q122")  # the one quarantined page
+        expected = parse.quarantine(parse.parse_documents(docs))
+        assert expected.count() == 0
+        run_incremental(spark, docs, out, run_id="r1")
+        q = materialize.read_table(spark, out, "quarantine")
+        assert q.count() == 0
+        assert sorted(q.columns) == sorted(expected.columns
+                                           + ["entity_bucket"])
+
+    def test_rows_arriving_mid_call_stay_pending(self, spark, tmp_path,
+                                                 monkeypatch):
+        """The ledger records the marks the call read, not a re-scan: a
+        commit that lands on a live input after the pending check (here,
+        while lineage is computed) is redone by the next call."""
+        import json
+
+        from pyspark.sql.datasource import DataSource, DataSourceReader
+
+        src = tmp_path / "docs.jsonl"
+        rows = fixtures.edge_case_rows()
+        src.write_text("".join(json.dumps(r) + "\n" for r in rows))
+
+        # a data source that re-reads the file on every scan, as a live
+        # staging directory would (a parquet input fixes its file list
+        # when the DataFrame is made)
+        class JsonlReader(DataSourceReader):
+            def __init__(self, path):
+                self.path = path
+
+            def read(self, partition):
+                import json
+                with open(self.path) as f:
+                    for line in f:
+                        r = json.loads(line)
+                        yield (r["repo"], r["path"], r["commit"], r["lang"],
+                               r["content"])
+
+        class JsonlDocs(DataSource):
+            @classmethod
+            def name(cls):
+                return "widiff_jsonl_docs"
+
+            def schema(self):
+                return fixtures.DOCUMENTS_SCHEMA
+
+            def reader(self, schema):
+                return JsonlReader(self.options["path"])
+
+        spark.dataSource.register(JsonlDocs)
+        docs = spark.read.format("widiff_jsonl_docs") \
+            .option("path", str(src)).load()
+
+        late = fixtures.row("Q102", 1102, fixtures.content(
+            1102, fixtures._ts(3),
+            claims={"P1476": [fixtures.statement(
+                "q102$S1", fixtures.string_snak("P1476", "late title"))]},
+            label="title page"))
+        real_lineage = checkpoint.lineage_from_unified
+
+        def lineage_then_arrive(unified, *args, **kwargs):
+            if late["commit"] not in src.read_text():
+                with open(src, "a") as f:
+                    f.write(json.dumps(late) + "\n")
+            return real_lineage(unified, *args, **kwargs)
+
+        monkeypatch.setattr(checkpoint, "lineage_from_unified",
+                            lineage_then_arrive)
+        out = str(tmp_path / "warehouse")
+        run_incremental(spark, docs, out, run_id="r1")
+        assert late["commit"] in src.read_text()
+        vc = materialize.read_table(spark, out, "value_change")
+        assert vc.filter("revision_id = 1102").count() == 0
+
+        r2 = run_incremental(spark, docs, out, run_id="r2")
+        assert r2["processed_buckets"]
+        vc = materialize.read_table(spark, out, "value_change")
+        new_row = vc.filter("revision_id = 1102").collect()
+        assert len(new_row) == 1 and new_row[0]["new_value"] == '"late title"'
+
+    @pytest.mark.parametrize("mode", ["grouped", "salted"])
+    def test_restricted_build_matches_full_pipeline(self, spark, tmp_path,
+                                                    mode):
+        """run_incremental builds only the tables it writes; those tables
+        are row-identical to the same tables of a run_pipeline that built
+        every table."""
+        docs = fixtures.edge_case_corpus(spark, include_hot_page=True,
+                                         hot_revisions=20)
+        wanted = ["value_change", "entity_stats", "features_text",
+                  "features_entity", "quarantine"]
+        part, full = str(tmp_path / "part"), str(tmp_path / "full")
+        run_incremental(spark, docs, part, tables=wanted, mode=mode)
+
+        res = run_pipeline(spark, docs, mode=mode)
+        every = dict(res.tables)
+        assert len(every) == 13
+        for name in wanted:
+            df = every[name]
+            if name == "quarantine":
+                df = df.withColumn("entity_bucket", checkpoint.bucket_col())
+            materialize.write_table(df, full, name)
+        res.unpersist()
+        for name in wanted:
+            assert _table_fingerprint(spark, part, name) == \
+                _table_fingerprint(spark, full, name), name
 
     def test_dedup_by_pk_is_deterministic(self, spark):
         df = spark.createDataFrame(

@@ -138,38 +138,47 @@ def _battery_stage(rows: DataFrame, battery, feature_cols: list[str],
                       *extra_literals)
 
 
-def feature_tables(value_change: DataFrame) -> dict[str, DataFrame]:
-    """All five feature tables from the enriched value_change table."""
+FEATURE_TABLES = ["features_text", "features_time", "features_quantity",
+                  "features_globecoordinate", "features_entity"]
+
+
+def feature_tables(value_change: DataFrame,
+                   families: list[str] | None = None) -> dict[str, DataFrame]:
+    """The feature tables named in ``families`` (default: all five) from the
+    enriched value_change table; only the plans asked for are built."""
     upd = _update_rows(value_change)
 
-    text_rows = upd.filter(F.col("new_datatype").isin(WD_STRING_TYPES))
-    time_rows = upd.filter(F.col("new_datatype") == "time")
-    qty_rows = upd.filter(F.col("new_datatype") == "quantity")
-    globe_rows = upd.filter(F.col("new_datatype") == "globecoordinate")
-    entity_rows = upd.filter(F.col("new_datatype").isin(WD_ENTITY_TYPES))
+    def rows(types):
+        return upd.filter(F.col("new_datatype").isin(types))
 
-    tables = {
-        "features_text": _battery_stage(
-            text_rows, lambda o, n: FL.text_features("text", o, n),
+    builders = {
+        "features_text": lambda: _battery_stage(
+            rows(WD_STRING_TYPES),
+            lambda o, n: FL.text_features("text", o, n),
             TEXT_FEATURE_COLS, _TEXT_TYPES,
             {"value_cosine_similarity": ("double", 0.0),
              "label": ("string", ""), "processed": ("boolean", False)}),
-        "features_time": _battery_stage(
-            time_rows, FL.time_features, TIME_FEATURE_COLS,
+        "features_time": lambda: _battery_stage(
+            rows(["time"]), FL.time_features, TIME_FEATURE_COLS,
             ", ".join(f"{c} int" for c in TIME_FEATURE_COLS),
             {"label": ("string", "")}),
-        "features_quantity": _battery_stage(
-            qty_rows, FL.quantity_features, QUANTITY_FEATURE_COLS,
+        "features_quantity": lambda: _battery_stage(
+            rows(["quantity"]), FL.quantity_features, QUANTITY_FEATURE_COLS,
             ", ".join(f"{c} int" for c in QUANTITY_FEATURE_COLS),
             {"label": ("string", "")}),
-        "features_globecoordinate": _battery_stage(
-            globe_rows, FL.globe_features, GLOBE_FEATURE_COLS,
+        "features_globecoordinate": lambda: _battery_stage(
+            rows(["globecoordinate"]), FL.globe_features, GLOBE_FEATURE_COLS,
             ", ".join(f"{c} int" for c in GLOBE_FEATURE_COLS),
             {"label_latitude": ("string", ""),
              "label_longitude": ("string", "")}),
+        "features_entity": lambda: _entity_placeholders(
+            rows(WD_ENTITY_TYPES)),
     }
+    return {name: builders[name]() for name in families or FEATURE_TABLES}
 
-    # entity features: placeholder phase (page_parser.py:848-871)
+
+def _entity_placeholders(entity_rows: DataFrame) -> DataFrame:
+    """Entity features: placeholder phase (page_parser.py:848-871)."""
     ent = entity_rows.select(*BASE_COLS, "entity_label")
     for c in ENTITY_SIM_COLS:
         ent = ent.withColumn(
@@ -179,16 +188,14 @@ def feature_tables(value_change: DataFrame) -> dict[str, DataFrame]:
     ent = ent.withColumn("is_link_change", F.lit(None).cast("int"))
     for c in ENTITY_CLOSURE_COLS:
         ent = ent.withColumn(c, F.lit(0))
-    ent = (ent.withColumn("old_value_label", F.lit(""))
-           .withColumn("new_value_label", F.lit(""))
-           .withColumn("old_value_description", F.lit(""))
-           .withColumn("new_value_description", F.lit(""))
-           .withColumn("label_cosine_similarity", F.lit(0.0))
-           .withColumn("description_cosine_similarity", F.lit(0.0))
-           .withColumn("label", F.lit(""))
-           .withColumn("processed", F.lit(False)))
-    tables["features_entity"] = ent
-    return tables
+    return (ent.withColumn("old_value_label", F.lit(""))
+            .withColumn("new_value_label", F.lit(""))
+            .withColumn("old_value_description", F.lit(""))
+            .withColumn("new_value_description", F.lit(""))
+            .withColumn("label_cosine_similarity", F.lit(0.0))
+            .withColumn("description_cosine_similarity", F.lit(0.0))
+            .withColumn("label", F.lit(""))
+            .withColumn("processed", F.lit(False)))
 
 
 # --------------------------------------------------------------------------- #

@@ -55,6 +55,22 @@ def with_entity_bucket(df: DataFrame, n_buckets: int = N_ENTITY_BUCKETS) -> Data
                                 F.lit(n_buckets)).cast("int"))
 
 
+def hadoop_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path``: driver-side file checks that
+    run no Spark job and work on any scheme (file/hdfs/s3a)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def _has_parquet_file(spark: SparkSession, path: str) -> bool:
+    fs, hpath = hadoop_path(spark, path)
+    files = fs.listFiles(hpath, True)
+    while files.hasNext():
+        if files.next().getPath().getName().endswith(".parquet"):
+            return True
+    return False
+
+
 def iceberg_catalog(spark: SparkSession) -> str | None:
     """Name of the first configured Iceberg catalog, or None.
 
@@ -144,8 +160,16 @@ def write_table(df: DataFrame, path: str, table: str,
               .option("partitionOverwriteMode", "dynamic"))
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
-    writer.parquet(f"{path}/{table}")
-    return f"{path}/{table}"
+    target = f"{path}/{table}"
+    writer.parquet(target)
+    if partition_cols and not _has_parquet_file(df.sparkSession, target):
+        # a partitioned write of no rows leaves no file, so the table would
+        # have no schema to read: park one empty file in a partition (an
+        # unpartitioned write of no rows writes such a file by itself)
+        first = "/".join(f"{c}=0" for c in partition_cols)
+        df.limit(0).drop(*partition_cols).write.mode("overwrite") \
+            .parquet(f"{target}/{first}")
+    return target
 
 
 def read_table(spark: SparkSession, path: str, table: str) -> DataFrame:

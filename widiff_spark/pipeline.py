@@ -14,6 +14,8 @@ partition coalescing), UTC session timezone, Arrow enabled.
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Mapping
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -66,6 +68,26 @@ def build_session(app_name: str = "widiff", master: str | None = None,
     return builder.getOrCreate()
 
 
+class LazyTables(Mapping):
+    """Table name -> DataFrame, each plan built on first access.  Building a
+    plan runs no Spark job but costs driver time (analysis of a deep diff
+    plan), so a caller that writes two tables pays for two."""
+
+    def __init__(self, builders: dict):
+        self._builders, self._built = builders, {}
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if name not in self._built:
+            self._built[name] = self._builders[name]()
+        return self._built[name]
+
+    def __iter__(self):
+        return iter(self._builders)
+
+    def __len__(self) -> int:
+        return len(self._builders)
+
+
 @dataclass
 class PipelineResult:
     """Lazy handles to every output table; `unified` is persisted so each
@@ -75,7 +97,7 @@ class PipelineResult:
     intermediates (``unified.widiff_caches``); ``unpersist`` releases them
     all."""
     unified: DataFrame
-    tables: dict[str, DataFrame] = field(default_factory=dict)
+    tables: Mapping[str, DataFrame] = field(default_factory=dict)
     mode: str = "grouped"          # execution mode actually chosen
     max_page_revisions: int = 0    # the auto probe's measurement (0 = not probed)
     caches: list[DataFrame] = field(default_factory=list)
@@ -108,12 +130,16 @@ def probe_max_page_revisions(docs: DataFrame) -> int:
     return int(row["m"] or 0)
 
 
-def choose_mode(docs: DataFrame, threshold: int | None = None) -> tuple[str, int]:
-    """('grouped'|'salted', max_page_revisions) — salted iff some page
-    exceeds the skew threshold."""
+def mode_for(max_page_revisions: int, threshold: int | None = None) -> str:
+    """'salted' iff some page exceeds the skew threshold, else 'grouped'."""
     t = threshold if threshold is not None else _auto_threshold()
+    return "salted" if max_page_revisions > t else "grouped"
+
+
+def choose_mode(docs: DataFrame, threshold: int | None = None) -> tuple[str, int]:
+    """('grouped'|'salted', max_page_revisions), probed over ``docs``."""
     hot = probe_max_page_revisions(docs)
-    return ("salted" if hot > t else "grouped"), hot
+    return mode_for(hot, threshold), hot
 
 
 def run_pipeline(spark: SparkSession, docs: DataFrame,
@@ -131,19 +157,18 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
 
     NOTE ``mode='auto'`` makes this call EAGER: the skew probe runs a
     real aggregation job over ``docs`` at invocation time (~0.5 s at
-    sf0.1), before any result DataFrame is consumed.  Loop callers pass
-    an explicit mode (see run_incremental / the streaming sink)."""
+    sf0.1), before any result DataFrame is consumed.  ``run_incremental``
+    runs no probe: it reads the statistic from its checkpoint pass and
+    passes an explicit mode.
+
+    ``tables`` maps every table name to its DataFrame, but each table's
+    plan (and the plans it reads: ``value_change`` for the feature tables,
+    ``cohorts`` for ``entity_stats``) is built on first access only."""
     from . import fixtures
 
     max_page_revisions = 0
     if mode == "auto":
         mode, max_page_revisions = choose_mode(docs)
-
-    property_labels = property_labels or fixtures.property_labels_df(spark)
-    astronomical = astronomical if astronomical is not None \
-        else fixtures.cohort_types_df(spark, "astronomical")
-    scholarly = scholarly if scholarly is not None \
-        else fixtures.cohort_types_df(spark, "scholarly")
 
     # read by the diff and by the quarantine table: parse once
     parsed = parse.parse_documents(docs)
@@ -157,18 +182,31 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
     if persist:
         unified = unified.persist(StorageLevel.MEMORY_AND_DISK)
 
-    tables: dict[str, DataFrame] = {}
+    @functools.cache
+    def labels() -> DataFrame:
+        return property_labels if property_labels is not None \
+            else fixtures.property_labels_df(spark)
 
-    entity_stats = enrich.explode_entity_stats(unified)
-    cohorts = enrich.compute_cohorts(entity_stats, astronomical, scholarly,
-                                     config)
-    tables["entity_stats"] = (
-        entity_stats.join(cohorts.select(
+    @functools.cache
+    def stats() -> DataFrame:
+        return enrich.explode_entity_stats(unified)
+
+    def cohorts() -> DataFrame:
+        return enrich.compute_cohorts(
+            stats(),
+            astronomical if astronomical is not None
+            else fixtures.cohort_types_df(spark, "astronomical"),
+            scholarly if scholarly is not None
+            else fixtures.cohort_types_df(spark, "scholarly"), config)
+
+    def entity_stats() -> DataFrame:
+        return (stats().join(tables["cohorts"].select(
             "repo", "entity_id", "is_scholarly_article",
             "is_astronomical_object", "has_less_revisions", "cohort"),
             ["repo", "entity_id"], "left")
-        .fillna({"cohort": "rest", "is_scholarly_article": False,
-                 "is_astronomical_object": False, "has_less_revisions": False}))
+            .fillna({"cohort": "rest", "is_scholarly_article": False,
+                     "is_astronomical_object": False,
+                     "has_less_revisions": False}))
 
     label_joins = {
         "value_change": {"property_id": "property_label"},
@@ -178,20 +216,25 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
         "reference_change": {"property_id": "property_label",
                              "ref_property_id": "ref_property_label"},
     }
-    for name in CHANGE_TABLES:
-        t = enrich.split_table(unified, name)
-        t = enrich.add_time_buckets(t)
+
+    def change_table(name: str) -> DataFrame:
+        t = enrich.add_time_buckets(enrich.split_table(unified, name))
         if name in label_joins:
-            t = enrich.add_property_labels(t, property_labels, label_joins[name])
-        tables[name] = t
+            t = enrich.add_property_labels(t, labels(), label_joins[name])
+        return t
 
-    tables["quarantine"] = parse.quarantine(parsed)
-    tables["cohorts"] = cohorts
+    def feature_table(name: str) -> DataFrame:
+        return features.feature_tables(tables["value_change"], [name])[name]
 
+    builders = {"entity_stats": entity_stats}
+    for name in CHANGE_TABLES:
+        builders[name] = functools.partial(change_table, name)
+    builders["quarantine"] = lambda: parse.quarantine(parsed)
+    builders["cohorts"] = cohorts
     if config.extract_features:
-        for fname, fdf in features.feature_tables(
-                tables["value_change"]).items():
-            tables[fname] = fdf
+        for name in features.FEATURE_TABLES:
+            builders[name] = functools.partial(feature_table, name)
+    tables = LazyTables(builders)
 
     return PipelineResult(
         unified=unified, tables=tables, mode=mode,
@@ -213,10 +256,12 @@ def run_incremental(spark: SparkSession, docs: DataFrame, output_path: str,
     table list includes ``quarantine``, so undecodable revisions land in a
     table rather than vanishing.
 
-    ``mode`` passes through to ``run_pipeline``.  NOTE ``'auto'`` probes
-    page skew with a real aggregation job over the bucket-filtered input
-    at call time — repeated callers (the streaming sink) resolve the mode
-    once and pass it explicitly rather than paying the probe per trigger.
+    The input is aggregated once per call: ``checkpoint.pending_buckets``
+    returns the pending buckets with their marks, ``mode='auto'`` picks the
+    diff mode from the largest page among them (no probe job), and
+    ``checkpoint.record`` records those same marks.  Only the written
+    tables' plans are built.  Returns the processed buckets, the chosen
+    mode and each written table's location.
     """
     from . import checkpoint, materialize
 
@@ -224,6 +269,8 @@ def run_incremental(spark: SparkSession, docs: DataFrame, output_path: str,
     if not todo:
         return {"processed_buckets": [], "tables": {}}
 
+    if mode == "auto":
+        mode = mode_for(todo.max_page_revisions)
     subset = checkpoint.filter_to_buckets(docs, todo)
     res = run_pipeline(spark, subset, config, mode=mode)
     wanted = tables or (CHANGE_TABLES + ["entity_stats", "quarantine"])
@@ -239,7 +286,8 @@ def run_incremental(spark: SparkSession, docs: DataFrame, output_path: str,
     checkpoint.record(spark, output_path, docs, lineage, run_id,
                       buckets=todo)
     res.unpersist()
-    return {"processed_buckets": todo, "tables": locations}
+    return {"processed_buckets": list(todo), "mode": mode,
+            "tables": locations}
 
 
 def triples(value_change: DataFrame) -> DataFrame:

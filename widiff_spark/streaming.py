@@ -50,11 +50,10 @@ def run_streaming_pipeline(stream: DataFrame, staging_dir: str,
     and scan of its touched buckets, not the whole staging directory
     (asserted in tests/test_plans.py).
 
-    ``mode`` is resolved ONCE here and passed through — the per-call skew
-    probe of ``mode='auto'`` would add a full aggregation job to every
-    micro-batch, so the stream defaults to 'grouped' and callers with a
-    known-skewed corpus pass 'salted' (or 'auto' to probe each trigger
-    anyway, now cheap against the pruned scan)."""
+    ``mode`` passes through to ``run_incremental``; with ``'auto'`` each
+    trigger picks the diff mode from its touched buckets' largest page,
+    which the checkpoint pass already computes, so no probe job runs.
+    Both modes give row-identical output (tests/test_salted_parity.py)."""
     from .pipeline import run_incremental
     from . import checkpoint
 
