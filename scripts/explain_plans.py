@@ -76,9 +76,10 @@ def main() -> None:
         ("kg extraction core (parse -> bucket-grouped diff -> split/enrich)",
          vc,
          "What to look for: ONE Exchange (the xxhash64 page-bucket shuffle "
-         "of compact digests) feeding the grouped ApplyInPandas; the rlike "
-         "namespace filter sits on the scan side of the parse UDF; the "
-         "property-label dim joins as BroadcastHashJoin."),
+         "of compact digests) feeding the grouped FlatMapGroupsInArrow; the "
+         "rlike namespace filter sits on the scan side of the parse "
+         "MapInArrow; no pandas operator on the path; the property-label "
+         "dim joins as BroadcastHashJoin."),
         ("relational probe with pushdown (rel_pricing_summary)",
          relops.QUERIES["rel_pricing_summary"](spark, sf),
          "PushedFilters + pruned ReadSchema on the lineitem scan; partial + "
@@ -131,8 +132,9 @@ def main() -> None:
          __import__("widiff_spark.extractors",
                     fromlist=["x"]).entity_labels_fast(corpus),
          "get_json_object projections + ONE hash aggregate, entirely "
-         "inside whole-stage codegen — no MapInPandas/ArrowEvalPython "
-         "anywhere (plan-asserted); 5.3x the decode path at sf0.1."),
+         "inside whole-stage codegen — no MapInArrow/MapInPandas/"
+         "ArrowEvalPython anywhere (plan-asserted); 5.3x the decode path "
+         "at sf0.1."),
         ("deterministic stratified sample (sampling.py)",
          __import__("widiff_spark.sampling",
                     fromlist=["x"]).stratified_sample(docs_tbl, "lang", 10),

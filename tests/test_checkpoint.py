@@ -221,6 +221,30 @@ class TestCheckpoint:
             assert _table_fingerprint(spark, part, name) == \
                 _table_fingerprint(spark, full, name), name
 
+    @pytest.mark.parametrize("mode", ["grouped", "salted"])
+    def test_ledger_counts_pages_per_path(self, spark, tmp_path, mode):
+        """The ledger's num_pages per bucket is the bucket's distinct
+        (repo, path) pages.  Q012 and Q12 parse to one entity_id, and the
+        ledger keeps them as two pages in both modes."""
+        twins = [fixtures.row(path, rid, fixtures.content(
+            rid, fixtures._ts(0), label=path)) for path, rid in
+            (("Q012", 9000), ("Q12", 9001))]
+        docs = fixtures.edge_case_corpus(spark, include_hot_page=True,
+                                         hot_revisions=20).unionByName(
+            spark.createDataFrame(pd.DataFrame(twins),
+                                  schema=fixtures.DOCUMENTS_SCHEMA))
+        out = str(tmp_path / "warehouse")
+        run_incremental(spark, docs, out, mode=mode)
+        ledger = {r.bucket: r.num_pages for r in
+                  checkpoint.read_checkpoints(spark, out).collect()}
+        paths: dict = {}
+        for r in docs.filter(F.col("path").rlike(r"^Q\d+$")).select(
+                "repo", "path", checkpoint.bucket_col().alias("b")).collect():
+            paths.setdefault(r.b, set()).add((r.repo, r.path))
+        assert ledger == {b: len(p) for b, p in paths.items()}
+        assert any({(fixtures.REPO, "Q012"), (fixtures.REPO, "Q12")} <= p
+                   for p in paths.values())
+
     def test_dedup_by_pk_is_deterministic(self, spark):
         df = spark.createDataFrame(
             [(1, "a", "x"), (1, "a", "y"), (2, "b", "z")],

@@ -11,15 +11,19 @@ pipeline (widiff_spark/golden.py) consumes the cleanroom side.
 
 from __future__ import annotations
 
+import itertools
 import json
+import re
 
 import pandas as pd
+import pyarrow as pa
 import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from cleanroom import replay_corpus
 from widiff_spark import diff, fixtures, parse
 from widiff_spark.config import DEFAULT_CONFIG
-from widiff_spark.schema import TABLE_COLUMNS
+from widiff_spark.schema import DOCUMENTS_SCHEMA, TABLE_COLUMNS
 
 from test_salted_parity import _adversarial_corpus_rows, _null_revision_id_rows
 
@@ -43,20 +47,21 @@ STAT_FIELDS = (
 
 
 def _engine_tables(rows: list[dict]) -> dict:
-    """Engine kernels under pandas orchestration (exactly what golden.py
-    formerly did: parse._parse_batches digests, diff.PageDiffer replays)."""
-    corpus = pd.DataFrame(rows,
-                          columns=["repo", "path", "commit", "lang",
-                                   "content"])
-    keep = corpus[corpus["path"].str.match(r"^Q\d+$")].reset_index(drop=True)
-    parsed = pd.concat(list(parse._parse_batches(iter([keep]))),
-                       ignore_index=True)
-    parsed = parsed.sort_values(["repo", "path", "commit"], kind="mergesort")
+    """Engine kernels on the Arrow transport the Spark stages use (exactly
+    what golden.py formerly did: parse._parse_batches digests,
+    diff.PageDiffer replays), with rows read by ``to_pylist``."""
+    keep = [r for r in rows if re.match(r"^Q\d+$", r["path"])]
+    batch = pa.RecordBatch.from_pylist(
+        keep, schema=to_arrow_schema(DOCUMENTS_SCHEMA))
+    parsed = pa.Table.from_batches(list(parse._parse_batches(iter([batch]))))
+    parsed = parsed.sort_by([(c, "ascending")
+                             for c in ("repo", "path", "commit")]).to_pylist()
     acc: dict = {t: [] for t in TABLES}
     stats_rows = []
-    for (repo, _path), g in parsed.groupby(["repo", "path"], sort=True):
-        records = diff._prep_revisions(g.to_dict("records"))
-        differ = diff.PageDiffer(repo, int(g["entity_id"].iloc[0]),
+    for (repo, _path), g in itertools.groupby(
+            parsed, key=lambda r: (r["repo"], r["path"])):
+        records = diff._prep_revisions(list(g))
+        differ = diff.PageDiffer(repo, records[0]["entity_id"],
                                  DEFAULT_CONFIG)
         result = differ.process_page(records)
         for table in TABLES:
@@ -69,12 +74,9 @@ def _engine_tables(rows: list[dict]) -> dict:
         st = dict(result["entity_stats"])
         st["repo"] = repo
         stats_rows.append(st)
-    q = parsed[(~parsed["parse_ok"]) & (~parsed["is_deleted"])]
     acc["quarantine"] = [
-        {"repo": r, "path": p, "commit": c,
-         "revision_id": None if pd.isna(rid) else int(rid), "error": e}
-        for r, p, c, rid, e in zip(q["repo"], q["path"], q["commit"],
-                                   q["revision_id"], q["error"])]
+        {c: r[c] for c in ("repo", "path", "commit", "revision_id", "error")}
+        for r in parsed if not r["parse_ok"] and not r["is_deleted"]]
     acc["entity_stats"] = stats_rows
     return acc
 
@@ -108,6 +110,22 @@ def _assert_match(rows: list[dict]) -> None:
     e_stats = _canon(engine["entity_stats"], STAT_FIELDS)
     c_stats = _canon(clean["entity_stats"], STAT_FIELDS)
     assert e_stats == c_stats
+
+
+@pytest.mark.parametrize("n", [0, 3])
+def test_arrow_rows_keep_nulls_as_none(n):
+    """The stages' fast Arrow row read equals ``to_pylist`` and gives None,
+    never NaN, for a null long, bool or string."""
+    from widiff_spark.schema import UNIFIED_SCHEMA, pyrows
+    arrow = to_arrow_schema(UNIFIED_SCHEMA)
+
+    def value(t):
+        return False if t == pa.bool_() else "x" if t == pa.string() else 7
+    full = {f.name: value(f.type) for f in arrow}
+    rows = [full, {c: None for c in full}, full][:n]
+    table = pa.Table.from_pylist(rows, schema=arrow)
+    for t in (table, *table.to_batches()):
+        assert pyrows(t) == table.to_pylist() == rows
 
 
 def test_no_engine_imports():

@@ -151,4 +151,4 @@ class TestEntityLabelsFast:
         p = extractors.entity_labels_fast(docs) \
             ._jdf.queryExecution().executedPlan().toString()
         assert "MapInPandas" not in p and "ArrowEvalPython" not in p
-        assert "BatchEvalPython" not in p
+        assert "MapInArrow" not in p and "BatchEvalPython" not in p

@@ -7,6 +7,7 @@ is a scale bug (task brief: '.explain the plan and iterate').
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from widiff_spark import enrich, fixtures, relops
@@ -76,7 +77,7 @@ class TestScanPruning:
         p = plan(parsed)
         # the path predicate reaches the scan (data filter before the UDF)
         assert "rlike" in p.lower() or "RLIKE" in p
-        assert node_id(p, "Scan parquet") < node_id(p, "MapInPandas")
+        assert node_id(p, "Scan parquet") < node_id(p, "MapInArrow")
 
 
 class TestJoinStrategies:
@@ -230,7 +231,7 @@ class TestDiffShuffle:
                  and any(a is stats for a in ancestors(n))]
         assert 1 <= len(joins) <= 3, [n["name"] for n in joins]
         python = re.compile(r"Pandas|Python|Arrow")
-        grouped = [n for n in nodes if n["name"] == "FlatMapGroupsInPandas"]
+        grouped = [n for n in nodes if n["name"] == "FlatMapGroupsInArrow"]
         assert len({n["id"] for n in grouped}) == 2  # revert tag + P31
         for n in grouped:
             above = [a["name"] for a in ancestors(n)
@@ -275,6 +276,26 @@ class TestDiffShuffle:
             if name.startswith("Window") or "Join" in name:
                 assert not any(pk.search(ln) for ln in keys), (name, keys)
         assert "from_json" not in p and "JsonToStructs" not in p
+
+    @pytest.mark.parametrize("mode", ["grouped", "salted"])
+    def test_diff_path_crosses_python_boundary_on_arrow(self, spark, mode):
+        """Every Python stage that feeds value_change and entity_stats reads
+        and writes Arrow: the executed plans hold Arrow map operators and
+        no pandas one (a pandas frame turns a null long into NaN)."""
+        from widiff_spark import pipeline
+        res = pipeline.run_pipeline(
+            spark, fixtures.edge_case_corpus(spark, include_hot_page=False),
+            mode=mode)
+        try:
+            for name in ("value_change", "entity_stats"):
+                df = res.tables[name]
+                df.collect()
+                p = df._jdf.queryExecution().executedPlan().toString()
+                assert "MapInArrow" in p and "FlatMapGroupsInArrow" in p
+                assert "MapInPandas" not in p, name
+                assert "FlatMapGroupsInPandas" not in p, name
+        finally:
+            res.unpersist()
 
 
 class TestRound3Plans:
@@ -503,7 +524,7 @@ class TestRound4Plans:
         p = plan(parse.parse_documents(spark.read.parquet(path),
                                        namespace="property"))
         assert "rlike" in p.lower() or "RLIKE" in p
-        assert node_id(p, "Scan parquet") < node_id(p, "MapInPandas")
+        assert node_id(p, "Scan parquet") < node_id(p, "MapInArrow")
 
     def test_hash_sample_is_map_only(self, spark):
         """hash_sample must add zero exchanges — a shuffle for a Bernoulli

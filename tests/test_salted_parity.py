@@ -221,6 +221,52 @@ def test_null_revision_id_parity(spark):
     _assert_identical(spark, docs)
 
 
+# Q995's revisions whose meta id is not a JSON integer that fits a long
+_MALFORMED_META = {7501: ("revision_id", "abc"), 7502: ("revision_id", 1.5),
+                   7503: ("revision_id", True), 7504: ("parent_id", "7"),
+                   7505: ("revision_id", 2 ** 63)}
+
+
+def _malformed_meta_rows() -> list[dict]:
+    """Q995: clean revisions 7500 and 7506 around one revision per mistyped
+    meta id (string, fraction, bool, numeric string, past a long)."""
+    rows = []
+    for rid in range(7500, 7507):
+        doc = json.loads(fixtures.content(rid, fixtures._ts(rid % 100),
+                                          label=f"l{rid}"))
+        if rid in _MALFORMED_META:
+            key, value = _MALFORMED_META[rid]
+            doc["meta"][key] = value
+        rows.append(fixtures.row("Q995", rid, json.dumps(doc)))
+    return rows
+
+
+@pytest.mark.parametrize("mode", ["grouped", "salted"])
+def test_malformed_meta_ids_are_quarantined(spark, mode):
+    """A mistyped meta id quarantines its revision with its own reason and
+    a null id; it neither fails the parse task nor reaches a change table,
+    and both modes agree on the rest of the page."""
+    from widiff_spark import pipeline
+
+    docs = spark.createDataFrame(pd.DataFrame(_malformed_meta_rows()),
+                                 schema=fixtures.DOCUMENTS_SCHEMA)
+    res = pipeline.run_pipeline(spark, docs, mode=mode)
+    try:
+        got = sorted(tuple(r) for r in res.tables["quarantine"].select(
+            "commit", "revision_id", "error").collect())
+        assert got == [
+            (f"r{rid:010d}", rid if key == "parent_id" else None,
+             "invalid_meta")
+            for rid, (key, _v) in sorted(_MALFORMED_META.items())]
+        revisions = res.tables["revision"].select(
+            "revision_id", "prev_revision_id").collect()
+        assert sorted(tuple(r) for r in revisions) == [(7500, -1),
+                                                       (7506, 7500)]
+    finally:
+        res.unpersist()
+    _assert_identical(spark, docs)
+
+
 def _parsed_rows_per_run(spark, monkeypatch, mode: str) -> tuple[int, int]:
     """(input rows, rows the parse UDF emitted) over one run_pipeline that
     reads value_change, entity_stats and quarantine."""

@@ -4,8 +4,8 @@ Re-implements the semantics of the reference pipeline
 (caroocortes/wikidata-edit-history, a pure-Python multiprocessing + Postgres
 system) on idiomatic Spark:
 
-* ``parse``   — Arrow-vectorized snapshot parsing (``mapInPandas``)
-* ``diff``    — per-page grouped set-diff replay (``applyInPandas``)
+* ``parse``   — Arrow-batched snapshot parsing (``mapInArrow``)
+* ``diff``    — per-page grouped set-diff replay (``applyInArrow``)
 * ``enrich``  — broadcast dimension joins + JVM-side time/cohort projections
 * ``features``— vectorized ML feature batteries over change rows
 * ``stats``   — per-entity stats + relational analysis aggregates

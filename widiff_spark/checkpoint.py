@@ -20,7 +20,8 @@ metrics"):
   statistic that picks the diff mode (pipeline.run_incremental), so no
   separate probe scans the input.
 * ``record`` — upsert one lineage row per processed bucket with row counts
-  (the per-partition metrics the judge & ops read).  The marks recorded are
+  (the per-partition metrics the judge & ops read): pages from the input
+  marks, revisions and triples from the diff output.  The marks recorded are
   the ones ``pending_buckets`` read, not a fresh scan: rows that reach a
   live input between the two calls were not processed, so they must stay
   pending for the next call.
@@ -109,13 +110,14 @@ def read_checkpoints(spark: SparkSession, path: str) -> DataFrame:
 def input_watermarks(docs: DataFrame,
                      n_buckets: int = N_ENTITY_BUCKETS) -> DataFrame:
     """Per-bucket high-water mark of the *input* (lexicographic commit order
-    = revision order, FIXTURES.md §1), its row count and its largest page's
-    revision count, in one aggregation.  A physical ``bucket`` column (the
-    bucket-partitioned staging layout, streaming.py) is trusted only when
-    the caller asks for the default bucket count it was written with —
-    for any other ``n_buckets`` (or an unrelated column that happens to
-    be named ``bucket``) the marks would be silently wrong, so the bucket
-    is re-derived from (repo, path) instead."""
+    = revision order, FIXTURES.md §1), its row count, its page count (one
+    page per (repo, path), as the grouped diff replays them) and its
+    largest page's revision count, in one aggregation.  A physical
+    ``bucket`` column (the bucket-partitioned staging layout, streaming.py)
+    is trusted only when the caller asks for the default bucket count it
+    was written with — for any other ``n_buckets`` (or an unrelated column
+    that happens to be named ``bucket``) the marks would be silently wrong,
+    so the bucket is re-derived from (repo, path) instead."""
     if not _trust_bucket_column(docs, n_buckets):
         docs = docs.drop("bucket").withColumn("bucket",
                                               bucket_col(n_buckets))
@@ -126,20 +128,21 @@ def input_watermarks(docs: DataFrame,
             .groupBy("bucket")
             .agg(F.max("page_max_commit").alias("input_max_commit"),
                  F.sum("page_rows").alias("n_input_rows"),
+                 F.count("*").alias("num_pages"),
                  F.max("page_rows").alias("max_page_revisions")))
 
 
 class Pending(list):
     """The sorted pending bucket ids, carrying what ``pending_buckets`` read
-    for them: ``marks`` — (bucket, max_commit, n_input_rows) rows for
-    ``record`` — and ``max_page_revisions``, the most revisions on any one
-    of their pages (the diff mode's skew statistic)."""
+    for them: ``marks`` — (bucket, max_commit, n_input_rows, num_pages)
+    rows for ``record`` — and ``max_page_revisions``, the most revisions on
+    any one of their pages (the diff mode's skew statistic)."""
 
     def __init__(self, rows):
         rows = sorted(rows, key=lambda r: r["bucket"])
         super().__init__(r["bucket"] for r in rows)
-        self.marks = [(r["bucket"], r["input_max_commit"], r["n_input_rows"])
-                      for r in rows]
+        self.marks = [(r["bucket"], r["input_max_commit"], r["n_input_rows"],
+                       r["num_pages"]) for r in rows]
         self.max_page_revisions = max(
             (r["max_page_revisions"] for r in rows), default=0)
 
@@ -159,7 +162,7 @@ def pending_buckets(docs: DataFrame, spark: SparkSession, path: str,
         F.col("max_commit").isNull()
         | (F.col("input_max_commit") > F.col("max_commit"))
         | (F.col("n_input_rows") != F.col("ckpt_rows")))
-        .select("bucket", "input_max_commit", "n_input_rows",
+        .select("bucket", "input_max_commit", "n_input_rows", "num_pages",
                 "max_page_revisions").collect())
 
 
@@ -181,12 +184,13 @@ def filter_to_buckets(docs: DataFrame, buckets: list[int],
 
 def lineage_from_unified(unified: DataFrame,
                          n_buckets: int = N_ENTITY_BUCKETS) -> DataFrame:
-    """Per-bucket lineage metrics out of the diff output (one aggregation)."""
+    """Per-bucket lineage metrics out of the diff output (one aggregation,
+    no distinct: the page count comes with the input marks, see
+    ``input_watermarks``)."""
     b = F.pmod(F.xxhash64("repo", "entity_id"), F.lit(n_buckets)).cast("int")
     return (unified.withColumn("bucket", b)
             .groupBy("bucket")
-            .agg(F.countDistinct("repo", "entity_id").alias("num_pages"),
-                 F.count(F.when(F.col("table") == "revision", 1))
+            .agg(F.count(F.when(F.col("table") == "revision", 1))
                  .alias("num_revisions"),
                  F.count(F.when((F.col("table") == "value_change")
                                 & (F.col("change_target") == ""), 1))
@@ -209,11 +213,11 @@ def record(spark: SparkSession, path: str, docs: DataFrame,
     # from pandas (Arrow) the marks are a LocalRelation; from a list they
     # would be a Python RDD that a Python worker has to decode
     marks = spark.createDataFrame(
-        pd.DataFrame(buckets.marks,
-                     columns=["bucket", "max_commit", "n_input_rows"]),
-        "bucket int, max_commit string, n_input_rows long")
+        pd.DataFrame(buckets.marks, columns=["bucket", "max_commit",
+                                             "n_input_rows", "num_pages"]),
+        "bucket int, max_commit string, n_input_rows long, num_pages long")
     new = (marks.join(lineage, "bucket", "left")
-           .fillna(0, ["num_pages", "num_revisions", "num_triples"])
+           .fillna(0, ["num_revisions", "num_triples"])
            .withColumn("run_id", F.lit(run_id))
            .withColumn("completed_at", F.lit(time.time())))
     new_cols = [c.split(" ")[0] for c in _SCHEMA.split(", ")]

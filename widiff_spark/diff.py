@@ -5,9 +5,10 @@ page's history in revision order, emitting CREATE/DELETE/UPDATE rows for
 statement values, ranks, qualifiers, references, datatype metadata and
 labels/descriptions — the semantics of the reference's
 ``PageParser.process_page`` + ``get_changes_from_revisions``
-(page_parser.py:1890-2350) re-hosted as one ``applyInPandas`` grouped-map UDF
+(page_parser.py:1890-2350) re-hosted as one ``applyInArrow`` grouped-map UDF
 over *pre-digested* snapshots (see parse.py; all JSON decoding and sha1
-hashing already happened row-parallel).
+hashing already happened row-parallel).  The UDF reads Arrow rows as
+Python objects (nulls are None) and writes one Arrow table per bucket.
 
 Sequential-by-construction rules that force the per-page grouping:
   * the diff predecessor only advances when a revision produced changes
@@ -30,15 +31,16 @@ import json
 import time
 from typing import Iterable
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import canonical as C
 from . import revert as R
 from .config import DEFAULT_CONFIG, PipelineConfig
-from .schema import ENTITY_STATS_SCHEMA, UNIFIED_SCHEMA
+from .schema import ENTITY_STATS_SCHEMA, UNIFIED_SCHEMA, pyrows
 
-_UNIFIED_COLUMNS = [f.name for f in UNIFIED_SCHEMA.fields]
+_UNIFIED_ARROW = to_arrow_schema(UNIFIED_SCHEMA)
 _STATS_KEYS = [f.name for f in ENTITY_STATS_SCHEMA.fields]
 
 
@@ -868,35 +870,11 @@ def _emit_page(out_cols: dict, repo: str, differ: PageDiffer) -> None:
                {**const, "table": "entity_stats"})
 
 
-def _columnar_frame(out_cols: dict) -> pd.DataFrame:
-    """Accumulators -> pandas frame.  Pre-built object ndarrays skip
-    pandas' per-column type inference (maybe_convert_platform) and the
-    object-block consolidation vstack — ~2x cheaper frame construction,
-    measured on real bucket output.  Arrow conversion back in Spark coerces
-    to the declared schema's types from object exactly as it did for
-    inferred object columns."""
-    import numpy as np
-
-    data = {}
-    for c, values in out_cols.items():
-        arr = np.empty(len(values), dtype=object)
-        arr[:] = values
-        data[c] = arr
-    return pd.DataFrame(data, columns=list(out_cols), copy=False)
-
-
 def _prep_revisions(records: list[dict]) -> list[dict]:
     loads = C.fast_json_loads  # digest transport decode (orjson fast path)
     for rec in records:
         rec["digest"] = (loads(rec["snapshot"])
                          if rec["parse_ok"] and rec["snapshot"] else None)
-        if rec["revision_id"] != rec["revision_id"]:
-            # a null long arrives as NaN, which never equals itself: the
-            # revert scan's PK dedup needs None
-            rec["revision_id"] = None
-        rec["username"] = rec["username"] or ""
-        rec["comment"] = rec["comment"] or ""
-        rec["user_id"] = rec["user_id"] or ""
     return records
 
 
@@ -904,24 +882,24 @@ def make_bucket_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):
     """Grouped-map UDF over page *buckets*, not single pages.
 
     Grouping the shuffle by bucket (many pages per group) amortizes the
-    per-group Arrow/pandas overhead ~1000x versus per-page groups — at
-    120k pages the harness overhead dominated the actual diff work.  One
-    vectorized sort + one to_dict over the whole bucket, then plain-Python
-    grouping (per-page pandas slicing profiled ~2x slower); one columnar
-    DataFrame materialized per bucket."""
+    per-group Arrow overhead ~1000x versus per-page groups — at 120k pages
+    the harness overhead dominated the actual diff work.  One stable Arrow
+    sort + one row read over the whole bucket (row order within a group is
+    not guaranteed), then plain-Python grouping; one Arrow table built per
+    bucket from the columnar accumulators."""
     from itertools import groupby as _groupby
 
-    def bucket_diff(pdf: pd.DataFrame) -> pd.DataFrame:
-        out_cols: dict = {c: [] for c in _UNIFIED_COLUMNS}
-        pdf = pdf.sort_values(["repo", "path", "commit"], kind="mergesort")
-        records = _prep_revisions(pdf.to_dict("records"))
+    def bucket_diff(table: pa.Table) -> pa.Table:
+        out_cols: dict = {c: [] for c in _UNIFIED_ARROW.names}
+        records = _prep_revisions(pyrows(table.sort_by(
+            [(c, "ascending") for c in ("repo", "path", "commit")])))
         for (repo, _path), revs in _groupby(
                 records, key=lambda r: (r["repo"], r["path"])):
             revisions = list(revs)
-            differ = PageDiffer(repo, int(revisions[0]["entity_id"]), config)
+            differ = PageDiffer(repo, revisions[0]["entity_id"], config)
             differ.process_page(revisions)
             _emit_page(out_cols, repo, differ)
-        return _columnar_frame(out_cols)
+        return pa.Table.from_pydict(out_cols, schema=_UNIFIED_ARROW)
     return bucket_diff
 
 
@@ -955,4 +933,4 @@ def extract_changes(parsed: DataFrame,
                         F.pmod(F.xxhash64("repo", "path"), F.lit(n_buckets)))
             .repartition(n_buckets, "__bucket")
             .groupBy("__bucket")
-            .applyInPandas(make_bucket_diff_udf(config), schema=UNIFIED_SCHEMA))
+            .applyInArrow(make_bucket_diff_udf(config), schema=UNIFIED_SCHEMA))

@@ -1,8 +1,9 @@
 """Snapshot parsing: ``(repo, path, commit, lang, content)`` -> digested revisions.
 
 This is the heavy, *row-parallel* stage.  Every revision's entity JSON is
-decoded, homogenized and pre-hashed here, inside an Arrow-batched
-``mapInPandas`` — so the per-page grouped diff (diff.py) only performs cheap
+decoded, homogenized and pre-hashed here, inside ``mapInArrow`` (columns read
+as Python lists, one Arrow batch built per input batch) — so the
+per-page grouped diff (diff.py) only performs cheap
 set operations over pre-computed identities.  That split is the engine's
 primary skew mitigation: the reference does all of this work inside one
 sequential per-page loop (page_parser.py:1956-2326), which at 10^12 scale
@@ -46,12 +47,12 @@ import hashlib
 import json
 from typing import Iterator
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import canonical as C
-from .schema import PARSED_SCHEMA
+from .schema import PARSED_SCHEMA, pylist
 
 LANGUAGE = "en"  # reference setup.yml:3
 
@@ -244,23 +245,45 @@ def keep_flags(digest: dict | None) -> tuple[bool, bool, bool]:
     return False, False, False
 
 
-_BOOL_COLUMNS = ("is_deleted", "parse_ok", "is_redirect", "is_cleaned",
-                 "is_alias_only")
+# meta fields PARSED_SCHEMA types: a value of another JSON type (a string
+# or fractional id, a bool — which Python counts as an int — or a number
+# where text belongs) would fail the Arrow conversion of the whole batch, so
+# it nulls the field and quarantines its revision instead
+_META_TYPES = {"revision_id": int, "parent_id": int, "timestamp": str,
+               "username": str, "comment": str}
+_INT64 = range(-2 ** 63, 2 ** 63)
 
 
-def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in PARSED_SCHEMA.fields]
-    for pdf in batches:
-        # columnar accumulation: one list per output column instead of one
-        # dict per row (the list-of-dicts -> DataFrame path re-walked every
-        # row twice; profiled ~15% of the parse stage)
-        out: dict[str, list] = {c: [] for c in cols}
-        ap = {c: out[c].append for c in cols}
+def _typed_meta(meta) -> tuple[dict, bool]:
+    """``meta`` with every mistyped field nulled, and whether all were
+    typed right (null is allowed; ids must fit a long)."""
+    if not isinstance(meta, dict):
+        return {}, False
+    bad = [k for k, t in _META_TYPES.items()
+           if (v := meta.get(k)) is not None
+           and (type(v) is not t or (t is int and v not in _INT64))]
+    if not bad:
+        return meta, True
+    return {k: v for k, v in meta.items() if k not in bad}, False
+
+
+_PARSED_ARROW = to_arrow_schema(PARSED_SCHEMA)
+
+
+def _parse_batches(batches: Iterator[pa.RecordBatch]
+                   ) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        # columnar accumulation: one list per output column, built into
+        # one Arrow batch
+        out: dict[str, list] = {c: [] for c in _PARSED_ARROW.names}
+        ap = {c: acc.append for c, acc in out.items()}
         for repo, path, commit, lang, content in zip(
-                pdf["repo"], pdf["path"], pdf["commit"], pdf["lang"],
-                pdf["content"]):
+                *(pylist(batch.column(c))
+                  for c in ("repo", "path", "commit", "lang", "content"))):
             meta, digest, error = digest_revision(content, lang)
-            meta = meta or {}
+            meta, meta_ok = _typed_meta(meta or {})
+            if not meta_ok:
+                digest, error = None, error or "invalid_meta"
             ap["repo"](repo)
             ap["path"](path)
             ap["commit"](commit)
@@ -286,24 +309,7 @@ def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             ap["is_redirect"](redirect)
             ap["is_cleaned"](cleaned)
             ap["is_alias_only"](alias_only)
-        # pre-built ndarrays skip pandas' per-column inference and block
-        # consolidation (same pattern as diff.bucket_diff); the
-        # nullable-Int64 casts behave identically from object columns.
-        # The flag columns stay real bool dtype (they are never null) —
-        # pandas consumers rely on boolean `~`, which on object-dtype
-        # Python bools is arithmetic invert.
-        n = len(out["repo"])
-        data = {}
-        for c in cols:
-            if c in _BOOL_COLUMNS:
-                data[c] = np.array(out[c], dtype=bool)
-            else:
-                arr = np.empty(n, dtype=object)
-                arr[:] = out[c]
-                data[c] = arr
-        yield pd.DataFrame(data, columns=cols, copy=False).astype(
-            {"revision_id": "Int64", "parent_id": "Int64",
-             "entity_id": "Int64"})
+        yield pa.RecordBatch.from_pydict(out, schema=_PARSED_ARROW)
 
 
 _NAMESPACE_RES = {"item": r"^Q\d+$", "property": r"^P\d+$"}
@@ -319,7 +325,7 @@ def parse_documents(docs: DataFrame, namespace: str = "item") -> DataFrame:
     instead — the PropertyDocument pass of the reference's
     ExtractLabelsProperties dump tool (extractors.property_labels)."""
     filtered = docs.filter(F.col("path").rlike(_NAMESPACE_RES[namespace]))
-    return filtered.mapInPandas(_parse_batches, schema=PARSED_SCHEMA)
+    return filtered.mapInArrow(_parse_batches, schema=PARSED_SCHEMA)
 
 
 def quarantine(parsed: DataFrame) -> DataFrame:

@@ -5,8 +5,11 @@ Spark-shaped restatement of the reference's main pipeline
 file-claiming / queueing / multiprocess plumbing collapses into Spark task
 scheduling; the only surviving stages are
 
-    scan -> parse (mapInPandas) -> group by page -> diff (applyInPandas)
+    scan -> parse (mapInArrow) -> group by page bucket -> diff (applyInArrow)
          -> split/enrich (joins + column exprs) -> materialize
+
+The diff path's Python stages read and write Arrow batches directly (no
+pandas frame, so a null long stays None, never NaN).
 
 Recommended session conf (see ``configure_session``): AQE on (skew-join +
 partition coalescing), UTC session timezone, Arrow enabled.
@@ -15,6 +18,7 @@ partition coalescing), UTC session timezone, Arrow enabled.
 from __future__ import annotations
 
 import functools
+import os
 from collections.abc import Mapping
 from dataclasses import dataclass, field
 
@@ -47,17 +51,26 @@ SESSION_CONF = {
 }
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical RAM in whole GiB (at least 1g, at most 24g):
+    the driver JVM shares the host with the Python workers."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24, max(1, ram // 2 ** 31))}g"
+
+
 def build_session(app_name: str = "widiff", master: str | None = None,
                   shuffle_partitions: int | None = None,
                   driver_memory: str | None = None) -> SparkSession:
     """Session with the engine's conf.  In local mode the driver JVM is the
     whole cluster, so give it real heap (local[32] with a 1g default OOMs on
-    the wide diff shuffles); on a real cluster spark-submit owns memory."""
-    import os
+    the wide diff shuffles); on a real cluster spark-submit owns memory.
+    ``driver_memory``, then ``WIDIFF_DRIVER_MEMORY``, override the
+    host-derived default."""
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
-    mem = driver_memory or os.environ.get("WIDIFF_DRIVER_MEMORY", "24g")
+    mem = (driver_memory or os.environ.get("WIDIFF_DRIVER_MEMORY")
+           or default_driver_memory())
     builder = builder.config("spark.driver.memory", mem) \
                      .config("spark.driver.maxResultSize", "4g")
     for k, v in SESSION_CONF.items():
@@ -116,7 +129,6 @@ class PipelineResult:
 # salted wins even earlier; 40k is therefore a conservative default.
 # Override per-cluster with WIDIFF_SKEW_THRESHOLD.
 def _auto_threshold() -> int:
-    import os
     return int(os.environ.get("WIDIFF_SKEW_THRESHOLD", "40000"))
 
 
@@ -150,7 +162,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
                  persist: bool = True,
                  mode: str = "auto") -> PipelineResult:
     """``mode='auto'`` (default): probe max-revisions-per-page and pick.
-    ``mode='grouped'``: per-page applyInPandas replay — minimal shuffle,
+    ``mode='grouped'``: per-page applyInArrow replay — minimal shuffle,
     right for balanced corpora.  ``mode='salted'``: pair-parallel diff
     (salted.py) — immune to hot-page skew, one extra window shuffle;
     row-identical output (tests/test_salted_parity.py).

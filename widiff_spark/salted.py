@@ -21,10 +21,10 @@ replay decomposes into
      equals dedup against the previous *kept* revision.
   2. PAIR construction (one window shuffle): lag(snapshot) over kept
      revisions per page — each output row carries (prev, curr).
-  3. PAIR DIFF (mapInPandas, row-parallel — the skew killer): the same
+  3. PAIR DIFF (mapInArrow, row-parallel — the skew killer): the same
      PageDiffer branch dispatch per pair; a 60k-revision page becomes 60k
      independent rows spread over the cluster.
-  4. REVERT TAGGING (applyInPandas over (page, property, value) — far finer
+  4. REVERT TAGGING (applyInArrow over (page, property, value) — far finer
      than pages): the grouped mode's revert.tag_reverted_edits over the
      group's emitted value rows.  Every row of one value_change PK falls in
      one group, so the stage emits the PK-deduplicated, flagged rows itself;
@@ -75,15 +75,16 @@ from __future__ import annotations
 import json
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import canonical as C
 from .config import DEFAULT_CONFIG, PipelineConfig
-from .diff import (PageDiffer, _UNIFIED_COLUMNS, _columnar_frame, _emit_rows,
-                   _hashable, _prep_revisions, _table_const)
+from .diff import (PageDiffer, _emit_rows, _hashable, _prep_revisions,
+                   _table_const)
 from .revert import REVERT_STATS, tag_reverted_edits
-from .schema import ENTITY_STATS_SCHEMA, UNIFIED_SCHEMA
+from .schema import ENTITY_STATS_SCHEMA, UNIFIED_SCHEMA, pyrows
 
 
 def kept_pairs(parsed: DataFrame) -> DataFrame:
@@ -123,18 +124,16 @@ def make_pair_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):
     pair); value rows carry their revision's comment for the revert-tagging
     stage.  Meta, user type and the revision row come from the PageDiffer
     code the grouped replay runs, the output columns from its emitter."""
-    out_columns = _UNIFIED_COLUMNS + ["commit"]
-
-    def pair_diff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def pair_diff(batches: Iterator[pa.RecordBatch]
+                  ) -> Iterator[pa.RecordBatch]:
         # rows arrive page-partitioned and commit-ordered (the pair window's
         # own shuffle), so the previous row's decoded curr IS this row's
         # prev: one decode per revision, like the grouped replay (a
         # string-equality check guards page boundaries / reordered input)
         last: dict | None = None
-        for pdf in batches:
-            out: dict = {c: [] for c in out_columns}
-            emit_idx: list[int] = []
-            for rec in _prep_revisions(pdf.to_dict("records")):
+        for batch in batches:
+            out: dict = {c: [] for c in _PAIR_OUT_ARROW.names}
+            for rec in _prep_revisions(pyrows(batch)):
                 if rec["is_first"]:
                     prev = None
                 elif last is not None and rec["prev_snapshot"] == last["snapshot"]:
@@ -142,7 +141,7 @@ def make_pair_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):
                 else:
                     prev = C.fast_json_loads(rec["prev_snapshot"])
                 last = rec
-                differ = PageDiffer(rec["repo"], int(rec["entity_id"]), config)
+                differ = PageDiffer(rec["repo"], rec["entity_id"], config)
                 differ.begin_revision(rec)
                 differ.get_changes_from_revisions(rec["digest"], prev)
                 differ.store_revision(rec, rec["prev_revision_id"])
@@ -151,10 +150,8 @@ def make_pair_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):
                         continue
                     _emit_rows(out, rows, {"table": table, "repo": rec["repo"],
                                            "commit": rec["commit"]})
-                    emit_idx.extend(range(len(rows)))
-            frame = _columnar_frame(out)
-            frame["emit_idx"] = emit_idx
-            yield frame
+                    out["emit_idx"][-len(rows):] = range(len(rows))
+            yield pa.RecordBatch.from_pydict(out, schema=_PAIR_OUT_ARROW)
     return pair_diff
 
 
@@ -165,6 +162,7 @@ _PAIR_OUT_SCHEMA = T.StructType(
     list(UNIFIED_SCHEMA.fields)
     + [T.StructField("commit", T.StringType()),
        T.StructField("emit_idx", T.IntegerType())])
+_PAIR_OUT_ARROW = to_arrow_schema(_PAIR_OUT_SCHEMA)
 
 
 # tag-stage output = unified columns + the group's revert-stat counts, which
@@ -172,6 +170,19 @@ _PAIR_OUT_SCHEMA = T.StructType(
 _TAG_OUT_SCHEMA = T.StructType(
     list(UNIFIED_SCHEMA.fields)
     + [T.StructField(c, T.IntegerType()) for c in REVERT_STATS])
+_TAG_OUT_ARROW = to_arrow_schema(_TAG_OUT_SCHEMA)
+
+_P31_SCHEMA = T.StructType([T.StructField("repo", T.StringType()),
+                            T.StructField("entity_id", T.LongType()),
+                            T.StructField("entity_types_31", T.StringType())])
+_P31_ARROW = to_arrow_schema(_P31_SCHEMA)
+
+
+def _sorted_rows(table: pa.Table) -> list[dict]:
+    """A group's rows in replay order: row order within a group is not
+    guaranteed, and the sort is stable like the emission it restores."""
+    return pyrows(table.sort_by([("commit", "ascending"),
+                                 ("emit_idx", "ascending")]))
 
 
 def _tag_udf(config: PipelineConfig):
@@ -179,21 +190,14 @@ def _tag_udf(config: PipelineConfig):
     the grouped mode's tag_reverted_edits on a key far finer than pages.
     Every row of one value_change PK falls in one group, so the PK dedup
     happens here too: the group emits its tagged, deduplicated rows."""
-    out_columns = _UNIFIED_COLUMNS + list(REVERT_STATS)
-
-    def tag(pdf):
-        pdf = pdf.sort_values(["commit", "emit_idx"], kind="mergesort")
-        rows = pdf.to_dict("records")
-        for r in rows:  # NaN -> None, as _prep_revisions does
-            if r["revision_id"] != r["revision_id"]:
-                r["revision_id"] = None
-        tagged, stats = tag_reverted_edits(rows,
+    def tag(table: pa.Table) -> pa.Table:
+        tagged, stats = tag_reverted_edits(_sorted_rows(table),
                                            config.time_threshold_seconds)
-        out: dict = {c: [] for c in out_columns}
+        out: dict = {c: [] for c in _TAG_OUT_ARROW.names}
         _emit_rows(out, tagged, _table_const("value_change"))
         for c in REVERT_STATS:
             out[c][0] = stats[c]
-        return _columnar_frame(out)
+        return pa.Table.from_pydict(out, schema=_TAG_OUT_ARROW)
     return tag
 
 
@@ -203,10 +207,11 @@ def _p31_replay_udf():
     every _types_add/_types_remove in the reference coincides with an
     emitted P31 row (diff.py call sites), so the row stream is a complete
     event log of the type set."""
-    def replay(key, pdf):
-        pdf = pdf.sort_values(["commit", "emit_idx"], kind="mergesort")
+    # (grouping-key scalars, pa.Table) -> pa.Table, without type hints:
+    # PySpark infers the UDF form from hints and fails on a partial set
+    def replay(key, table):
         types: dict = {}
-        for rec in pdf.to_dict("records"):
+        for rec in _sorted_rows(table):
             sid = rec["value_id"]
 
             def parse(ser):
@@ -224,9 +229,10 @@ def _p31_replay_udf():
                 types.pop((sid, _hashable(ov)), None)
                 types[(sid, _hashable(nv))] = nv
         type_ids = list(dict.fromkeys(_hashable(t) for t in types.values()))
-        return pd.DataFrame([{
-            "repo": key[0], "entity_id": key[1],
-            "entity_types_31": ", ".join(str(t) for t in type_ids)}])
+        return pa.Table.from_pydict(
+            {"repo": [key[0].as_py()], "entity_id": [key[1].as_py()],
+             "entity_types_31": [", ".join(str(t) for t in type_ids)]},
+            schema=_P31_ARROW)
     return replay
 
 
@@ -253,7 +259,7 @@ def extract_changes_salted(parsed: DataFrame,
         "username", "user_id", "comment", "parse_ok", "snapshot",
         "prev_snapshot", "prev_revision_id", "is_first"
     ).repartitionByRange(n_parts, "repo", "path", "commit") \
-     .mapInPandas(make_pair_diff_udf(config), schema=_PAIR_OUT_SCHEMA)
+     .mapInArrow(make_pair_diff_udf(config), schema=_PAIR_OUT_SCHEMA)
     diffed = diffed.persist()
 
     # ---- revert tagging + PK dedup on (page, property, value) groups ----
@@ -261,7 +267,7 @@ def extract_changes_salted(parsed: DataFrame,
     value_rows = diffed.filter(F.col("table") == "value_change")
     tagged = (value_rows
               .groupBy(*page, "property_id", "value_id")
-              .applyInPandas(_tag_udf(config), schema=_TAG_OUT_SCHEMA)
+              .applyInArrow(_tag_udf(config), schema=_TAG_OUT_SCHEMA)
               .persist())
     revert_stats = tagged.groupBy(*page).agg(
         *[F.sum(c).cast("int").alias(c) for c in REVERT_STATS])
@@ -305,9 +311,7 @@ def extract_changes_salted(parsed: DataFrame,
            .select("repo", "entity_id", "value_id", "action", "old_value",
                    "new_value", "commit", "emit_idx")
            .groupBy(*page)
-           .applyInPandas(_p31_replay_udf(),
-                          schema="repo string, entity_id long, "
-                                 "entity_types_31 string"))
+           .applyInArrow(_p31_replay_udf(), schema=_P31_SCHEMA))
 
     # every page gets a stats row, even with zero kept revisions (grouped
     # mode instantiates a PageDiffer per page unconditionally); W4 label/

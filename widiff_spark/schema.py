@@ -8,6 +8,7 @@ scripts/const.py:113-446; here each layout is an explicit Spark schema.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
@@ -180,3 +181,22 @@ TABLE_COLUMNS = {
         "entity_label", "repo",
     ],
 }
+
+
+# ---------------------------------------------------------------------------
+# Reading Arrow at the Python boundary (mapInArrow / applyInArrow stages)
+# ---------------------------------------------------------------------------
+def pylist(col) -> list:
+    """An Arrow column as Python objects, nulls as None.  NumPy's conversion
+    is ~4-6x faster than ``to_pylist``'s per-value scalars, but it would
+    turn a null number into NaN, so a non-string column with nulls takes
+    ``to_pylist``."""
+    if col.null_count and not pa.types.is_string(col.type):
+        return col.to_pylist()
+    return col.to_numpy(zero_copy_only=False).tolist()
+
+
+def pyrows(table) -> list[dict]:
+    """``table.to_pylist()``: one dict per row, built from ``pylist``."""
+    names = table.column_names
+    return [dict(zip(names, row)) for row in zip(*map(pylist, table.columns))]
