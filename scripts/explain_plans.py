@@ -75,11 +75,13 @@ def main() -> None:
     sections = [
         ("kg extraction core (parse -> bucket-grouped diff -> split/enrich)",
          vc,
-         "What to look for: ONE Exchange (the xxhash64 page-bucket shuffle "
-         "of compact digests) feeding the grouped FlatMapGroupsInArrow; the "
-         "rlike namespace filter sits on the scan side of the parse "
-         "MapInArrow; no pandas operator on the path; the property-label "
-         "dim joins as BroadcastHashJoin."),
+         "What to look for: past the parse, ONE Exchange (the xxhash64 "
+         "page-bucket shuffle of compact digests) feeding the grouped "
+         "FlatMapGroupsInArrow; the rlike namespace filter sits on the scan "
+         "side of the parse MapInArrow; no pandas operator from the parse "
+         "on (the MapInPandas under it is the fixture corpus generator, "
+         "fixtures._corpus_batches); the property-label dim joins as "
+         "BroadcastHashJoin."),
         ("relational probe with pushdown (rel_pricing_summary)",
          relops.QUERIES["rel_pricing_summary"](spark, sf),
          "PushedFilters + pruned ReadSchema on the lineitem scan; partial + "

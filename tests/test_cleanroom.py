@@ -167,8 +167,11 @@ from hypothesis import given, settings, strategies as st  # noqa: E402
 
 @st.composite
 def _page_history(draw):
-    """Random single-page history over every snak family, ranks, qualifiers,
-    references, restore comments and duplicate timestamps."""
+    """Random single-page history over every snak family, ranks, qualifiers
+    (empty lists too), references, restore comments and duplicate
+    timestamps, and over every shape the keep rule classifies: identical
+    consecutive snapshots, alias-only and sitelink-only revisions,
+    redirects and emptied revisions."""
     snak_pool = [
         lambda: fixtures.string_snak("P1476", draw(st.sampled_from(
             ["a", "b", "some text"]))),
@@ -195,30 +198,61 @@ def _page_history(draw):
     # crashes it — outside the reference's valid behavior envelope.
     pools = {"s1": [0, 1, 3, 4, 6], "s2": [0, 1, 2, 3, 4, 6],
              "s3": [0, 1, 3, 4, 5, 6]}
+    end_time = [fixtures.time_snak("P582", "+2020-01-01T00:00:00Z")]
     for i in range(n):
-        claims = {}
-        for pid, sid in (("P31", "s1"), ("P1082", "s2"), ("P569", "s3")):
-            if draw(st.booleans()):
-                mk = snak_pool[draw(st.sampled_from(pools[sid]))]
-                stmt = fixtures.statement(
-                    f"q7${sid}", mk(),
-                    rank=draw(st.sampled_from(["normal", "preferred",
-                                               "deprecated"])),
-                    qualifiers={"P582": [fixtures.time_snak(
-                        "P582", "+2020-01-01T00:00:00Z")]}
-                    if draw(st.booleans()) else None,
-                    references=[fixtures.reference({"P143": [
-                        fixtures.entity_snak("P143", "Q328")]})]
-                    if draw(st.booleans()) else None)
-                claims.setdefault(pid, []).append(stmt)
+        rid = 5000 + i
         ts = fixtures._ts(draw(st.integers(0, 2)))  # duplicate ts likely
-        body = fixtures.content(
-            5000 + i, ts, claims=claims,
-            label=draw(st.sampled_from(["L", "M", None])),
-            desc=draw(st.sampled_from(["d", None])),
-            comment=draw(st.sampled_from(["", "restore", "rollback x"])),
-            username=draw(st.sampled_from(["A", "FixBot", ""])))
-        rows.append(fixtures.row("Q77000", 5000 + i, body))
+        meta = {"comment": draw(st.sampled_from(["", "restore",
+                                                 "rollback x"])),
+                "username": draw(st.sampled_from(["A", "FixBot", ""]))}
+        kind = draw(st.sampled_from(["claims", "claims", "claims", "same",
+                                     "alias_only", "sitelink_only",
+                                     "redirect", "emptied"]))
+        if kind == "same" and rows:
+            # the previous snapshot again, under this revision's meta, and
+            # maybe with an empty qualifier list on each statement without
+            # qualifiers (the qualifier diff emits nothing for it)
+            doc = json.loads(rows[-1]["content"])
+            doc["meta"].update(revision_id=rid, timestamp=ts, **meta)
+            if draw(st.booleans()):
+                for stmts in (doc.get("claims") or {}).values():
+                    for stmt in stmts:
+                        stmt.setdefault("qualifiers", {"P582": []})
+            body = json.dumps(doc)
+        elif kind == "alias_only":
+            body = fixtures.content(rid, ts, aliases=[draw(
+                st.sampled_from(["al", "am"]))], **meta)
+        elif kind == "sitelink_only":
+            body = fixtures.content(rid, ts, sitelinks={"enwiki": {
+                "site": "enwiki", "title": draw(st.sampled_from(
+                    ["T", "U"]))}}, **meta)
+        elif kind == "redirect":
+            body = fixtures.content(rid, ts, redirect="Q42", entity="Q77000",
+                                    **meta)
+        elif kind == "emptied":
+            body = fixtures.content(rid, ts, **meta)
+        else:
+            claims = {}
+            for pid, sid in (("P31", "s1"), ("P1082", "s2"),
+                             ("P569", "s3")):
+                if draw(st.booleans()):
+                    mk = snak_pool[draw(st.sampled_from(pools[sid]))]
+                    stmt = fixtures.statement(
+                        f"q7${sid}", mk(),
+                        rank=draw(st.sampled_from(["normal", "preferred",
+                                                   "deprecated"])),
+                        qualifiers=draw(st.sampled_from(
+                            [None, None, {"P582": end_time},
+                             {"P582": []}])),
+                        references=[fixtures.reference({"P143": [
+                            fixtures.entity_snak("P143", "Q328")]})]
+                        if draw(st.booleans()) else None)
+                    claims.setdefault(pid, []).append(stmt)
+            body = fixtures.content(
+                rid, ts, claims=claims,
+                label=draw(st.sampled_from(["L", "M", None])),
+                desc=draw(st.sampled_from(["d", None])), **meta)
+        rows.append(fixtures.row("Q77000", rid, body))
     return rows
 
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 from widiff_spark import fixtures as FX
 from widiff_spark.config import DEFAULT_CONFIG
 from widiff_spark.diff import PageDiffer
-from widiff_spark.parse import digest_revision
+from widiff_spark.parse import digest_revision, keep_flags, state_key
 
 
 def run_page(bodies: list[tuple[str, str]], entity_id: int = 9) -> dict:
@@ -14,7 +14,10 @@ def run_page(bodies: list[tuple[str, str]], entity_id: int = 9) -> dict:
     revisions = []
     for lang, body in bodies:
         meta, digest, _err = digest_revision(body, lang)
+        redirect, cleaned, alias_only = keep_flags(digest)
         revisions.append({
+            "state_key": state_key(digest), "is_redirect": redirect,
+            "is_cleaned": cleaned, "is_alias_only": alias_only,
             "revision_id": meta.get("revision_id"),
             "timestamp": meta.get("timestamp"),
             "comment": meta.get("comment") or "",

@@ -18,7 +18,7 @@ from hypothesis import given, settings, strategies as st
 from widiff_spark import fixtures as FX
 from widiff_spark.config import DEFAULT_CONFIG
 from widiff_spark.diff import PageDiffer
-from widiff_spark.parse import digest_revision
+from widiff_spark.parse import digest_revision, keep_flags, state_key
 
 VALUES = ["alpha", "beta", "gamma", "delta"]
 PIDS = ["P100", "P200"]
@@ -53,7 +53,10 @@ def run_differ(script):
         body = FX.content(1000 + i, FX._ts(i), claims=claims,
                           label="proptest")
         meta, digest, err = digest_revision(body, "wikidata-json")
+        redirect, cleaned, alias_only = keep_flags(digest)
         revisions.append({
+            "state_key": state_key(digest), "is_redirect": redirect,
+            "is_cleaned": cleaned, "is_alias_only": alias_only,
             "revision_id": meta["revision_id"],
             "timestamp": meta["timestamp"],
             "comment": meta.get("comment") or "",

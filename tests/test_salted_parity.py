@@ -267,6 +267,111 @@ def test_malformed_meta_ids_are_quarantined(spark, mode):
     _assert_identical(spark, docs)
 
 
+# Q996's revisions whose claims have a shape the digest cannot read
+_MALFORMED_CLAIMS = {
+    7601: {"P31": [{"id": 5, "mainsnak": {}}]},  # numeric statement id
+    7602: {"foo": []},  # claims key not P<digits>
+    7603: {"P31": [fixtures.statement(
+        "q996$S1", fixtures.entity_snak("P31", "Q5"),
+        qualifiers={"foo": [fixtures.string_snak("foo", "v")]})]},
+    7604: {"P31": [fixtures.statement(
+        "q996$S1", fixtures.entity_snak("P31", "Q5"),
+        references=[fixtures.reference(
+            {"zz": [fixtures.string_snak("zz", "v")]})])]},
+    7605: {"P31": ["q996$S1"]},  # statement not an object
+}
+
+
+def _malformed_claims_rows() -> list[dict]:
+    """Q996: clean revisions 7600 and 7606 around one revision per
+    malformed claim shape."""
+    return [fixtures.row("Q996", rid, fixtures.content(
+        rid, fixtures._ts(rid % 100), label=f"l{rid}",
+        claims=_MALFORMED_CLAIMS.get(rid))) for rid in range(7600, 7607)]
+
+
+@pytest.mark.parametrize("mode", ["grouped", "salted"])
+def test_malformed_claims_are_quarantined(spark, mode):
+    """A claim shape the digest cannot read (a numeric statement id, a
+    claims, qualifier or reference key that is no P-id, a statement that
+    is no object) quarantines its revision instead of failing the task
+    and with it every page in the partition."""
+    from widiff_spark import pipeline
+
+    docs = spark.createDataFrame(pd.DataFrame(_malformed_claims_rows()),
+                                 schema=fixtures.DOCUMENTS_SCHEMA)
+    res = pipeline.run_pipeline(spark, docs, mode=mode)
+    try:
+        got = sorted(tuple(r) for r in res.tables["quarantine"].select(
+            "commit", "revision_id", "error").collect())
+        assert got == [(f"r{rid:010d}", rid, "invalid_claims")
+                       for rid in sorted(_MALFORMED_CLAIMS)]
+        revisions = res.tables["revision"].select(
+            "revision_id", "prev_revision_id").collect()
+        assert sorted(tuple(r) for r in revisions) == [(7600, -1),
+                                                       (7606, 7600)]
+    finally:
+        res.unpersist()
+
+
+def _twin_path_rows() -> list[dict]:
+    """Q012 and Q12 parse to one entity id but are two pages: Q012 has two
+    revisions (labels a, c), Q12 one (label b) committed between them."""
+    return [fixtures.row(path, rid, fixtures.content(
+        rid, fixtures._ts(rid % 100), label=label))
+        for path, rid, label in (("Q012", 9001, "a"), ("Q12", 9002, "b"),
+                                 ("Q012", 9003, "c"))]
+
+
+def _empty_qualifier_rows() -> list[dict]:
+    """Q500: 7002 repeats 7001's P31=Q5 plus an empty P580 qualifier list,
+    for which the qualifier diff emits nothing; 7003 changes the label
+    x -> y."""
+    def body(rid, label, qualifiers=None):
+        return fixtures.content(rid, fixtures._ts(rid % 100), label=label,
+                                claims={"P31": [fixtures.statement(
+                                    "q500$S1",
+                                    fixtures.entity_snak("P31", "Q5"),
+                                    qualifiers=qualifiers)]})
+    return [fixtures.row("Q500", 7001, body(7001, "x")),
+            fixtures.row("Q500", 7002, body(7002, "x", {"P580": []})),
+            fixtures.row("Q500", 7003, body(7003, "y"))]
+
+
+@pytest.mark.parametrize("mode", ["grouped", "salted"])
+def test_page_key_and_keep_rule_match_cleanroom(spark, mode):
+    """Both modes give the cleanroom's revision rows and page stats where
+    they once disagreed: twin paths of one entity id stay two pages, and
+    an empty qualifier list is no change."""
+    from cleanroom import replay_corpus
+
+    rows = _twin_path_rows() + _empty_qualifier_rows()
+    docs = spark.createDataFrame(pd.DataFrame(rows),
+                                 schema=fixtures.DOCUMENTS_SCHEMA)
+    parsed = parse.parse_documents(docs).persist()
+    extract = diff.extract_changes if mode == "grouped" \
+        else salted.extract_changes_salted
+    unified = extract(parsed).toPandas()
+    parsed.unpersist()
+    clean = replay_corpus(rows)
+
+    def revisions(rs):
+        return sorted((r["entity_id"], r["revision_id"],
+                       r["prev_revision_id"]) for r in rs)
+
+    def stats(ss):
+        return sorted((s["entity_id"], s["entity_label"], s["num_revisions"])
+                      for s in ss)
+    got_revisions = revisions(
+        unified[unified.table == "revision"].to_dict("records"))
+    got_stats = stats(map(json.loads, unified[
+        unified.table == "entity_stats"].payload))
+    assert got_revisions == revisions(clean["revision"])
+    assert got_stats == stats(clean["entity_stats"])
+    assert got_stats == [(12, "b", 1), (12, "c", 2), (500, "y", 2)]
+    assert (500, 7003, 7001) in got_revisions
+
+
 def _parsed_rows_per_run(spark, monkeypatch, mode: str) -> tuple[int, int]:
     """(input rows, rows the parse UDF emitted) over one run_pipeline that
     reads value_change, entity_stats and quarantine."""

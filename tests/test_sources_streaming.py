@@ -132,6 +132,34 @@ class TestStreaming:
         batch.unpersist()
         assert vc.count() == expected
 
+    def test_trigger_runs_salted_diff_on_hot_page(self, spark, tmp_path,
+                                                  monkeypatch):
+        """A trigger picks the diff mode from its checkpoint statistics:
+        with the skew threshold below the hot page, it runs the salted
+        diff."""
+        from widiff_spark import fixtures, salted
+        calls = []
+        extract = salted.extract_changes_salted
+
+        def counted(*args, **kwargs):
+            calls.append(1)
+            return extract(*args, **kwargs)
+
+        monkeypatch.setattr(salted, "extract_changes_salted", counted)
+        monkeypatch.setenv("WIDIFF_SKEW_THRESHOLD", "50")
+        in_dir = str(tmp_path / "incoming_hot")
+        fixtures.edge_case_corpus(spark, include_hot_page=True,
+                                  hot_revisions=60) \
+            .write.mode("overwrite").parquet(in_dir)
+        q = streaming.run_streaming_pipeline(
+            streaming.stream_documents(spark, in_dir),
+            staging_dir=str(tmp_path / "staging_hot"),
+            output_dir=str(tmp_path / "out_hot"),
+            checkpoint_dir=str(tmp_path / "ckpt_hot"))
+        q.awaitTermination(120)
+        q.stop()
+        assert calls
+
     def test_flat_legacy_staging_fails_with_restage_message(self, spark,
                                                             tmp_path):
         """ADVICE r5: appending partitionBy('bucket') files into a staging

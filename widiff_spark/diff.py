@@ -11,8 +11,10 @@ hashing already happened row-parallel).  The UDF reads Arrow rows as
 Python objects (nulls are None) and writes one Arrow table per bucket.
 
 Sequential-by-construction rules that force the per-page grouping:
-  * the diff predecessor only advances when a revision produced changes
-    (page_parser.py:2066-2123) — W1's "kept revisions only" lag;
+  * the diff predecessor only advances on a kept revision
+    (page_parser.py:2066-2123) — W1's "kept revisions only" lag.  The keep
+    rule reads the parse's keep columns (parse.state_key /
+    parse.keep_flags), the rule salted.kept_pairs applies too;
   * parent-pointer repair across deleted/skipped revisions (W2,
     page_parser.py:2002-2011, 2066-2073);
   * the running P31 type set replay (W3);
@@ -62,8 +64,7 @@ class PageDiffer:
         self.reference_rows: list[dict] = []
         self.metadata_rows: list[dict] = []
 
-        self.current_revision_redirect = False
-        self.meta: dict = {}
+        self.meta: dict = {}  # the revision being replayed
         self.entity_data = {"label": "", "alias": "", "p31_types": {}}
         self.stats = {k: 0 for k in _STATS_KEYS}
         self.stats.update({
@@ -238,7 +239,7 @@ class PageDiffer:
     # ------------------------------------------------------------------ #
 
     def _diff_qualifiers(self, stmt_pid: str, stmt_value_id,
-                         prev_stmt, curr_stmt) -> bool:
+                         prev_stmt, curr_stmt) -> None:
         """Hash-keyed CREATE/DELETE diff of qualifier snaks
         (page_parser.py:1226-1348)."""
         prev = (prev_stmt or {}).get("quals") or {}
@@ -247,29 +248,25 @@ class PageDiffer:
             # identical qualifier sets (the common case between consecutive
             # revisions) produce zero CREATE/DELETE rows below — skip the
             # per-pid map/sort construction entirely
-            return False
-        changed = False
+            return
         for pid in sorted(set(prev) | set(curr)):
             prev_map = {h: (v, dt) for h, v, dt in prev.get(pid, [])}
             curr_map = {h: (v, dt) for h, v, dt in curr.get(pid, [])}
             for h in sorted(set(prev_map) - set(curr_map), key=str):
-                changed = True
                 val, dtype = prev_map[h]
                 self.save_qualifier_change(
                     C.id_to_int(stmt_pid), stmt_value_id, C.id_to_int(pid), h,
                     old_value=val, new_value=None, old_datatype=dtype,
                     new_datatype=None, change_type=C.DELETE_QUALIFIER_VALUE)
             for h in sorted(set(curr_map) - set(prev_map), key=str):
-                changed = True
                 val, dtype = curr_map[h]
                 self.save_qualifier_change(
                     C.id_to_int(stmt_pid), stmt_value_id, C.id_to_int(pid), h,
                     old_value=None, new_value=val, old_datatype=None,
                     new_datatype=dtype, change_type=C.CREATE_QUALIFIER_VALUE)
-        return changed
 
     def _diff_references(self, stmt_pid: str, stmt_value_id,
-                         prev_stmt, curr_stmt) -> bool:
+                         prev_stmt, curr_stmt) -> None:
         """(ref_hash, pid, value_hash)-keyed CREATE/DELETE diff of reference
         snaks (page_parser.py:1084-1224)."""
         prev_refs = (prev_stmt or {}).get("refs") or []
@@ -277,12 +274,10 @@ class PageDiffer:
         if prev_refs == curr_refs:
             # identical reference sets emit nothing below — skip the
             # key-map construction (covers the both-empty case too)
-            return False
+            return
         prev_map = {(rh, pid, vh): (v, dt) for rh, pid, vh, v, dt in prev_refs}
         curr_map = {(rh, pid, vh): (v, dt) for rh, pid, vh, v, dt in curr_refs}
-        changed = False
         for key in sorted(set(prev_map) - set(curr_map), key=str):
-            changed = True
             rh, pid, vh = key
             val, dtype = prev_map[key]
             self.save_reference_change(
@@ -290,14 +285,12 @@ class PageDiffer:
                 old_value=val, new_value=None, old_datatype=dtype,
                 new_datatype=None, change_type=C.DELETE_REFERENCE_VALUE)
         for key in sorted(set(curr_map) - set(prev_map), key=str):
-            changed = True
             rh, pid, vh = key
             val, dtype = curr_map[key]
             self.save_reference_change(
                 C.id_to_int(stmt_pid), stmt_value_id, C.id_to_int(pid), rh, vh,
                 old_value=None, new_value=val, old_datatype=None,
                 new_datatype=dtype, change_type=C.CREATE_REFERENCE_VALUE)
-        return changed
 
     # ------------------------------------------------------------------ #
     # datatype metadata diff (page_parser.py:614-983)
@@ -473,17 +466,15 @@ class PageDiffer:
                                  change_type=C.DELETE_PROPERTY_VALUE,
                                  old_hash="", new_hash="")
 
-    def _diff_label_description(self, prev: dict, curr: dict) -> bool:
+    def _diff_label_description(self, prev: dict, curr: dict) -> None:
         """Label/description change rows with synthetic pids -1/-2
         (page_parser.py:1532-1597)."""
-        changed = False
         for prop_id, value_id, field in ((C.LABEL_PROP_ID, "label", "label"),
                                          (C.DESCRIPTION_PROP_ID, "description",
                                           "description")):
             prev_val = prev.get(field) if prev else None
             curr_val = curr.get(field)
             if curr_val != prev_val:
-                changed = True
                 self.save_change(
                     prop_id, value_id, old_value=prev_val, new_value=curr_val,
                     old_datatype="string" if prev_val is not None else None,
@@ -491,7 +482,6 @@ class PageDiffer:
                     change_target=None,
                     change_type=C.label_change_type(prev_val, curr_val),
                     old_hash="", new_hash="")
-        return changed
 
     def _handle_new_pids(self, new_pids: Iterable[str], curr_claims: dict) -> None:
         # page_parser.py:1600-1647
@@ -545,7 +535,7 @@ class PageDiffer:
                 self._diff_references(pid, sid, stmt, None)
 
     def _handle_rank_changes(self, prev_stmt, curr_stmt, pid, sid,
-                             old_hash, new_hash) -> bool:
+                             old_hash, new_hash) -> None:
         # page_parser.py:1702-1752
         prev_rank = (prev_stmt or {}).get("rank")
         curr_rank = (curr_stmt or {}).get("rank")
@@ -555,24 +545,19 @@ class PageDiffer:
             self.save_change(C.id_to_int(pid), sid, None, curr_rank, old_dt,
                              new_dt, "rank", C.CREATE_PROPERTY_VALUE,
                              None, new_hash)
-            return True
-        if not curr_stmt:
+        elif not curr_stmt:
             self.save_change(C.id_to_int(pid), sid, prev_rank, None, old_dt,
                              new_dt, "rank", C.DELETE_PROPERTY_VALUE,
                              old_hash, None)
-            return True
-        if prev_rank != curr_rank:
+        elif prev_rank != curr_rank:
             self.save_change(C.id_to_int(pid), sid, prev_rank, curr_rank,
                              old_dt, new_dt, "rank", C.UPDATE_RANK,
                              old_hash, new_hash)
-            return True
-        return False
 
     def _handle_remaining_pids(self, remaining: Iterable[str],
-                               prev_claims: dict, curr_claims: dict) -> bool:
+                               prev_claims: dict, curr_claims: dict) -> None:
         """Statement-id full-outer diff per shared pid
         (page_parser.py:1754-1888)."""
-        changed = False
         for pid in sorted(remaining):
             prev_stmts = prev_claims.get(pid, [])
             curr_stmts = curr_claims.get(pid, [])
@@ -593,10 +578,10 @@ class PageDiffer:
                 if prev_stmt == curr_stmt:
                     # deep-equal statements (the common case when only one
                     # sid of a multi-statement pid changed): equal hashes
-                    # take no value/metadata branch, equal ranks return
-                    # False from _handle_rank_changes, and equal quals/refs
-                    # hit the == early-exits — one C-speed compare replaces
-                    # the three sub-diff calls.  Conservative like the
+                    # take no value/metadata branch, equal ranks emit no
+                    # rank row, and equal quals/refs hit the == early-exits
+                    # — one C-speed compare replaces the three sub-diff
+                    # calls.  Conservative like the
                     # list-level check above: any difference (incl. NaN)
                     # falls through to the full diff.
                     continue
@@ -610,7 +595,6 @@ class PageDiffer:
                 new_md = curr_stmt["metadata"] if curr_stmt else None
 
                 if prev_stmt and not curr_stmt:
-                    changed = True
                     self._types_remove(pid, sid, old_value)
                     self.save_change(
                         C.id_to_int(pid), sid, old_value, new_value, old_dt,
@@ -623,7 +607,6 @@ class PageDiffer:
                             old_md, new_md, sid, old_dt, old_dt, pid,
                             C.DELETE_PROPERTY_VALUE, old_hash, new_hash)
                 elif curr_stmt and not prev_stmt:
-                    changed = True
                     self._types_add(pid, sid, new_value)
                     self.save_change(
                         C.id_to_int(pid), sid, old_value, new_value, old_dt,
@@ -634,7 +617,6 @@ class PageDiffer:
                             old_md, new_md, sid, None, new_dt, pid,
                             C.CREATE_PROPERTY_VALUE, old_hash, new_hash)
                 elif prev_stmt and curr_stmt and old_hash != new_hash:
-                    changed = True
                     if (old_dt != new_dt) or (old_value != new_value):
                         if new_dt == "time":
                             # suppress WD-internal zero-padding noise
@@ -660,123 +642,96 @@ class PageDiffer:
                             C.UPDATE_PROPERTY_DATATYPE_METADATA,
                             old_hash, new_hash)
 
-                changed = self._handle_rank_changes(
-                    prev_stmt, curr_stmt, pid, sid, old_hash, new_hash) or changed
-                changed = self._diff_qualifiers(pid, sid, prev_stmt, curr_stmt) or changed
-                changed = self._diff_references(pid, sid, prev_stmt, curr_stmt) or changed
-        return changed
+                self._handle_rank_changes(
+                    prev_stmt, curr_stmt, pid, sid, old_hash, new_hash)
+                self._diff_qualifiers(pid, sid, prev_stmt, curr_stmt)
+                self._diff_references(pid, sid, prev_stmt, curr_stmt)
 
-    def get_changes_from_revisions(self, curr: dict, prev: dict | None) -> bool:
-        """Dispatch one revision's diff (page_parser.py:1890-1953)."""
+    def get_changes_from_revisions(self, curr: dict, prev: dict | None) -> None:
+        """Dispatch one kept revision's diff (page_parser.py:1890-1953).
+        Alias/sitelink-only revisions are never kept after the first, so
+        the only emptied revisions that reach here are cleaned ones."""
         if prev is None:
             self._changes_created_entity(curr)
-            return True
-
-        if curr["redirect"]:
-            self.current_revision_redirect = True
-            return True
-
-        if not curr["has_claims"] and not curr["has_labels"] \
+        elif curr["redirect"]:
+            return  # the revision row alone records it
+        elif not curr["has_claims"] and not curr["has_labels"] \
                 and not curr["has_descs"]:
-            if curr["has_aliases"] or curr["has_sitelinks"]:
-                return False  # alias/sitelink-only revision: skip (P4)
             self._changes_cleaned_entity(prev)
-            return True
-
-        changed = self._diff_label_description(prev, curr)
-
-        prev_pids = set(prev["claims"])
-        curr_pids = set(curr["claims"])
-        new_pids = curr_pids - prev_pids
-        if new_pids:
-            changed = True
-            self._handle_new_pids(new_pids, curr["claims"])
-        removed_pids = prev_pids - curr_pids
-        if removed_pids:
-            changed = True
-            self._handle_removed_pids(removed_pids, prev["claims"])
-        remaining = prev_pids & curr_pids
-        if remaining:
-            changed = self._handle_remaining_pids(
-                remaining, prev["claims"], curr["claims"]) or changed
-        return changed
+        else:
+            self._diff_label_description(prev, curr)
+            prev_pids = set(prev["claims"])
+            curr_pids = set(curr["claims"])
+            self._handle_new_pids(curr_pids - prev_pids, curr["claims"])
+            self._handle_removed_pids(prev_pids - curr_pids, prev["claims"])
+            self._handle_remaining_pids(prev_pids & curr_pids, prev["claims"],
+                                        curr["claims"])
 
     # ------------------------------------------------------------------ #
     # page replay (page_parser.py:1956-2326)
     # ------------------------------------------------------------------ #
 
-    def begin_revision(self, rev: dict) -> None:
-        """Per-revision meta every save_* emitter stamps on its rows; the
-        user type is P6 (page_parser.py:2020-2026)."""
-        user_type = ("bot" if "bot" in rev["username"].lower()
-                     else "anonymous" if rev["username"] == ""
-                     else "human")
-        self.meta = {
-            "revision_id": rev["revision_id"],
-            "timestamp": rev["timestamp"],
-            "comment": rev["comment"],
-            "username": rev["username"],
-            "user_id": rev["user_id"],
-            "user_type": user_type,
-        }
-
-    def store_revision(self, rev: dict, prev_revision_id: int) -> None:
-        """Revision row for a revision that produced changes, plus its
-        user-type count."""
-        user_type = self.meta["user_type"]
+    def replay_revision(self, rev: dict, prev: dict | None,
+                        prev_revision_id: int) -> None:
+        """One kept revision: its change rows against the last kept
+        snapshot ``prev`` (the save_* emitters stamp them with the
+        revision's id, timestamp and comment), then its revision row and
+        user-type count (P6, page_parser.py:2020-2026)."""
+        self.meta = rev
+        digest = rev["digest"]
+        self.get_changes_from_revisions(digest, prev)
+        redirect = prev is not None and digest["redirect"]
+        username = rev["username"]
+        user_type = ("bot" if "bot" in username.lower()
+                     else "anonymous" if username == "" else "human")
         self.revision_rows.append({
             "prev_revision_id": prev_revision_id,
             "revision_id": rev["revision_id"],
             "entity_id": self.entity_id,
             "timestamp": rev["timestamp"],
             "user_id": rev["user_id"],
-            "username": rev["username"],
+            "username": username,
             "user_type": user_type,
             "comment": rev["comment"],
-            "redirect": self.current_revision_redirect,
-            "q_id_redirect": (rev["digest"] or {}).get("redirect_qid")
-                             if self.current_revision_redirect else None,
+            "redirect": redirect,
+            "q_id_redirect": digest["redirect_qid"] if redirect else None,
         })
-        if user_type == "bot":
-            self.stats["num_bot_edits"] += 1
-        elif user_type == "anonymous":
-            self.stats["num_anonymous_edits"] += 1
-        else:
-            self.stats["num_human_edits"] += 1
-        self.current_revision_redirect = False
+        self.stats[f"num_{user_type}_edits"] += 1
 
     def process_page(self, revisions: list[dict]) -> dict:
         """``revisions``: page rows sorted by commit, as plain dicts with the
-        PARSED_SCHEMA fields (snapshot already json-decoded into 'digest')."""
+        PARSED_SCHEMA fields (snapshot already json-decoded into 'digest').
+
+        A parse-ok revision is kept — replayed against the last kept one —
+        iff it is the page's first, a redirect, an emptied revision, or not
+        alias-only with a ``state_key`` that differs from the last kept
+        one's: salted.kept_pairs' rule, read from the same parse columns.
+        The stored prev pointer is the last kept revision (W2;
+        page_parser.py:2066-2073 + 2117 make the XML parentid moot)."""
         t0 = time.time()
         previous: dict | None = None
+        last_key = None
         last_stored_revision_id = -1
 
         for rev in revisions:
-            if rev["is_deleted"]:
-                # deleted revision: invisible except for parent repair
-                # (page_parser.py:1993-2011, 2125-2126)
-                continue
-            self.begin_revision(rev)
             digest = rev["digest"]
             if digest is None:
-                change = False  # quarantined revision (page_parser.py:2045-2047)
-            else:
-                # last-non-empty label/alias (W4, page_parser.py:2049-2058)
-                if digest["label"]:
-                    self.entity_data["label"] = digest["label"]
-                if digest["alias"]:
-                    self.entity_data["alias"] = digest["alias"]
-                change = self.get_changes_from_revisions(digest, previous)
-                self.stats["num_revisions_timed"] += 1
-
-            if change:
-                # stored prev pointer = last *stored* revision (W2;
-                # page_parser.py:2066-2073 + 2117 make the XML parentid moot)
-                self.store_revision(rev, last_stored_revision_id)
+                # deleted (invisible except for parent repair,
+                # page_parser.py:1993-2011, 2125-2126) or quarantined
+                # (page_parser.py:2045-2047)
+                continue
+            # last-non-empty label/alias (W4, page_parser.py:2049-2058)
+            if digest["label"]:
+                self.entity_data["label"] = digest["label"]
+            if digest["alias"]:
+                self.entity_data["alias"] = digest["alias"]
+            self.stats["num_revisions_timed"] += 1
+            if previous is None or rev["is_redirect"] or rev["is_cleaned"] \
+                    or (not rev["is_alias_only"]
+                        and rev["state_key"] != last_key):
+                self.replay_revision(rev, previous, last_stored_revision_id)
+                previous, last_key = digest, rev["state_key"]
                 last_stored_revision_id = rev["revision_id"]
-                if digest is not None:
-                    previous = digest
 
         diff_sec = time.time() - t0
 
@@ -920,8 +875,8 @@ def extract_changes(parsed: DataFrame,
         n_buckets = 4 * int(spark.conf.get("spark.sql.shuffle.partitions",
                                            "200"))
     cols = ["repo", "path", "commit", "entity_id", "revision_id", "timestamp",
-            "username", "user_id", "comment", "is_deleted", "parse_ok",
-            "snapshot"]
+            "username", "user_id", "comment", "parse_ok", "snapshot",
+            "state_key", "is_redirect", "is_cleaned", "is_alias_only"]
     # explicit-count repartition on the bucket key: the groupBy reuses the
     # partitioning (no second exchange), the Python-heavy grouped stage runs
     # one task per bucket (4x the core count — fine-grained enough that the

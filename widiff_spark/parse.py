@@ -12,9 +12,10 @@ general_analysis.py:367-369) to a single worker; here the expensive JSON +
 sha1 work for that page spreads over the whole cluster and only the
 lightweight replay is grouped.
 
-Next to the digest, each row carries salted mode's keep projection
-(salted.kept_pairs), computed from the digest while it is still in memory,
-so no later stage decodes a snapshot to decide what to keep::
+Next to the digest, each row carries the keep projection that both diff
+modes read (diff.PageDiffer.process_page, salted.kept_pairs), computed from
+the digest while it is still in memory, so no stage re-derives what a
+change is::
 
     state_key      # sha1 of the comparable projection (see ``state_key``)
     is_redirect, is_cleaned, is_alias_only   # see ``keep_flags``
@@ -45,6 +46,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import re
 from typing import Iterator
 
 import pyarrow as pa
@@ -172,6 +174,8 @@ def digest_revision(content: str, lang: str) -> tuple[dict | None, dict | None, 
     meta = revision.get("meta", {}) if isinstance(revision, dict) else {}
 
     claims = C.safe_get_nested(revision, "claims")
+    if not _claims_ok(claims):
+        return meta, None, "invalid_claims"
     aliases = revision.get("aliases")
     alias = ""
     if isinstance(aliases, dict):
@@ -207,8 +211,9 @@ def state_key(digest: dict | None) -> str | None:
     ``changed`` predicate reads (page_parser.py:1890-1953).
 
     Excludes aliases/sitelinks (alias-only revisions never set ``changed``),
-    raw_* fields (first-revision-only), and datatype metadata (covered by
-    the statement value_hash — metadata lives inside the hashed datavalue).
+    raw_* fields (first-revision-only), datatype metadata (covered by
+    the statement value_hash — metadata lives inside the hashed datavalue)
+    and empty qualifier lists (the qualifier diff emits nothing for them).
     Duplicate statement ids collapse last-wins exactly like the reference's
     ``{s['id']: s}`` dicts (page_parser.py:1758-1781).
     """
@@ -221,7 +226,7 @@ def state_key(digest: dict | None) -> str | None:
             by_sid[str(s["sid"])] = [
                 s["hash"], s["rank"],
                 {qp: sorted(h for h, _v, _d in lst)
-                 for qp, lst in (s["quals"] or {}).items()},
+                 for qp, lst in s["quals"].items() if lst},
                 sorted([rh, rp, vh] for rh, rp, vh, _v, _d in (s["refs"] or [])),
             ]
         claims_proj[pid] = by_sid
@@ -265,6 +270,46 @@ def _typed_meta(meta) -> tuple[dict, bool]:
     if not bad:
         return meta, True
     return {k: v for k, v in meta.items() if k not in bad}, False
+
+
+_PID = re.compile(r"P\d+").fullmatch
+
+
+def _snaks_ok(snaks) -> bool:
+    """A qualifier or reference snak map: P-id keys, lists of objects."""
+    return all(_PID(pid) and type(lst) is list
+               and all(type(sn) is dict for sn in lst)
+               for pid, lst in snaks.items())
+
+
+def _claims_ok(claims) -> bool:
+    """Whether ``claims`` has the shape the digest and the diff read: P-id
+    keys mapping to lists of statement objects, each with a string (or
+    null) id, an object mainsnak and P-id qualifier and reference snak
+    keys.  Another shape would crash the task that meets it, failing every
+    page in its partition, so the revision is quarantined instead."""
+    if type(claims) is not dict:
+        return False
+    for pid, stmts in claims.items():
+        if not _PID(pid) or type(stmts) is not list:
+            return False
+        for s in stmts:
+            if type(s) is not dict:
+                return False
+            sid, refs = s.get("id"), s.get("references") or []
+            quals = s.get("qualifiers")
+            if (sid is not None and type(sid) is not str) \
+                    or type(s.get("mainsnak") or {}) is not dict \
+                    or (isinstance(quals, dict) and not _snaks_ok(quals)) \
+                    or type(refs) is not list:
+                return False
+            for ref in refs:
+                if type(ref) is not dict:
+                    return False
+                snaks = ref.get("snaks")
+                if isinstance(snaks, dict) and not _snaks_ok(snaks):
+                    return False
+    return True
 
 
 _PARSED_ARROW = to_arrow_schema(PARSED_SCHEMA)

@@ -9,10 +9,11 @@ replay decomposes into
   1. KEEP decision (a window straight over the parse stream):  a revision
      advances the diff predecessor iff it is the page's first parse-ok
      revision, a redirect, a cleaned (fully emptied) revision, or its
-     *comparable projection* differs from the previous candidate's.  The
-     parse computes the projection's key and the three flags from the
-     digest it has just built (parse.state_key / parse.keep_flags), so no
-     stage decodes a snapshot before this window.  The projection —
+     *comparable projection* differs from the previous candidate's — the
+     rule the grouped replay applies to the same columns.  The parse
+     computes the projection's key and the three flags from the digest it
+     has just built (parse.state_key / parse.keep_flags), so no stage
+     decodes a snapshot before this window.  The projection —
      (label, description, claims as {pid: {sid: [value_hash, rank,
      qualifier-hash-sets, reference-key-sets]}}) — captures EXACTLY the
      reference's ``changed`` predicate (page_parser.py:1890-1953): every
@@ -21,9 +22,10 @@ replay decomposes into
      equals dedup against the previous *kept* revision.
   2. PAIR construction (one window shuffle): lag(snapshot) over kept
      revisions per page — each output row carries (prev, curr).
-  3. PAIR DIFF (mapInArrow, row-parallel — the skew killer): the same
-     PageDiffer branch dispatch per pair; a 60k-revision page becomes 60k
-     independent rows spread over the cluster.
+  3. PAIR DIFF (mapInArrow, row-parallel — the skew killer): the grouped
+     replay's kept-revision step (PageDiffer.replay_revision) per pair; a
+     60k-revision page becomes 60k independent rows spread over the
+     cluster.
   4. REVERT TAGGING (applyInArrow over (page, property, value) — far finer
      than pages): the grouped mode's revert.tag_reverted_edits over the
      group's emitted value rows.  Every row of one value_change PK falls in
@@ -38,6 +40,10 @@ replay decomposes into
      statement rows; three left joins onto the page list, and the payload
      JSON is built in the JVM (to_json in ENTITY_STATS_SCHEMA order, the
      grouped payload's key order).
+
+A page is (repo, path) in every stage, as in the grouped replay: two paths
+that name one entity id (Q012, Q12) stay two pages.  The pair-diff and
+tag outputs carry ``path`` for that and drop it at the end.
 
 Output is row-identical to the grouped mode (tests/test_salted_parity.py
 proves equality on the edge-case corpus incl. the hot page and on the
@@ -119,11 +125,12 @@ def make_pair_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):
     """Row-parallel pair diff: one output block per (prev, curr) pair.
 
     Output = UNIFIED columns (entity_label left empty — stamped later from
-    the page dim) + commit + emit_idx carriers for the downstream replay
-    ordering (emit_idx = the row's position within its table's rows of the
-    pair); value rows carry their revision's comment for the revert-tagging
-    stage.  Meta, user type and the revision row come from the PageDiffer
-    code the grouped replay runs, the output columns from its emitter."""
+    the page dim) + the page's path + commit + emit_idx carriers for the
+    downstream replay ordering (emit_idx = the row's position within its
+    table's rows of the pair); value rows carry their revision's comment
+    for the revert-tagging stage.  Each pair runs the kept-revision step
+    of the grouped replay (PageDiffer.replay_revision), the output columns
+    come from its emitter."""
     def pair_diff(batches: Iterator[pa.RecordBatch]
                   ) -> Iterator[pa.RecordBatch]:
         # rows arrive page-partitioned and commit-ordered (the pair window's
@@ -142,38 +149,37 @@ def make_pair_diff_udf(config: PipelineConfig = DEFAULT_CONFIG):
                     prev = C.fast_json_loads(rec["prev_snapshot"])
                 last = rec
                 differ = PageDiffer(rec["repo"], rec["entity_id"], config)
-                differ.begin_revision(rec)
-                differ.get_changes_from_revisions(rec["digest"], prev)
-                differ.store_revision(rec, rec["prev_revision_id"])
+                differ.replay_revision(rec, prev, rec["prev_revision_id"])
                 for table, rows in differ.table_rows().items():
                     if not rows:
                         continue
                     _emit_rows(out, rows, {"table": table, "repo": rec["repo"],
+                                           "path": rec["path"],
                                            "commit": rec["commit"]})
                     out["emit_idx"][-len(rows):] = range(len(rows))
             yield pa.RecordBatch.from_pydict(out, schema=_PAIR_OUT_ARROW)
     return pair_diff
 
 
-# internal pair-diff output = unified columns + replay-ordering carriers.
-# StructType.add mutates in place — build a fresh struct, never touch the
-# shared UNIFIED_SCHEMA
+# internal pair-diff output = unified columns + the page key's path +
+# replay-ordering carriers.  StructType.add mutates in place — build a
+# fresh struct, never touch the shared UNIFIED_SCHEMA
+_PATH = T.StructField("path", T.StringType())
 _PAIR_OUT_SCHEMA = T.StructType(
     list(UNIFIED_SCHEMA.fields)
-    + [T.StructField("commit", T.StringType()),
+    + [_PATH, T.StructField("commit", T.StringType()),
        T.StructField("emit_idx", T.IntegerType())])
 _PAIR_OUT_ARROW = to_arrow_schema(_PAIR_OUT_SCHEMA)
 
 
-# tag-stage output = unified columns + the group's revert-stat counts, which
-# only its first row carries
+# tag-stage output = unified columns + path + the group's revert-stat
+# counts, which only its first row carries
 _TAG_OUT_SCHEMA = T.StructType(
-    list(UNIFIED_SCHEMA.fields)
+    list(UNIFIED_SCHEMA.fields) + [_PATH]
     + [T.StructField(c, T.IntegerType()) for c in REVERT_STATS])
 _TAG_OUT_ARROW = to_arrow_schema(_TAG_OUT_SCHEMA)
 
-_P31_SCHEMA = T.StructType([T.StructField("repo", T.StringType()),
-                            T.StructField("entity_id", T.LongType()),
+_P31_SCHEMA = T.StructType([T.StructField("repo", T.StringType()), _PATH,
                             T.StructField("entity_types_31", T.StringType())])
 _P31_ARROW = to_arrow_schema(_P31_SCHEMA)
 
@@ -186,7 +192,7 @@ def _sorted_rows(table: pa.Table) -> list[dict]:
 
 
 def _tag_udf(config: PipelineConfig):
-    """Revert tagging per (repo, entity_id, property_id, value_id) group —
+    """Revert tagging per (repo, path, property_id, value_id) group —
     the grouped mode's tag_reverted_edits on a key far finer than pages.
     Every row of one value_change PK falls in one group, so the PK dedup
     happens here too: the group emits its tagged, deduplicated rows."""
@@ -230,7 +236,7 @@ def _p31_replay_udf():
                 types[(sid, _hashable(nv))] = nv
         type_ids = list(dict.fromkeys(_hashable(t) for t in types.values()))
         return pa.Table.from_pydict(
-            {"repo": [key[0].as_py()], "entity_id": [key[1].as_py()],
+            {"repo": [key[0].as_py()], "path": [key[1].as_py()],
              "entity_types_31": [", ".join(str(t) for t in type_ids)]},
             schema=_P31_ARROW)
     return replay
@@ -263,7 +269,7 @@ def extract_changes_salted(parsed: DataFrame,
     diffed = diffed.persist()
 
     # ---- revert tagging + PK dedup on (page, property, value) groups ----
-    page = ["repo", "entity_id"]
+    page = ["repo", "path"]  # entity_id may name two pages (Q012, Q12)
     value_rows = diffed.filter(F.col("table") == "value_change")
     tagged = (value_rows
               .groupBy(*page, "property_id", "value_id")
@@ -308,8 +314,8 @@ def extract_changes_salted(parsed: DataFrame,
 
     p31 = (value_rows.filter((F.col("property_id") == 31)
                              & (F.col("change_target") == ""))
-           .select("repo", "entity_id", "value_id", "action", "old_value",
-                   "new_value", "commit", "emit_idx")
+           .select(*page, "value_id", "action", "old_value", "new_value",
+                   "commit", "emit_idx")
            .groupBy(*page)
            .applyInArrow(_p31_replay_udf(), schema=_P31_SCHEMA))
 
@@ -322,9 +328,9 @@ def extract_changes_salted(parsed: DataFrame,
         return F.max_by(c, F.when(ok & (F.col(c) != ""), F.col("commit")))
 
     pages = parsed.select(
-        *page, "commit", "parse_ok", "is_deleted",
+        *page, "entity_id", "commit", "parse_ok", "is_deleted",
         F.json_tuple("snapshot", "label", "alias")
-        .alias("w4_label", "w4_alias")).groupBy(*page).agg(
+        .alias("w4_label", "w4_alias")).groupBy(*page, "entity_id").agg(
         cnt(ok).alias("num_revisions_timed"),
         F.coalesce(last_nonempty("w4_label"), last_nonempty("w4_alias"),
                    F.lit("")).alias("entity_label"))
@@ -343,7 +349,7 @@ def extract_changes_salted(parsed: DataFrame,
         F.struct(*[fields.get(f.name, F.col(f.name)).cast(f.dataType)
                    .alias(f.name) for f in ENTITY_STATS_SCHEMA.fields]),
         {"ignoreNullFields": "false"})
-    stats_rows = stats.select(*page, "entity_label",
+    stats_rows = stats.select("repo", "entity_id", "entity_label",
                               payload.alias("payload"),
                               F.lit("entity_stats").alias("table"))
 
@@ -353,7 +359,7 @@ def extract_changes_salted(parsed: DataFrame,
                  .unionByName(tagged.drop(*REVERT_STATS))
     label_dim = pages.select(*page, F.col("entity_label").alias("__el"))
     body = (body.join(label_dim, page, "left")
-            .withColumn("entity_label", F.col("__el")).drop("__el"))
+            .withColumn("entity_label", F.col("__el")).drop("__el", "path"))
     out = body.unionByName(stats_rows, allowMissingColumns=True)
     # cached intermediates, for the caller to release (PipelineResult)
     out.widiff_caches = [parsed, diffed, tagged]

@@ -27,7 +27,7 @@ DOCUMENTS_SCHEMA = T.StructType([
 # snapshot JSON (claims pre-hashed, labels normalized).  Bad rows keep
 # parse_ok = false + error (the quarantine channel replacing the reference's
 # logs/error_revision_text.txt, page_parser.py:168-187).  The last four
-# columns are salted mode's keep projection (parse.state_key /
+# columns are the keep projection both diff modes read (parse.state_key /
 # parse.keep_flags): null key and all-false flags on rows without a digest.
 # ---------------------------------------------------------------------------
 PARSED_SCHEMA = T.StructType([

@@ -38,8 +38,7 @@ def run_streaming_pipeline(stream: DataFrame, staging_dir: str,
                            output_dir: str,
                            checkpoint_dir: str,
                            config: PipelineConfig = DEFAULT_CONFIG,
-                           trigger: dict | None = None,
-                           mode: str = "grouped"):
+                           trigger: dict | None = None):
     """Micro-batch sink: stage the batch, then incremental-diff the touched
     buckets.  Returns the StreamingQuery (caller awaits/stops).
 
@@ -50,10 +49,10 @@ def run_streaming_pipeline(stream: DataFrame, staging_dir: str,
     and scan of its touched buckets, not the whole staging directory
     (asserted in tests/test_plans.py).
 
-    ``mode`` passes through to ``run_incremental``; with ``'auto'`` each
-    trigger picks the diff mode from its touched buckets' largest page,
-    which the checkpoint pass already computes, so no probe job runs.
-    Both modes give row-identical output (tests/test_salted_parity.py)."""
+    Each trigger's ``run_incremental`` picks the diff mode from its
+    touched buckets' largest page, which the checkpoint pass already
+    computes, so no probe job runs.  Both modes give row-identical output
+    (tests/test_salted_parity.py)."""
     from .pipeline import run_incremental
     from . import checkpoint
 
@@ -104,7 +103,7 @@ def run_streaming_pipeline(stream: DataFrame, staging_dir: str,
          .write.mode("append").partitionBy("bucket").parquet(staging_dir))
         staged = spark.read.parquet(staging_dir)
         run_incremental(spark, staged, output_dir, config,
-                        run_id=f"stream-batch-{batch_id}", mode=mode)
+                        run_id=f"stream-batch-{batch_id}")
 
     writer = (stream.writeStream
               .foreachBatch(process_batch)
