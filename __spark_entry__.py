@@ -202,8 +202,8 @@ _VC_COLS = ["revision_id", "property_id", "value_id", "change_target",
 
 def kg_incremental(spark, sf_dir):
     """S5/T4 end-to-end: the checkpointed incremental pipeline
-    (pipeline.run_incremental — bucket high-water marks, PK-dedup upsert
-    writes, dynamic partition overwrite) run TWICE (the second run must be
+    (pipeline.run_incremental — bucket high-water marks, entity-bucket
+    partitioned writes, dynamic partition overwrite) run TWICE (the second run must be
     a no-op), then the materialized value_change table read back from disk.
     Oracled against the same golden parquet as kg_value_change, so the
     resume/sink path is driver-checked value-for-value."""

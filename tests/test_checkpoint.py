@@ -7,16 +7,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from widiff_spark import checkpoint, fixtures, materialize
-from widiff_spark.pipeline import run_incremental, run_pipeline
+from widiff_spark.pipeline import CHANGE_TABLES, run_incremental, run_pipeline
 
 
-def _table_fingerprint(spark, path, table):
-    df = spark.read.parquet(f"{path}/{table}")
+def _rows(df):
     # the diff's own timing diagnostics differ between any two runs
     df = df.drop(*[c for c in df.columns if c.endswith("_sec")])
     pdf = df.toPandas().astype(str)
     pdf = pdf[sorted(pdf.columns)]
     return sorted(map(tuple, pdf.values.tolist()))
+
+
+def _table_fingerprint(spark, path, table):
+    return _rows(spark.read.parquet(f"{path}/{table}"))
 
 
 class TestCheckpoint:
@@ -245,13 +248,41 @@ class TestCheckpoint:
         assert any({(fixtures.REPO, "Q012"), (fixtures.REPO, "Q12")} <= p
                    for p in paths.values())
 
-    def test_dedup_by_pk_is_deterministic(self, spark):
-        df = spark.createDataFrame(
-            [(1, "a", "x"), (1, "a", "y"), (2, "b", "z")],
-            "revision_id int, value_id string, payload string")
-        out = materialize.dedup_by_pk(df, ["revision_id", "value_id"]) \
-            .orderBy("revision_id").collect()
-        assert [(r.revision_id, r.payload) for r in out] == [(1, "x"), (2, "z")]
+    @pytest.mark.parametrize("corpus", ["fork", "twins", "null_revision_id",
+                                        "adversarial"])
+    @pytest.mark.parametrize("mode", ["grouped", "salted"])
+    def test_written_tables_equal_in_memory(self, spark, tmp_path, mode,
+                                            corpus):
+        """Every row the pipeline emits is written: run_incremental's
+        tables read back equal run_pipeline's, as multisets, where the
+        reference's keys repeat — a fork shares every revision id with its
+        origin, twin paths share an entity id, null revision ids share
+        label keys, and the adversarial corpus repeats statement ids."""
+        from test_salted_parity import (_adversarial_corpus_rows,
+                                        _null_revision_id_rows,
+                                        _twin_path_rows)
+
+        rows = {
+            "fork": lambda: [r | {"repo": repo} for repo in
+                             (fixtures.REPO, "wd-fixture-fork")
+                             for r in fixtures.edge_case_rows()],
+            "twins": _twin_path_rows,
+            "null_revision_id": _null_revision_id_rows,
+            "adversarial": lambda: _adversarial_corpus_rows(n_pages=40),
+        }[corpus]()
+        docs = spark.createDataFrame(pd.DataFrame(rows),
+                                     schema=fixtures.DOCUMENTS_SCHEMA)
+        out = str(tmp_path / "warehouse")
+        wanted = CHANGE_TABLES + ["entity_stats"]
+        run_incremental(spark, docs, out, tables=wanted, mode=mode)
+        res = run_pipeline(spark, docs, mode=mode)
+        try:
+            for name in wanted:
+                written = materialize.read_table(spark, out, name) \
+                    .drop("entity_bucket")
+                assert _rows(written) == _rows(res.tables[name]), name
+        finally:
+            res.unpersist()
 
     def test_physical_bucket_trusted_only_at_default_count(self, spark):
         """ADVICE r5: a physical ``bucket`` column is only authoritative

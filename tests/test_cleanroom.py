@@ -23,7 +23,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from cleanroom import replay_corpus
 from widiff_spark import diff, fixtures, parse
 from widiff_spark.config import DEFAULT_CONFIG
-from widiff_spark.schema import DOCUMENTS_SCHEMA, TABLE_COLUMNS
+from widiff_spark.schema import DOCUMENTS_SCHEMA, TABLE_COLUMNS, TABLE_PKS
 
 from test_salted_parity import _adversarial_corpus_rows, _null_revision_id_rows
 
@@ -95,7 +95,8 @@ def _canon(rows: list[dict], fields=None) -> list[tuple]:
     return sorted(out, key=repr)
 
 
-def _assert_match(rows: list[dict]) -> None:
+def _assert_match(rows: list[dict]) -> dict:
+    """The engine's tables equal the cleanroom's; returns the engine's."""
     engine = _engine_tables(rows)
     clean = replay_corpus(rows)
     for table in TABLES:
@@ -110,6 +111,7 @@ def _assert_match(rows: list[dict]) -> None:
     e_stats = _canon(engine["entity_stats"], STAT_FIELDS)
     c_stats = _canon(clean["entity_stats"], STAT_FIELDS)
     assert e_stats == c_stats
+    return engine
 
 
 @pytest.mark.parametrize("n", [0, 3])
@@ -259,7 +261,12 @@ def _page_history(draw):
 @settings(max_examples=120, deadline=None)
 @given(_page_history())
 def test_hypothesis_differential(rows):
-    _assert_match(rows)
+    engine = _assert_match(rows)
+    # a draw is one page, so every table is unique on its key within it
+    for table, pk in TABLE_PKS.items():
+        keys = [tuple(r[c] for c in ("repo", "entity_id", *pk))
+                for r in engine[table]]
+        assert len(keys) == len(set(keys)), table
 
 
 def test_null_revision_id_pages():

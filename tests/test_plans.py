@@ -298,6 +298,44 @@ class TestDiffShuffle:
             res.unpersist()
 
 
+class TestWriteLayout:
+    def test_partitioned_write_is_one_exchange_and_one_file_per_bucket(
+            self, spark, tmp_path, monkeypatch):
+        """write_table writes the frame it is given: no dedup window, one
+        hash exchange on entity_bucket, so each bucket directory holds one
+        parquet file even when a bucket's rows arrive in several
+        partitions."""
+        import os
+        from widiff_spark import materialize, pipeline
+        res = pipeline.run_pipeline(
+            spark, fixtures.edge_case_corpus(spark, include_hot_page=True,
+                                             hot_revisions=20),
+            mode="grouped")
+        try:
+            vc = res.tables["value_change"].repartition(4)
+            cls = type(vc)
+            written = []
+            monkeypatch.setattr(cls, "write", property(
+                lambda df, real=cls.write.fget: written.append(df) or real(df)))
+            out = str(tmp_path / "warehouse")
+            materialize.write_table(vc, out, "value_change")
+            monkeypatch.undo()
+            p = plan(written[0])
+            assert not re.search(r"^\(\d+\) Window", p, re.M)
+            assert re.search(r"hashpartitioning\(entity_bucket#\d+", p)
+            table = f"{out}/value_change"
+            buckets = [d for d in os.listdir(table)
+                       if d.startswith("entity_bucket=")]
+            assert len(buckets) > 1
+            for d in buckets:
+                files = [f for f in os.listdir(f"{table}/{d}")
+                         if f.endswith(".parquet")]
+                assert len(files) == 1, (d, files)
+            assert spark.read.parquet(table).count() == vc.count()
+        finally:
+            res.unpersist()
+
+
 class TestRound3Plans:
     """Closure round join + multi-table LSH stay equi-joins (no pair
     products); the closure result plan stays flat via localCheckpoint."""

@@ -314,6 +314,62 @@ def test_malformed_claims_are_quarantined(spark, mode):
         res.unpersist()
 
 
+# snak bodies whose datavalue the digest cannot read
+_MALFORMED_SNAKS = {
+    "datavalue_without_value": {"snaktype": "value", "property": "P31",
+                                "datavalue": {"type": "wikibase-entityid"}},
+    "time_value_not_object": {"snaktype": "value", "property": "P580",
+                              "datavalue": {"value": "+2013-10-28T00:00:00Z",
+                                            "type": "time"}},
+    "entity_value_without_id": {"snaktype": "value", "property": "P31",
+                                "datavalue": {"value": {"entity-type": "item"},
+                                              "type": "wikibase-entityid"}},
+}
+
+
+def _malformed_snak_rows(snak: dict) -> list[dict]:
+    """Q997: clean revisions 7700 and 7704 around ``snak`` as a mainsnak
+    (7701), a qualifier snak (7702) and a reference snak (7703)."""
+    ok = fixtures.entity_snak("P31", "Q5")
+    claims = {
+        7700: [fixtures.statement("q997$S1", ok)],
+        7701: [fixtures.statement("q997$S1", snak)],
+        7702: [fixtures.statement("q997$S1", ok, qualifiers={"P580": [snak]})],
+        7703: [fixtures.statement("q997$S1", ok, references=[
+            fixtures.reference({"P143": [snak]})])],
+        7704: [fixtures.statement("q997$S1", fixtures.entity_snak("P31",
+                                                                 "Q6"))],
+    }
+    return [fixtures.row("Q997", rid, fixtures.content(
+        rid, fixtures._ts(rid % 100), label="l", claims={"P31": stmts}))
+        for rid, stmts in claims.items()]
+
+
+@pytest.mark.parametrize("shape", sorted(_MALFORMED_SNAKS))
+@pytest.mark.parametrize("mode", ["grouped", "salted"])
+def test_malformed_snaks_are_quarantined(spark, mode, shape):
+    """A snak the digest cannot read — as a mainsnak, a qualifier or a
+    reference snak — quarantines its revision as invalid_claims instead of
+    failing the parse task and every page in its partition."""
+    from widiff_spark import pipeline
+
+    docs = spark.createDataFrame(
+        pd.DataFrame(_malformed_snak_rows(_MALFORMED_SNAKS[shape])),
+        schema=fixtures.DOCUMENTS_SCHEMA)
+    res = pipeline.run_pipeline(spark, docs, mode=mode)
+    try:
+        got = sorted(tuple(r) for r in res.tables["quarantine"].select(
+            "commit", "revision_id", "error").collect())
+        assert got == [(f"r{rid:010d}", rid, "invalid_claims")
+                       for rid in (7701, 7702, 7703)]
+        revisions = res.tables["revision"].select(
+            "revision_id", "prev_revision_id").collect()
+        assert sorted(tuple(r) for r in revisions) == [(7700, -1),
+                                                       (7704, 7700)]
+    finally:
+        res.unpersist()
+
+
 def _twin_path_rows() -> list[dict]:
     """Q012 and Q12 parse to one entity id but are two pages: Q012 has two
     revisions (labels a, c), Q12 one (label b) committed between them."""

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .materialize import (N_ENTITY_BUCKETS, hadoop_path, iceberg_catalog,
                           iceberg_identifier)
+from .parse import ITEM_PATH
 
 CHECKPOINT_TABLE = "_checkpoints/highwater"
 # Iceberg side uses a plain identifier — the parquet path's '/' would make
@@ -121,7 +122,7 @@ def input_watermarks(docs: DataFrame,
     if not _trust_bucket_column(docs, n_buckets):
         docs = docs.drop("bucket").withColumn("bucket",
                                               bucket_col(n_buckets))
-    return (docs.filter(F.col("path").rlike(r"^Q\d+$"))
+    return (docs.filter(F.col("path").rlike(ITEM_PATH))
             .groupBy("bucket", "repo", "path")
             .agg(F.max("commit").alias("page_max_commit"),
                  F.count("*").alias("page_rows"))

@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .parse import ITEM_PATH
+
 
 def _last_nonempty(col, commit_col: str = "commit"):
     """Value of ``col`` at the latest commit where it is non-empty (max of
@@ -113,7 +115,7 @@ def entity_labels_fast(docs: DataFrame) -> DataFrame:
     `kg_entity_labels_fast`): malformed JSON yields NULL projections here
     and a quarantined (label-less) row there; deleted/redirect revisions
     carry no ``labels`` key on either path."""
-    filtered = docs.filter(F.col("path").rlike(r"^Q\d+$"))
+    filtered = docs.filter(F.col("path").rlike(ITEM_PATH))
     lab = F.get_json_object("content", "$.labels.en.value")
     ali = F.get_json_object("content", "$.aliases.en[0].value")
     des = F.get_json_object("content", "$.descriptions.en.value")

@@ -1,52 +1,34 @@
-"""Partitioned, PK-deduplicated table writes (S5/S6 analog).
+"""Partitioned table writes (S5/S6 analog).
 
 The reference bulk-loads via Postgres COPY into temp tables with
 ``INSERT ... ON CONFLICT (pk) DO NOTHING`` (utils.py:151-241) and routes rows
 to ``{suffix}`` table families (db_writer.py:146-156).  Here:
 
-* each output table is a *partitioned* columnar table — partition spec
-  ``(cohort, entity_bucket)`` for fact tables so cohort queries prune entire
-  partitions (the ``{suffix}`` families collapsed into one table, SURVEY.md
-  §1.2) and pages co-locate by bucket;
-* ``ON CONFLICT DO NOTHING`` becomes an explicit *deterministic* PK dedup
-  (row_number over the PK ordered by all columns — the reference's winner is
-  whichever row insert-raced first, i.e. nondeterministic; SURVEY.md §7.4.6
-  requires us to pick a stable winner);
+* each output table is a columnar table partitioned by ``entity_bucket``
+  (the ``{suffix}`` families collapse into one table with a ``cohort``
+  column, SURVEY.md §1.2), so pages co-locate by bucket;
+* ``ON CONFLICT DO NOTHING`` has no analog.  Its keys assume one global
+  revision-id space and one title per entity, but a page here is
+  (repo, path), so they do not name a row: two forks share every revision
+  id.  The write stores every row the diff emitted;
+* the write's one shuffle hash-distributes rows on the partition column,
+  so each bucket is one file (Iceberg's ``hash`` write distribution);
 * the write is an idempotent partition overwrite (dynamic partition
-  overwrite), the batch analog of an Iceberg ``overwritePartitions`` — on an
-  Iceberg-enabled cluster swap ``_write`` for ``df.writeTo(tbl).
-  overwritePartitions()`` (same logical contract, snapshot isolation for
-  free).
+  overwrite), the batch analog of an Iceberg ``overwritePartitions``.
 
-Format: the writer auto-detects a configured Iceberg catalog
-(``spark.sql.catalog.<name> = org.apache.iceberg...``) and routes through
-``writeTo(...).overwritePartitions()`` when one is present (north_rule:
-"materializing partitioned Iceberg tables"); otherwise it falls back to
-plain parquet with dynamic partition overwrite — the same logical contract
-without snapshot isolation.  This container ships no Iceberg runtime, so
-only the fallback executes here; the catalog path is exercised on any
-cluster with the iceberg-spark-runtime jar + a catalog conf, no code
-changes.
+Format: with an Iceberg catalog configured (``spark.sql.catalog.<name> =
+org.apache.iceberg...``) the write goes through ``writeTo(...)
+.overwritePartitions()`` (north_rule: "materializing partitioned Iceberg
+tables"); otherwise plain parquet, the same contract without snapshot
+isolation.  The catalog path needs the iceberg-spark-runtime jar and a
+catalog conf, and no code change.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-
-from .schema import TABLE_PKS
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 N_ENTITY_BUCKETS = 64  # bucket(entity_id) analog of an Iceberg bucket transform
-
-
-def dedup_by_pk(df: DataFrame, pk: list[str]) -> DataFrame:
-    """Deterministic ON-CONFLICT-DO-NOTHING: keep the first row per PK under
-    a total order of the remaining columns."""
-    order = [F.col(c).asc_nulls_last() for c in df.columns if c not in pk]
-    if not order:
-        return df.dropDuplicates(pk)
-    w = Window.partitionBy(*pk).orderBy(*order)
-    return (df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1).drop("__rn"))
 
 
 def with_entity_bucket(df: DataFrame, n_buckets: int = N_ENTITY_BUCKETS) -> DataFrame:
@@ -104,11 +86,8 @@ def iceberg_identifier(catalog: str, table: str,
 def _write_iceberg(df: DataFrame, catalog: str, table: str,
                    partition_cols: list[str], mode: str = "overwrite",
                    namespace: str = "widiff") -> None:
-    """Iceberg sink: create-on-first-write, then ``overwritePartitions``
-    (or ``append`` when mode='append') — the exactly-once redo-unit
-    contract write_table documents, with snapshot isolation from the table
-    format.  Executes only on clusters with an Iceberg catalog configured
-    (see module docstring)."""
+    """Iceberg sink: create on the first write, then ``overwritePartitions``
+    (or ``append``), with snapshot isolation from the table format."""
     spark = df.sparkSession
     full = iceberg_identifier(catalog, table, namespace)
     spark.sql(f"CREATE NAMESPACE IF NOT EXISTS `{catalog}`.`{namespace}`")
@@ -124,51 +103,41 @@ def _write_iceberg(df: DataFrame, catalog: str, table: str,
         writer.create()
 
 
-def write_table(df: DataFrame, path: str, table: str,
-                partition_cols: list[str] | None = None,
-                mode: str = "overwrite") -> str:
-    """Idempotent partitioned write with PK dedup.  Returns the location
-    the table was actually written to — a catalog identifier on Iceberg
-    clusters, a parquet path otherwise — so callers never hand out paths
-    that were never written.
+def write_table(df: DataFrame, path: str, table: str) -> str:
+    """Idempotent partitioned write of every row of ``df``.  Returns the
+    location the table was actually written to — a catalog identifier on
+    Iceberg clusters, a parquet path otherwise — so callers never hand out
+    paths that were never written.
 
-    Routes to the Iceberg catalog when one is configured; otherwise plain
-    parquet with dynamic partition overwrite, so re-running a subset of
-    buckets replaces exactly those partitions (the resume path,
-    checkpoint.py).
+    A table with an entity (or an ``entity_bucket`` column) is partitioned
+    by ``entity_bucket`` and hash-distributed on it, so each bucket is one
+    file.  The bucket is the checkpoint redo unit, so a dynamic partition
+    overwrite of re-processed buckets replaces exactly those partitions
+    (the resume path, checkpoint.py).  ``cohort`` stays a plain column:
+    row-group stats still prune cohort filters.
     """
-    pk = TABLE_PKS.get(table)
-    if pk and all(c in df.columns for c in pk):
-        df = dedup_by_pk(df, pk)
-    if partition_cols is None:
-        # partition by entity_bucket only: the bucket is the checkpoint redo
-        # unit, so a dynamic partition overwrite of re-processed buckets is
-        # always exactly-once.  cohort stays a plain column (row-group stats
-        # still prune cohort filters); under Iceberg one would add
-        # ``cohort`` to the spec and let MERGE INTO reconcile moves.
-        partition_cols = []
-        if "entity_bucket" not in df.columns and "entity_id" in df.columns \
-                and "repo" in df.columns:
-            df = with_entity_bucket(df)
-        if "entity_bucket" in df.columns:
-            partition_cols.append("entity_bucket")
+    cols = set(df.columns)
+    if "entity_bucket" not in cols and {"repo", "entity_id"} <= cols:
+        df = with_entity_bucket(df)
+    partition_cols = ["entity_bucket"] if "entity_bucket" in df.columns \
+        else []
+    if partition_cols:
+        df = df.repartition(*partition_cols)
     catalog = iceberg_catalog(df.sparkSession)
     if catalog is not None:
-        _write_iceberg(df, catalog, table, partition_cols, mode)
+        _write_iceberg(df, catalog, table, partition_cols)
         return iceberg_identifier(catalog, table)
-    writer = (df.write.mode(mode)
-              .option("partitionOverwriteMode", "dynamic"))
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
+    writer = (df.write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy(*partition_cols))
     target = f"{path}/{table}"
     writer.parquet(target)
     if partition_cols and not _has_parquet_file(df.sparkSession, target):
         # a partitioned write of no rows leaves no file, so the table would
         # have no schema to read: park one empty file in a partition (an
         # unpartitioned write of no rows writes such a file by itself)
-        first = "/".join(f"{c}=0" for c in partition_cols)
-        df.limit(0).drop(*partition_cols).write.mode("overwrite") \
-            .parquet(f"{target}/{first}")
+        df.limit(0).drop("entity_bucket").write.mode("overwrite") \
+            .parquet(f"{target}/entity_bucket=0")
     return target
 
 

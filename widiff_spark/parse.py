@@ -273,12 +273,36 @@ def _typed_meta(meta) -> tuple[dict, bool]:
 
 
 _PID = re.compile(r"P\d+").fullmatch
+_SENTINELS = (C.NO_VALUE, C.SOME_VALUE)
+# per datatype, the keys homogenize_datavalue and parse_datavalue_json index
+_VALUE_KEYS = {
+    "time": lambda v: "time" in v and type(v["time"]) in (str, type(None)),
+    "globecoordinate": lambda v: "latitude" in v and "longitude" in v,
+    **dict.fromkeys(C.WD_ENTITY_TYPES,
+                    lambda v: "id" in v or "numeric-id" in v)}
+
+
+def _snak_ok(snak: dict, main: bool = False) -> bool:
+    """Whether the digest can read ``snak``: a novalue/somevalue snak or an
+    empty mainsnak needs no datavalue; any other snak's datavalue is an
+    object with a ``value`` (outside a mainsnak, also a ``type``), and an
+    object value where its datatype indexes one (``_VALUE_KEYS``)."""
+    if "datavalue" not in snak:
+        return (main and not snak) or snak.get("snaktype") in _SENTINELS
+    dv = snak["datavalue"]
+    if type(dv) is not dict or "value" not in dv \
+            or not (main or "type" in dv):
+        return False
+    v, dtype = dv["value"], dv.get("type")
+    if dtype in _VALUE_KEYS:
+        return type(v) is dict and _VALUE_KEYS[dtype](v)
+    return True
 
 
 def _snaks_ok(snaks) -> bool:
-    """A qualifier or reference snak map: P-id keys, lists of objects."""
+    """A qualifier or reference snak map: P-id keys, lists of snaks."""
     return all(_PID(pid) and type(lst) is list
-               and all(type(sn) is dict for sn in lst)
+               and all(type(sn) is dict and _snak_ok(sn) for sn in lst)
                for pid, lst in snaks.items())
 
 
@@ -286,8 +310,8 @@ def _claims_ok(claims) -> bool:
     """Whether ``claims`` has the shape the digest and the diff read: P-id
     keys mapping to lists of statement objects, each with a string (or
     null) id, an object mainsnak and P-id qualifier and reference snak
-    keys.  Another shape would crash the task that meets it, failing every
-    page in its partition, so the revision is quarantined instead."""
+    keys, and every snak readable.  Another shape would crash the task,
+    failing every page in its partition, so it quarantines the revision."""
     if type(claims) is not dict:
         return False
     for pid, stmts in claims.items():
@@ -298,8 +322,9 @@ def _claims_ok(claims) -> bool:
                 return False
             sid, refs = s.get("id"), s.get("references") or []
             quals = s.get("qualifiers")
+            main = s.get("mainsnak") or {}
             if (sid is not None and type(sid) is not str) \
-                    or type(s.get("mainsnak") or {}) is not dict \
+                    or type(main) is not dict or not _snak_ok(main, True) \
                     or (isinstance(quals, dict) and not _snaks_ok(quals)) \
                     or type(refs) is not list:
                 return False
@@ -357,7 +382,8 @@ def _parse_batches(batches: Iterator[pa.RecordBatch]
         yield pa.RecordBatch.from_pydict(out, schema=_PARSED_ARROW)
 
 
-_NAMESPACE_RES = {"item": r"^Q\d+$", "property": r"^P\d+$"}
+ITEM_PATH = r"^Q\d+$"  # the one definition of an item page's path
+_NAMESPACE_RES = {"item": ITEM_PATH, "property": r"^P\d+$"}
 
 
 def parse_documents(docs: DataFrame, namespace: str = "item") -> DataFrame:

@@ -134,7 +134,8 @@ ENTITY_STATS_SCHEMA = T.StructType([
     T.StructField("num_feature_creations_timed", T.IntegerType()),
 ])
 
-# Per-table primary keys (reference scripts/const.py + sql/change_schema.sql)
+# Per-table keys (reference scripts/const.py + sql/change_schema.sql), unique
+# per (repo, path) page on input that repeats no revision or statement id
 TABLE_PKS = {
     "revision": ["revision_id"],
     "value_change": ["revision_id", "property_id", "value_id", "change_target"],
